@@ -79,12 +79,24 @@ def q_resume_pending(spark: SparkSession, sf_dir: str) -> DataFrame:
             # copy is actually complete. A stale manifest-less done_dir
             # (crashed pre-round-5 run) would otherwise block the rename
             # forever while resume_filter happily reads the stale parquet
-            # — a persistent cross-engine mismatch (round-4 ADVICE).
+            # — a persistent cross-engine mismatch (round-4 ADVICE). The
+            # stale copy is renamed aside, never deleted in place: a
+            # concurrent process may install its complete copy at any
+            # moment, and that copy must survive.
             if not is_complete(done_dir):
-                shutil.rmtree(done_dir, ignore_errors=True)
-                os.rename(tmp_dir, done_dir)  # raise if still blocked
-            else:
-                shutil.rmtree(tmp_dir, ignore_errors=True)
+                stale = f"{done_dir}.stale.{os.getpid()}"
+                try:
+                    os.rename(done_dir, stale)
+                except OSError:
+                    pass  # another process moved or replaced it first
+                shutil.rmtree(stale, ignore_errors=True)
+                try:
+                    os.rename(tmp_dir, done_dir)
+                except OSError:
+                    if not is_complete(done_dir):
+                        raise
+            # ours is redundant when another process's copy won
+            shutil.rmtree(tmp_dir, ignore_errors=True)
     return resume_filter(docs, done_dir, key="doc_id").select(
         "doc_id", "lang", "n_chars"
     )

@@ -7,6 +7,9 @@ top seeds → canonical per cluster → rewrite): count mentions globally
 surface per linked component with a *total deterministic ordering*
 (SURVEY.md §7 hard part 2 — never `first()` without order), then map
 every triple endpoint to its canonical entity id.
+
+`canonical_rows` is the same pick in-process, for the driver-side graph
+phase (`run.build_graph`); both paths share `aggregate_edges`.
 """
 
 from __future__ import annotations
@@ -59,17 +62,34 @@ def surface_to_entity(linked: DataFrame, canon: DataFrame) -> DataFrame:
     )
 
 
+def canonical_rows(linked: list[tuple]) -> tuple[list[tuple], list[tuple]]:
+    """`canonical_entities` + `surface_to_entity` in-process, over
+    (surface, ent_type, n_mentions, component, entity_id) rows, where
+    entity_id = xxhash64(surface, ent_type). Returns node rows in
+    `NODES_SCHEMA` order and (surface, ent_type, entity_id) rows.
+
+    Same total order as the `min_by` struct: strings compare by code
+    point there and here (UTF-8 byte order is code point order)."""
+    best: dict[int, tuple] = {}
+    totals: dict[int, list[int]] = {}
+    for surface, ent_type, n_mentions, component, entity_id in linked:
+        key = (-n_mentions, len(surface), surface, ent_type)
+        if component not in best or key < best[component][0]:
+            best[component] = (key, entity_id, surface, ent_type)
+        t = totals.setdefault(component, [0, 0])
+        t[0] += n_mentions
+        t[1] += 1
+    nodes = [(*best[c][1:], *totals[c]) for c in best]
+    mapping = [(s, e, best[c][1]) for s, e, _n, c, _id in linked]
+    return nodes, mapping
+
+
 def build_nodes_edges(
     triples: DataFrame, linked: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """Materialize the graph: nodes(entity_id, canonical, ent_type,
     n_mentions, n_surfaces) and edges(src_entity_id, pred,
-    dst_entity_id, n_evidence).
-
-    The surface→entity map is broadcast (vocabulary ≪ corpus); the edge
-    count is a salted two-phase groupBy because head entities make
-    (src, pred, dst) keys skewed for the same reason mention counts are.
-    """
+    dst_entity_id, n_evidence)."""
     canon = canonical_entities(linked)
     # persisted: the mapping is broadcast twice (src side and dst side);
     # without the persist each broadcast build would re-run the
@@ -79,7 +99,17 @@ def build_nodes_edges(
     nodes = canon.select(
         "entity_id", "canonical", "ent_type", "n_mentions", "n_surfaces"
     )
+    return nodes, aggregate_edges(triples, mapping)
 
+
+def aggregate_edges(triples: DataFrame, mapping: DataFrame) -> DataFrame:
+    """triples + (surface, ent_type, entity_id) → edges(src_entity_id,
+    pred, dst_entity_id, n_evidence).
+
+    The surface→entity map is broadcast (vocabulary ≪ corpus); the edge
+    count is a salted two-phase groupBy because head entities make
+    (src, pred, dst) keys skewed for the same reason mention counts are.
+    """
     # both endpoint joins broadcast the SAME subplan (`mapping`, renamed
     # only after the join) so Catalyst's ReuseExchange rule dedupes the
     # two BroadcastExchanges into one build job — renaming before the
@@ -108,10 +138,9 @@ def build_nodes_edges(
     salted = resolved.withColumn(
         "salt", F.pmod(F.xxhash64("url", "sent_idx"), F.lit(32))
     )
-    edges = (
+    return (
         salted.groupBy("src_entity_id", "pred", "dst_entity_id", "salt")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .groupBy("src_entity_id", "pred", "dst_entity_id")
         .agg(F.sum("cnt").alias("n_evidence"))
     )
-    return nodes, edges

@@ -9,15 +9,26 @@ pairs, candidate pairs are generated only inside LSH buckets of
 character-shingle MinHash signatures, so the join is an equi-join on
 (ent_type, band, band_hash) that Catalyst shuffles by bucket key.
 
-Everything here is native DataFrame ops — `xxhash64` for hashing,
+The distributed path is native DataFrame ops — `xxhash64` for hashing,
 higher-order array functions for shingling/minhashing, `levenshtein`
 for scoring. No Python UDFs.
+
+The vocabulary stays roughly constant as the corpus grows, so
+`run.build_graph` usually collects it instead (one exact row-count
+gate) and runs `link_collected` in-process: the same blocking keys,
+`MAX_BUCKET` guard, accept rule (`accepts`) and union-find, over the
+Spark-computed bands and tokens, so both paths give identical links.
 """
 
 from __future__ import annotations
 
+from collections import defaultdict
+from typing import Iterable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..kgref.align import levenshtein
 
 N_HASHES = 12
 BAND_SIZE = 2  # 6 bands × 2 rows — tuned for high recall on short strings
@@ -166,6 +177,16 @@ def candidate_pairs(vocab_with_bands: DataFrame) -> DataFrame:
     )
 
 
+MAX_LEV_RATIO = 0.2
+
+
+def tokens(norm: str):
+    """A normalized surface's tokens as `score_pairs` and the token
+    blocking keys split it: a Java regex, so `\\s` is ASCII whitespace
+    only, and a leading separator gives an empty first token."""
+    return F.split(F.col(norm), r"\s+")
+
+
 def score_pairs(pairs: DataFrame) -> DataFrame:
     """Keep alias-like pairs. Two native accept rules:
 
@@ -175,8 +196,8 @@ def score_pairs(pairs: DataFrame) -> DataFrame:
     2. near-duplicate — normalized Levenshtein ≤ 0.2 (typos/variants),
        the analog of its Levenshtein remainder rule (utils.py:1097-1103).
     """
-    toks_a = F.split(F.col("norm_a"), r"\s+")
-    toks_b = F.split(F.col("norm_b"), r"\s+")
+    toks_a = tokens("norm_a")
+    toks_b = tokens("norm_b")
     containment = (
         F.size(F.array_intersect(toks_a, toks_b))
         == F.least(F.size(toks_a), F.size(toks_b))
@@ -184,8 +205,104 @@ def score_pairs(pairs: DataFrame) -> DataFrame:
     lev_ok = (
         F.levenshtein("norm_a", "norm_b")
         / F.greatest(F.length("norm_a"), F.length("norm_b"))
-    ) <= 0.2
+    ) <= MAX_LEV_RATIO
     return pairs.filter(containment | lev_ok).select("src", "dst")
+
+
+def accepts(norm_a: str, norm_b: str, toks_a: list, toks_b: list) -> bool:
+    """`score_pairs`' accept rule in-process, given each side's
+    Spark-computed `tokens`. Lengths are code points on both engines
+    and the ratio is the same double division, so the two agree."""
+    if len(set(toks_a) & set(toks_b)) == min(len(toks_a), len(toks_b)):
+        return True
+    # never 0: two empty norms both split to [""], accepted above
+    longest = max(len(norm_a), len(norm_b))
+    # the edit distance is at least the length difference, so this
+    # rejects exactly the pairs the full distance would reject
+    if abs(len(norm_a) - len(norm_b)) / longest > MAX_LEV_RATIO:
+        return False
+    # a shared prefix and suffix never change the edit distance
+    short = min(len(norm_a), len(norm_b))
+    lo = 0
+    while lo < short and norm_a[lo] == norm_b[lo]:
+        lo += 1
+    hi = 0
+    while hi < short - lo and norm_a[-1 - hi] == norm_b[-1 - hi]:
+        hi += 1
+    distance = levenshtein(norm_a[lo : len(norm_a) - hi], norm_b[lo : len(norm_b) - hi])
+    return distance / longest <= MAX_LEV_RATIO
+
+
+def union_find(edges: Iterable[tuple[int, int]]) -> dict[int, int]:
+    """vertex_id → component (the min vertex_id it reaches) for every
+    vertex whose component is not itself — the fixpoint the distributed
+    label propagation converges to, as remap rows only."""
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        root = x
+        while parent.get(root, root) != root:
+            root = parent[root]
+        while parent.get(x, x) != x:
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # min root wins → component id = min vertex_id
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    # roots never enter `parent`, so its keys are exactly the remapped
+    return {v: find(v) for v in list(parent)}
+
+
+def link_collected(rows: list) -> tuple[dict[int, int], dict[str, int]]:
+    """In-process twin of `candidate_pairs` → `score_pairs` →
+    `connected_components` over collected vocabulary rows (vertex_id,
+    norm, ent_type, bands, toks). Returns the remap (vertex_id →
+    component, non-identity rows only) and the counts: candidate and
+    accepted pairs, and blocking keys dropped by `MAX_BUCKET`.
+
+    Bucket sizes count exploded rows like the window does: a surface
+    listing a token twice counts twice, as does each vocabulary row
+    sharing a vertex_id ("Obama"/"obama"). Keys with a null ent_type
+    count but never pair, as in the equi-join."""
+    vertex = [r.vertex_id for r in rows]
+    norm = [r.norm for r in rows]
+    toks = [r.toks for r in rows]
+    buckets: dict[tuple, list[int]] = defaultdict(list)
+    for i, r in enumerate(rows):
+        for band, bh in r.bands or ():
+            buckets[(r.ent_type, band, bh)].append(i)
+    dropped = 0
+    # (src, dst, norm_a, norm_b) → row indices, as the distinct pair rows
+    pairs: dict[tuple, tuple[int, int]] = {}
+    for (ent_type, _band, _bh), members in buckets.items():
+        if len(members) > MAX_BUCKET:
+            dropped += 1
+            continue
+        if ent_type is None:
+            continue
+        side = list({(vertex[i], norm[i]): i for i in members}.items())
+        for x, ((va, na), ia) in enumerate(side):
+            for (vb, nb), ib in side[x + 1:]:
+                if va < vb:
+                    pairs.setdefault((va, vb, na, nb), (ia, ib))
+                elif vb < va:
+                    pairs.setdefault((vb, va, nb, na), (ib, ia))
+    accepted = [
+        (va, vb)
+        for (va, vb, na, nb), (ia, ib) in pairs.items()
+        if accepts(na, nb, toks[ia], toks[ib])
+    ]
+    remap = union_find(accepted)
+    counts = {
+        "candidate_pairs": len(pairs),
+        "accepted_pairs": len(accepted),
+        "dropped_keys": dropped,
+    }
+    return remap, counts
 
 
 def connected_components(
@@ -194,7 +311,6 @@ def connected_components(
     max_iter: int = 12,
     driver_side_max_edges: int = 2_000_000,
     mapping_only: bool = False,
-    assume_driver_side: bool = False,
 ) -> DataFrame:
     """Bounded label propagation: component = min vertex_id reachable.
 
@@ -238,23 +354,7 @@ def connected_components(
     # stay under the limit (the common case), CollectLimitExec scans
     # partitions in sequential scale-up rounds and is strictly slower
     # than count + collect.
-    #
-    # ``assume_driver_side`` (round-5, VERDICT r4 #7): a caller holding
-    # independent evidence that the edge set is small (link_entities
-    # probes the Catalyst size estimate of the MENTIONS input — the same
-    # gate as the static-plan scope) folds the branch decision into the
-    # collect itself: one job instead of count-then-collect. The hint is
-    # advisory, never trusted for correctness — if the collected rows
-    # exceed driver_side_max_edges after all, they are discarded and the
-    # distributed loop runs exactly as if the hint were absent.
-    edge_rows = None
-    if assume_driver_side:
-        edge_rows = edges.select("src", "dst").collect()
-        n_edges = len(edge_rows)
-        if n_edges > driver_side_max_edges:
-            edge_rows = None  # mis-hint: fall through to the loop
-    else:
-        n_edges = edges.count()
+    n_edges = edges.count()
     if n_edges == 0:
         if mapping_only:
             return F.broadcast(
@@ -262,39 +362,14 @@ def connected_components(
             )
         return vertices.select("vertex_id", F.col("vertex_id").alias("component"))
     if n_edges <= driver_side_max_edges:
-        if edge_rows is None:
-            edge_rows = edges.select("src", "dst").collect()
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
-
-        for row in edge_rows:
-            ra, rb = find(row.src), find(row.dst)
-            if ra != rb:
-                # min root wins → component id = min vertex_id, matching
-                # the distributed loop's fixpoint exactly
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        mapping = [(v, find(v)) for v in list(parent)]
+        mapping = list(
+            union_find(tuple(r) for r in edges.select("src", "dst").collect()).items()
+        )
         if mapping_only:
-            if not mapping:
-                return F.broadcast(
-                    spark.createDataFrame([], "vertex_id long, component long")
-                )
             return F.broadcast(
-                spark.createDataFrame(mapping, ["vertex_id", "component"])
+                spark.createDataFrame(mapping, "vertex_id long, component long")
             )
-        if not mapping:
-            return vertices.select(
-                "vertex_id", F.col("vertex_id").alias("component")
-            )
-        map_df = spark.createDataFrame(mapping, ["vertex_id", "mapped_component"])
+        map_df = spark.createDataFrame(mapping, "vertex_id long, mapped_component long")
         return (
             vertices.join(F.broadcast(map_df), "vertex_id", "left")
             .select(
@@ -358,14 +433,19 @@ def connected_components(
 
 
 def link_entities(mentions: DataFrame) -> DataFrame:
-    """mentions → (surface, ent_type, n_mentions, vertex_id, component).
+    """mentions → (vertex_id, surface, ent_type, n_mentions, norm,
+    component).
 
     The vocabulary is persisted: it feeds banding, both sides of the
     candidate self-join, the component join, and canonicalization —
     without the persist each consumer would re-run the salted two-phase
     aggregation over the full mentions table.
     """
-    vocab = surface_vocab(mentions).persist()
+    return link_vocab(surface_vocab(mentions).persist())
+
+
+def link_vocab(vocab: DataFrame) -> DataFrame:
+    """The distributed linking of a persisted `surface_vocab`."""
     banded = add_minhash_bands(vocab)
     # pairs feed both the edge count and the collect/propagation inside
     # connected_components — persist so the LSH self-join runs once
@@ -373,17 +453,10 @@ def link_entities(mentions: DataFrame) -> DataFrame:
     # mapping_only: the left join + coalesce below completes partial
     # remap rows to the identity labeling, so on the driver-side CC
     # branch the vertices plan (a distinct over vocab) never executes.
-    # small-regime hint: when the MENTIONS input is provably small
-    # (same Catalyst gate as the static-plan scope) the alias-pair set
-    # is a fortiori driver-sized, so CC folds its branch-decision count
-    # into the collect (one materializing job over the persisted pairs)
-    from .plansize import is_small_plan
-
     components = connected_components(
         vocab.select("vertex_id").distinct(),
         pairs,
         mapping_only=True,
-        assume_driver_side=is_small_plan(mentions),
     )
     return vocab.join(components, "vertex_id", "left").withColumn(
         "component", F.coalesce("component", "vertex_id")

@@ -1,8 +1,5 @@
-"""Catalyst plan-size probe shared by the small-regime fast paths.
-
-Both the static-plan scope (run.py) and the link stage's driver-side
-connected-components hint (linking.py) gate on the same question — "is
-this input provably small?" — answered from the optimizer's sizeInBytes
+"""Catalyst plan-size probe for the static-plan scope (run.py): "is
+this input provably small?", answered from the optimizer's sizeInBytes
 estimate, conservatively huge when stats are unavailable.
 """
 
@@ -20,7 +17,3 @@ def plan_size_bytes(df: DataFrame) -> int:
         return int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     except Exception:  # noqa: BLE001 — any py4j hiccup → assume big
         return 1 << 62
-
-
-def is_small_plan(df: DataFrame, max_bytes: int = STATIC_PLAN_MAX_BYTES) -> bool:
-    return plan_size_bytes(df) <= max_bytes

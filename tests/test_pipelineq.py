@@ -38,7 +38,7 @@ def test_resume_pending_recovers_from_stale_done_dir(spark, tmp_path, monkeypatc
     """A crashed earlier run can leave a manifest-less done_dir. The
     rename then fails forever while resume_filter reads the stale
     parquet (round-4 ADVICE). The writer must detect the incomplete
-    winner, remove it, and install its own complete copy."""
+    winner, move it aside, and install its own complete copy."""
     import os
 
     import ontonotes_5_parsing_spark.operators.pipelineq as pq
@@ -56,6 +56,8 @@ def test_resume_pending_recovers_from_stale_done_dir(spark, tmp_path, monkeypatc
     done = spark.read.parquet(str(stale)).select("doc_id")
     assert is_complete(str(stale))  # recovered: complete copy installed
     assert not os.path.exists(str(stale) + f".tmp.{os.getpid()}")
+    # the stale copy was renamed aside, then removed
+    assert not os.path.exists(str(stale) + f".stale.{os.getpid()}")
     assert pending.count() + done.count() == docs.count()
     assert pending.join(done, "doc_id").count() == 0
 

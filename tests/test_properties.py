@@ -153,3 +153,37 @@ def test_split_sentences_partition(sents):
     text = " ".join(sents)
     out = split_sentences(text)
     assert "".join(out).replace(" ", "") == text.replace(" ", "")
+
+
+# Java's regex \s is ASCII whitespace only (no NBSP, no em space), and
+# a leading separator yields an empty first token: all must agree.
+norms = st.lists(
+    st.sampled_from(["a", "b", "ab", "\u00e9", "\u65e5", " ", "\t", "\n", "\u00a0",
+                     "\u2003", "\x0b", "\x0c", "\r", "\U0001d538"]),
+    max_size=10,
+).map("".join)
+
+
+@given(st.lists(st.tuples(norms, norms), min_size=1, max_size=12))
+@settings(max_examples=200, deadline=None)
+def test_inprocess_accept_rule_matches_score_pairs(spark, pairs):
+    """linking.accepts on Spark-computed tokens keeps exactly the pairs
+    the Spark score_pairs filter keeps. Each example's pairs are one
+    local DataFrame, so both sides run without a Spark job."""
+    import pyarrow as pa
+
+    from ontonotes_5_parsing_spark.pipeline.linking import accepts, score_pairs, tokens
+
+    table = pa.table({
+        "src": list(range(len(pairs))),
+        "dst": list(range(len(pairs))),
+        "norm_a": [a for a, _ in pairs],
+        "norm_b": [b for _, b in pairs],
+    })
+    df = spark.createDataFrame(
+        table, "src long, dst long, norm_a string, norm_b string"
+    )
+    kept = {r.src for r in score_pairs(df).collect()}
+    split = df.select("src", "norm_a", "norm_b", tokens("norm_a").alias("ta"),
+                      tokens("norm_b").alias("tb")).collect()
+    assert {r.src for r in split if accepts(r.norm_a, r.norm_b, r.ta, r.tb)} == kept

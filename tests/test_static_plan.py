@@ -37,6 +37,54 @@ def test_static_plan_restores_on_error(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
+def test_static_plan_failing_conf_set_leaves_aqe_as_it_was(spark, monkeypatch):
+    """A conf.set that raises inside the scope's set-up (after AQE was
+    already switched off) must still restore both settings."""
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    parts = spark.conf.get("spark.sql.shuffle.partitions")
+    conf = spark.conf
+    real_set = conf.set
+    failed = []
+
+    def flaky_set(key, value):
+        if key == "spark.sql.shuffle.partitions" and not failed:
+            failed.append(key)
+            raise RuntimeError("conf.set failed")
+        real_set(key, value)
+
+    monkeypatch.setattr(conf, "set", flaky_set)
+    with pytest.raises(RuntimeError, match="conf.set failed"):
+        with _static_plan_if_small(spark, spark.range(10)):
+            pass
+    monkeypatch.undo()
+    assert failed
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
+    # the depth counter unwound too: the next scope toggles again
+    with _static_plan_if_small(spark, spark.range(10)):
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+
+
+def test_static_plan_unparsable_partitions_changes_nothing(spark, monkeypatch):
+    """The partition count is parsed before the first conf.set, so a
+    value int() rejects raises with the session untouched."""
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    conf = spark.conf
+    real_get = conf.get
+
+    def get(key, *default):
+        if key == "spark.sql.shuffle.partitions":
+            return "auto"
+        return real_get(key, *default)
+
+    monkeypatch.setattr(conf, "get", get)
+    with pytest.raises(ValueError):
+        with _static_plan_if_small(spark, spark.range(10)):
+            pass
+    monkeypatch.undo()
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+
 def test_static_plan_noop_when_probe_is_large(spark, monkeypatch):
     import ontonotes_5_parsing_spark.pipeline.run as run
 
@@ -144,7 +192,10 @@ def test_mapping_only_no_edges(spark):
 def test_build_graph_identical_with_gate_forced_noop(spark, monkeypatch):
     """The untested half of the static-plan gate (round-4 VERDICT #3):
     above the size threshold the scope must no-op — AQE stays ON — and
-    the graph phase must produce IDENTICAL nodes/edges either way.
+    the graph phase must produce IDENTICAL linked/nodes/edges either
+    way. The second run also forces the vocabulary gate to 0, so this
+    compares the driver branch of the graph phase with the distributed
+    one on the sf0.001 pages.
     Forcing the gate low on a real corpus exercises exactly the plan the
     5M+-page deployment would run."""
     import ontonotes_5_parsing_spark.pipeline.run as run
@@ -156,52 +207,22 @@ def test_build_graph_identical_with_gate_forced_noop(spark, monkeypatch):
         pages = web_pages_from_documents(spark, sf)
         out = run.build_extraction(pages)
         g = run.build_graph(out["mentions"], out["triples"])
-        nodes = {tuple(r) for r in g["nodes"].collect()}
-        edges = {tuple(r) for r in g["edges"].collect()}
-        return nodes, edges
+        return {
+            k: (g[k].columns, sorted(map(tuple, g[k].collect())))
+            for k in ("linked", "nodes", "edges")
+        }
 
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     with_scope = graph_outputs()
     monkeypatch.setattr(run, "_plan_size_bytes", lambda _df: 1 << 62)
-    # also defeat the link stage's driver-side hint, which probes the
-    # same gate (is_small_plan calls plansize.plan_size_bytes) — the
-    # no-op regime must hold end to end
-    import ontonotes_5_parsing_spark.pipeline.plansize as plansize
-
-    monkeypatch.setattr(plansize, "plan_size_bytes", lambda _df: 1 << 62)
+    # also force the vocabulary gate to the distributed branch — the
+    # large-input regime must hold end to end
+    monkeypatch.setattr(run, "DRIVER_GRAPH_MAX_ROWS", 0)
     spark.catalog.clearCache()
     without_scope = graph_outputs()
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert with_scope == without_scope
-    assert len(without_scope[0]) > 0 and len(without_scope[1]) > 0
-
-
-def test_assume_driver_side_hint_same_result_and_mis_hint_falls_back(spark):
-    """The small-regime hint folds count+collect into one job; a wrong
-    hint (edges actually above the driver cap) must fall back to the
-    distributed loop with identical results."""
-    vertices = spark.createDataFrame([(i,) for i in range(1, 7)], ["vertex_id"])
-    edges = spark.createDataFrame([(1, 2), (2, 3), (4, 5)], ["src", "dst"])
-    expect = {(1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (6, 6)}
-
-    def complete(cc):
-        return {
-            (r.vertex_id, r.component)
-            for r in vertices.join(cc, "vertex_id", "left")
-            .withColumn("component", F.coalesce("component", "vertex_id"))
-            .collect()
-        }
-
-    hinted = connected_components(
-        vertices, edges, mapping_only=True, assume_driver_side=True
-    )
-    assert complete(hinted) == expect
-    # mis-hint: cap of 1 edge forces the distributed fallback
-    mis = connected_components(
-        vertices, edges, mapping_only=True,
-        assume_driver_side=True, driver_side_max_edges=1,
-    )
-    assert complete(mis) == expect
+    assert all(len(rows) > 0 for _cols, rows in without_scope.values())
 
 
 def test_nodes_edges_broadcast_exchange_is_reused(spark):

@@ -74,7 +74,13 @@ def spark_run(pages_parquet: str, cores: int, repeat: int) -> dict:
     proc = subprocess.run(
         cmd, capture_output=True, text=True, cwd=REPO, env=env, timeout=2400
     )
-    return json.loads(proc.stdout.strip().splitlines()[-1])
+    lines = proc.stdout.strip().splitlines()
+    if proc.returncode != 0 or not lines:
+        tail = "\n".join(proc.stderr.strip().splitlines()[-20:])
+        raise RuntimeError(
+            f"spark-submit exited {proc.returncode}; stderr tail:\n{tail}"
+        )
+    return json.loads(lines[-1])
 
 
 def main() -> int:
