@@ -3,9 +3,11 @@
     spark-submit --py-files <zip> ontonotes_5_parsing_spark/job.py \
         --n-pages 10000 --work-dir /data/kg_run --master local[32]
 
-Runs web_pages → extract → parse → mentions → triples → linking →
-canonicalize → nodes/edges with per-stage lineage manifests; a re-run
-with the same --work-dir resumes completed stages (BASELINE.json:14).
+Runs web_pages → sentences (fused extract/parse/NER/coref/triples) →
+mentions, triples → linking → canonicalize → nodes/edges. With
+--work-dir every stage is materialized with a lineage manifest and a
+re-run resumes completed stages (BASELINE.json:14); the counts are the
+same either way.
 Prints a one-line JSON summary with stage row counts and throughput.
 """
 

@@ -1,16 +1,17 @@
 """pipeline — distributed Spark stages of the KG-construction DAG.
 
-    web_pages → extract (pandas UDF) → parse (mapInPandas)
-    → mentions → triples (window functions, JVM-side)
+    web_pages → sentences (one fused extract/parse/NER/coref/triple
+    mapInPandas pass) → mentions, triples (explodes, JVM-side)
     → linking (MinHash/LSH blocking + label-propagation components)
     → canonicalize (salted two-phase groupBy) → nodes/edges.
 
-Exactly two Python stages touch row data (extract, parse) and both are
-Arrow-vectorized; everything downstream is native DataFrame ops
-(BASELINE.json:15 "no per-row Python anywhere on the hot path").
+Exactly one Python stage touches row data and it is Arrow-vectorized;
+everything downstream is native DataFrame ops (BASELINE.json:15 "no
+per-row Python anywhere on the hot path"), except that a small surface
+vocabulary is collected and linked in-process (`run.build_graph`).
 """
 
-from .stages import extract_stage, parse_stage, mentions_stage, triples_stage
+from .stages import extract_parse_stage, mentions_from_parsed, triples_from_parsed
 from .linking import link_entities
 from .canonicalize import canonical_entities, build_nodes_edges
 from .run import run_pipeline

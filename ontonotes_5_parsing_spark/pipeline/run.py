@@ -2,8 +2,10 @@
 
 Two phases with distinct execution characters:
 
-- `build_extraction`: pages → sentences → mentions → triples. Fully
-  lazy, shuffle-free after the two Arrow UDF stages.
+- `build_extraction`: pages → sentences → mentions → triples. One fused
+  Arrow UDF stage, then shuffle-free explodes; each output is kept
+  (persisted, or materialized in checkpointed mode) because it fans out
+  to several consumers.
 - `build_graph`: mentions/triples → linked → nodes/edges. Eager. The
   graph phase works on the surface vocabulary, which stays roughly
   constant as the corpus grows, so one exact gate — the row count of
@@ -15,7 +17,8 @@ Two phases with distinct execution characters:
   linked/nodes/edges. One structured log line per call records the
   branch and its counts.
 
-`run_pipeline` composes both; checkpointed mode (`work_dir` set)
+`run_pipeline` composes both. Every run mode runs this one stage graph;
+checkpointed mode (`work_dir` set) only changes how a stage is kept: it
 materializes each stage with a lineage manifest and resumes completed
 stages on re-run (BASELINE.json:14).
 """
@@ -26,6 +29,7 @@ import json
 import logging
 import threading
 from contextlib import contextmanager
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -33,47 +37,37 @@ from pyspark.sql import types as T
 
 from . import lineage
 from .canonicalize import aggregate_edges, build_nodes_edges, canonical_rows
-from .linking import (
-    add_minhash_bands,
-    link_collected,
-    link_entities,
-    link_vocab,
-    surface_vocab,
-    tokens,
-)
+from .linking import add_minhash_bands, link_collected, link_vocab, surface_vocab, tokens
 from .schemas import NODES_SCHEMA
 from .stages import (
     annotations_stage,
     extract_parse_stage,
-    extract_stage,
     mentions_from_parsed,
-    mentions_stage,
-    parse_stage,
     triples_from_parsed,
-    triples_stage,
 )
 
 
-def build_extraction(pages: DataFrame) -> dict[str, DataFrame]:
-    """pages → extracted/sentences/mentions/triples (lazy).
+def _persist(name: str, df: DataFrame) -> DataFrame:
+    return df.persist()
+
+
+def build_extraction(
+    pages: DataFrame, keep: Callable[[str, DataFrame], DataFrame] = _persist
+) -> dict[str, DataFrame]:
+    """pages → sentences/mentions/triples (lazy).
 
     Uses the fused extract+parse+annotate stage (one Arrow roundtrip);
-    mentions/triples are pure explodes. sentences and mentions fan out
-    to multiple consumers: persisted so the Python chain runs once.
+    mentions/triples are pure explodes. Each has several consumers
+    (sentences feeds both explodes; mentions and triples feed the stage
+    counts and `build_graph`), so each goes through `keep(name, df)`,
+    which returns the frame downstream builds on: persisted by default,
+    so the Python chain runs once; `run_pipeline`'s checkpointed mode
+    passes a step that materializes (or resumes) the stage instead.
     """
-    sentences = extract_parse_stage(pages, lean=True, coref=True).persist()
-    mentions = mentions_from_parsed(sentences).persist()
-    # triples also has two consumers (the stage count/sink and the edge
-    # aggregation in build_graph) — persisted so the explode from cached
-    # sentences runs once; the checkpointed work_dir path materializes
-    # to parquet instead and never reaches this builder's persist
-    triples = triples_from_parsed(sentences).persist()
-    return {
-        "extracted": extract_stage(pages),
-        "sentences": sentences,
-        "mentions": mentions,
-        "triples": triples,
-    }
+    sentences = keep("sentences", extract_parse_stage(pages))
+    mentions = keep("mentions", mentions_from_parsed(sentences))
+    triples = keep("triples", triples_from_parsed(sentences))
+    return {"sentences": sentences, "mentions": mentions, "triples": triples}
 
 
 # shared probe (pipeline/plansize.py); legacy names kept for tests/tools
@@ -90,11 +84,11 @@ _STATIC_PLAN_SHUFFLE_PARTITIONS = 8
 
 
 # The static-plan scope flips a *session-global* conf, so concurrent
-# scopes on one session must serialize: an RLock (same thread may nest —
-# run_pipeline's checkpointed path wraps multiple stage builders) plus a
-# depth counter so only the outermost scope toggles/restores. A thread
-# that merely *plans a query* during another thread's scope still sees
-# AQE off — that is the documented single-controller contract; the lock
+# scopes on one session must serialize: an RLock (no pipeline path
+# nests scopes, but a caller may wrap `build_graph`, which opens its
+# own, in another) plus a depth counter so only the outermost scope
+# toggles/restores. A thread that merely *plans a query* during another
+# thread's scope still sees AQE off — that is the documented single-controller contract; the lock
 # guarantees the stronger invariant that scopes themselves can never
 # interleave and leave AQE permanently off (round-4 ADVICE / VERDICT #6).
 _aqe_scope_lock = threading.RLock()
@@ -241,48 +235,47 @@ def run_pipeline(
     work_dir: str | None = None,
     resume: bool = True,
 ) -> dict[str, DataFrame]:
-    """Run the full KG-construction DAG; returns all stage DataFrames."""
-    spark = pages.sparkSession
+    """Run the full KG-construction DAG; returns all stage DataFrames.
 
+    With `work_dir`, every stage is materialized under
+    ``{work_dir}/{stage}`` with a lineage manifest, and with `resume` a
+    stage whose manifest exists is loaded instead of rebuilt — as long
+    as every stage before it was loaded too, since a rebuilt input
+    invalidates what was derived from it. linked/nodes/edges come from
+    one `build_graph` pass, so they resume all together or not at all.
+    """
     if work_dir is None:
         out = build_extraction(pages)
         out.update(build_graph(out["mentions"], out["triples"]))
-        out["annotations"] = annotations_stage(out["sentences"], out["mentions"])
-        return out
+    else:
+        out = _build_checkpointed(pages, work_dir, resume)
+    out["annotations"] = annotations_stage(out["sentences"], out["mentions"])
+    return out
 
-    def stage(name: str, build, partition_by=None) -> DataFrame:
+
+def _build_checkpointed(pages: DataFrame, work_dir: str, resume: bool) -> dict[str, DataFrame]:
+    spark = pages.sparkSession
+
+    def keep(name: str, df: DataFrame, partition_by: list[str] | None = None) -> DataFrame:
+        nonlocal resume
         stage_dir = f"{work_dir}/{name}"
-        if resume and lineage.is_complete(stage_dir):
+        resume = resume and lineage.is_complete(stage_dir)
+        if resume:
             return lineage.load_stage(spark, stage_dir)
-        return lineage.materialize(build(), stage_dir, name, partition_by)
+        return lineage.materialize(df, stage_dir, name, partition_by)
 
-    extracted = stage("extracted", lambda: extract_stage(pages))
-    sentences = stage("sentences", lambda: parse_stage(extracted))
-    mentions = stage("mentions", lambda: mentions_stage(sentences))
-    triples = stage("triples", lambda: triples_stage(sentences, mentions))
-    with _static_plan_if_small(spark, mentions):
-        linked = stage("linked", lambda: link_entities(mentions))
-        nodes_edges: dict[str, DataFrame] = {}
-
-        def build_nodes() -> DataFrame:
-            n, e = build_nodes_edges(triples, linked)
-            nodes_edges["edges_df"] = e
-            return n
-
-        nodes = stage("nodes", build_nodes, partition_by=["ent_type"])
-        edges = stage(
-            "edges",
-            lambda: nodes_edges.get(
-                "edges_df", build_nodes_edges(triples, linked)[1]
-            ),
-        )
-    return {
-        "extracted": extracted,
-        "sentences": sentences,
-        "mentions": mentions,
-        "triples": triples,
-        "annotations": annotations_stage(sentences, mentions),
-        "linked": linked,
-        "nodes": nodes,
-        "edges": edges,
-    }
+    out = build_extraction(pages, keep)
+    graph_stages = ("linked", "nodes", "edges")
+    if resume and all(lineage.is_complete(f"{work_dir}/{n}") for n in graph_stages):
+        graph = {n: lineage.load_stage(spark, f"{work_dir}/{n}") for n in graph_stages}
+    else:
+        resume = False
+        built = build_graph(out["mentions"], out["triples"])
+        graph = {n: keep(n, built[n], ["ent_type"] if n == "nodes" else None) for n in graph_stages}
+        # downstream reads the materialized copies; drop build_graph's caches
+        for df in built.values():
+            df.unpersist()
+    # partitionBy moves ent_type to the last column of the re-read nodes
+    graph["nodes"] = graph["nodes"].select(*NODES_SCHEMA.fieldNames())
+    out.update(graph)
+    return out

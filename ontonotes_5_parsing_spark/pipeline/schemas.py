@@ -24,20 +24,6 @@ SPAN = T.StructType(
     ]
 )
 
-# one row per sentence; token-level arrays kept columnar (struct-of-arrays)
-SENTENCES_SCHEMA = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("sent_idx", T.IntegerType(), False),
-        T.StructField("text", T.StringType(), False),
-        T.StructField("lang", T.StringType(), True),
-        T.StructField("tokens", T.ArrayType(T.StringType()), False),
-        T.StructField("starts", T.ArrayType(T.LongType()), False),
-        T.StructField("ends", T.ArrayType(T.LongType()), False),
-        T.StructField("bio", T.ArrayType(T.StringType()), False),
-    ]
-)
-
 MENTION_SPAN = T.StructType(
     [
         T.StructField("start", T.LongType(), False),
@@ -58,20 +44,12 @@ TRIPLE_ITEM = T.StructType(
     ]
 )
 
-# full parse output: sentences plus pre-computed mention spans and
-# triples (arrays per sentence, exploded relationally downstream)
-PARSED_SENTENCES_SCHEMA = T.StructType(
-    list(SENTENCES_SCHEMA.fields)
-    + [
-        T.StructField("mention_spans", T.ArrayType(MENTION_SPAN), False),
-        T.StructField("triple_items", T.ArrayType(TRIPLE_ITEM), False),
-    ]
-)
-
-# hot-path output: token arrays dropped — they are ~60% of the Arrow
-# bytes and nothing downstream of the fused stage reads them (a Python
-# UDF must materialize every declared column, so pruning has to happen
-# in the schema, not in Catalyst)
+# the sentences stage: one row per sentence with its pre-computed
+# mention spans and triples (arrays, exploded relationally downstream).
+# Token arrays are not declared — they would be ~60% of the Arrow bytes
+# and nothing downstream reads them (a Python UDF must materialize every
+# declared column, so pruning has to happen in the schema, not in
+# Catalyst)
 LEAN_PARSED_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),

@@ -1,10 +1,12 @@
-"""Core pipeline stages: extract → parse → mentions → triples.
+"""Core pipeline stages: pages → sentences → mentions → triples.
 
-Python touches rows exactly twice (extract, parse), both Arrow-batched;
-mention reconstruction (the reference's BIO→span run-length scan, W1 at
-/root/reference/ontonotes5/utils.py:738-768) and triple pattern matching
-run entirely JVM-side via window functions, so they stay inside
-whole-stage codegen and scale with the cluster.
+Python touches rows once: `extract_parse_stage` runs text extraction,
+sentence splitting, tokenization, NER, the BIO→span scan (the
+reference's W1 run-length scan, ontonotes5/utils.py:738-768),
+document-level coreference and the (M, P, M) triple scan in one
+Arrow-batched pass over whole pages, with the same `kgref` kernels the
+single-process reference uses. Mentions and triples are then pure
+explodes of the per-sentence arrays, inside whole-stage codegen.
 """
 
 from __future__ import annotations
@@ -12,74 +14,12 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..kgref.extract import extract_text, split_sentences
-from ..kgref.lexicon import PREDICATE_VERBS
 from ..kgref.ner import tag_bio
-from ..kgref.tokenize import tokenize_with_bounds
-from .schemas import SENTENCES_SCHEMA
-
-
-# --------------------------------------------------------------------------
-# stage 1: extract_text — the byte-identity invariant stage
-# --------------------------------------------------------------------------
-@F.pandas_udf(T.StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    # imports kgref.extract.extract_text → distributed == single-process
-    return html.map(extract_text)
-
-
-def extract_stage(pages: DataFrame) -> DataFrame:
-    """web_pages(url, warc_ts, html, lang) → (url, warc_ts, lang, text).
-
-    Recomputes `text` from `html` (never trusts a pre-extracted column),
-    mirroring the reference's re-parse-from-archive behavior
-    (/root/reference/ontonotes5_to_json.py:97-104).
-    """
-    return pages.select(
-        "url",
-        "warc_ts",
-        "lang",
-        extract_text_udf(F.col("html")).alias("text"),
-    )
-
-
-# --------------------------------------------------------------------------
-# stage 2: parse_document — the UDTF-shaped stage (1 page → N sentences)
-# --------------------------------------------------------------------------
-def _parse_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k: [] for k in ("url", "sent_idx", "text", "lang", "tokens", "starts", "ends", "bio")}
-        for url, lang, text in zip(pdf["url"], pdf["lang"], pdf["text"]):
-            if not text:
-                continue
-            for sent_idx, sent in enumerate(split_sentences(text)):
-                tokens, bounds = tokenize_with_bounds(sent)
-                if not tokens:
-                    continue
-                bio = tag_bio(tokens)
-                out["url"].append(url)
-                out["sent_idx"].append(sent_idx)
-                out["text"].append(sent)
-                out["lang"].append(lang)
-                out["tokens"].append(tokens)
-                out["starts"].append([b[0] for b in bounds])
-                out["ends"].append([b[1] for b in bounds])
-                out["bio"].append(bio)
-        yield pd.DataFrame(out)
-
-
-def parse_stage(extracted: DataFrame) -> DataFrame:
-    """(url, lang, text) → sentences table (one row per sentence, token
-    arrays columnar). mapInPandas keeps Arrow batching across the 1→N
-    row explosion (SURVEY.md §2.10: `parse_document`).
-    """
-    return extracted.select("url", "lang", "text").mapInPandas(
-        _parse_batches, schema=SENTENCES_SCHEMA
-    )
+from .schemas import LEAN_PARSED_SCHEMA
 
 
 # NOTE on sentence-level memoization: a per-worker {sentence →
@@ -102,20 +42,11 @@ def _annotate(sent: str):
     return tokens, bounds, bio, spans
 
 
-def _extract_parse_batches_impl(
-    batches: Iterator[pd.DataFrame], lean: bool, coref: bool = False
-) -> Iterator[pd.DataFrame]:
+def _extract_parse_batches_impl(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     from ..kgref.coref import CorefState, extract_triples_with_coref
-    from ..kgref.triples import triples_from_annotation
 
-    if lean:
-        cols = ("url", "warc_ts", "sent_idx", "text", "lang", "n_tokens",
-                "mention_spans", "triple_items")
-    else:
-        cols = ("url", "sent_idx", "text", "lang", "tokens", "starts",
-                "ends", "bio", "mention_spans", "triple_items")
     for pdf in batches:
-        out = {k: [] for k in cols}
+        out = {f.name: [] for f in LEAN_PARSED_SCHEMA.fields}
         ts_col = pdf["warc_ts"] if "warc_ts" in pdf.columns else [None] * len(pdf)
         for url, lang, html, warc_ts in zip(pdf["url"], pdf["lang"], pdf["html"], ts_col):
             text = extract_text(html)
@@ -127,26 +58,15 @@ def _extract_parse_batches_impl(
                 if annot is None:
                     continue
                 tokens, bounds, bio, spans = annot
-                if coref:
-                    triples = extract_triples_with_coref(
-                        sent, tokens, bounds, bio, state, mention_spans=spans
-                    )
-                else:
-                    triples = triples_from_annotation(
-                        sent, tokens, bounds, bio, mention_spans=spans
-                    )
+                triples = extract_triples_with_coref(
+                    sent, tokens, bounds, bio, state, mention_spans=spans
+                )
                 out["url"].append(url)
+                out["warc_ts"].append(warc_ts)
                 out["sent_idx"].append(sent_idx)
                 out["text"].append(sent)
                 out["lang"].append(lang)
-                if lean:
-                    out["warc_ts"].append(warc_ts)
-                    out["n_tokens"].append(len(tokens))
-                else:
-                    out["tokens"].append(tokens)
-                    out["starts"].append([b[0] for b in bounds])
-                    out["ends"].append([b[1] for b in bounds])
-                    out["bio"].append(bio)
+                out["n_tokens"].append(len(tokens))
                 out["mention_spans"].append(
                     [{"start": s, "end": e, "ent_type": t} for s, e, t in spans]
                 )
@@ -167,37 +87,25 @@ def _extract_parse_batches_impl(
         yield pd.DataFrame(out)
 
 
-def extract_parse_stage(
-    pages: DataFrame, lean: bool = False, coref: bool = False
-) -> DataFrame:
-    """Fused extract+parse+annotate: html → fully-annotated sentences in
-    ONE Arrow roundtrip. With ``lean=True`` the token arrays are not
-    shipped (hot path; LEAN_PARSED_SCHEMA). With ``coref=True``,
-    document-level pronoun coreference chains merge into triple
-    extraction (kgref.coref — the whole page is in hand here, so the
-    per-document sequential state costs nothing extra).
+def extract_parse_stage(pages: DataFrame) -> DataFrame:
+    """Fused extract+parse+annotate: html → fully-annotated sentences
+    (LEAN_PARSED_SCHEMA) in ONE Arrow roundtrip. Document-level pronoun
+    coreference chains merge into triple extraction (kgref.coref — the
+    whole page is in hand here, so the per-document sequential state
+    costs nothing extra).
 
-    extract_stage + parse_stage chain two separate Python evals with a
-    JVM↔Python Arrow hop between them; and the BIO→span / triple scans
-    are per-sentence sequential logic that higher-order JVM folds run
-    *interpreted* (no whole-stage codegen for lambda functions) — doing
-    them here, where the token arrays are already in hand, is both
-    faster and byte-identical by construction (same kgref kernels).
-    Downstream, mentions/triples are pure explodes (codegen'd).
-    extract_stage / mentions_stage / triples_stage remain the standalone
-    relational formulations for the checkpointed path, the operator
-    surface, and the parity suite.
+    The BIO→span and triple scans are per-sentence sequential logic
+    that higher-order JVM folds would run *interpreted* (no whole-stage
+    codegen for lambda functions); doing them here, where the tokens are
+    already in hand, is both faster and identical by construction (same
+    kgref kernels). Token arrays are not shipped: nothing downstream
+    reads them.
     """
-    from functools import partial
-
-    from .schemas import LEAN_PARSED_SCHEMA, PARSED_SENTENCES_SCHEMA
-
     in_cols = ["url", "lang", "html"]
-    if lean and "warc_ts" in pages.columns:
+    if "warc_ts" in pages.columns:
         in_cols.append("warc_ts")  # event-time passthrough for streaming
     return pages.select(*in_cols).mapInPandas(
-        partial(_extract_parse_batches_impl, lean=lean, coref=coref),
-        schema=LEAN_PARSED_SCHEMA if lean else PARSED_SENTENCES_SCHEMA,
+        _extract_parse_batches_impl, schema=LEAN_PARSED_SCHEMA
     )
 
 
@@ -222,263 +130,6 @@ def triples_from_parsed(parsed: DataFrame) -> DataFrame:
     return parsed.select(
         "url", "sent_idx", F.explode("triple_items").alias("t")
     ).select("url", "sent_idx", "t.*")
-
-
-# --------------------------------------------------------------------------
-# stage 3: mentions — BIO→span run-length scan, two implementations
-#
-# (a) mentions_stage (the pipeline hot path): a per-row higher-order
-#     `aggregate` fold over the sentence's token arrays — ZERO shuffle,
-#     pure JVM. At 10^12 documents this stage is embarrassingly parallel
-#     and stays fused with the parse scan.
-# (b) mentions_stage_window: the window-function formulation (running
-#     chain-id sum + groupBy), kept as the relational showcase of W1 —
-#     it shuffles by (url, sent_idx) and is the right shape when token
-#     rows already live in a long-form table.
-# --------------------------------------------------------------------------
-_MENTION_FOLD = """
-aggregate(
-  arrays_zip(bio, starts, ends),
-  named_struct(
-    'spans', cast(array() as array<struct<start:bigint,end:bigint,ent_type:string>>),
-    'cs', cast(-1 as bigint), 'ce', cast(-1 as bigint), 'ct', cast(null as string)),
-  (acc, x) -> case
-    when x.bio like 'B-%' then named_struct(
-      'spans', if(acc.cs >= 0,
-                  array_append(acc.spans,
-                    named_struct('start', acc.cs, 'end', acc.ce, 'ent_type', acc.ct)),
-                  acc.spans),
-      'cs', x.starts, 'ce', x.ends, 'ct', substring(x.bio, 3))
-    when x.bio like 'I-%' and acc.cs >= 0 and acc.ct = substring(x.bio, 3)
-      then named_struct('spans', acc.spans, 'cs', acc.cs, 'ce', x.ends, 'ct', acc.ct)
-    else named_struct(
-      'spans', if(acc.cs >= 0,
-                  array_append(acc.spans,
-                    named_struct('start', acc.cs, 'end', acc.ce, 'ent_type', acc.ct)),
-                  acc.spans),
-      'cs', cast(-1 as bigint), 'ce', cast(-1 as bigint), 'ct', cast(null as string))
-  end,
-  acc -> if(acc.cs >= 0,
-            array_append(acc.spans,
-              named_struct('start', acc.cs, 'end', acc.ce, 'ent_type', acc.ct)),
-            acc.spans)
-)
-"""
-
-
-def sentences_with_mention_spans(sentences: DataFrame) -> DataFrame:
-    """sentences + `mention_spans` array column (per-row fold, no shuffle)."""
-    return sentences.withColumn("mention_spans", F.expr(_MENTION_FOLD))
-
-
-def mentions_stage(sentences: DataFrame) -> DataFrame:
-    """Reconstruct entity mentions from BIO tags — shuffle-free.
-
-    Same semantics as the reference's sequential scan (utils.py:738-768)
-    and kgref.ner.bio_to_spans, expressed as a higher-order `aggregate`
-    fold per sentence row, then exploded.
-    """
-    spanned = sentences_with_mention_spans(sentences)
-    return spanned.select(
-        "url",
-        "sent_idx",
-        F.explode("mention_spans").alias("m"),
-        "text",
-    ).select(
-        "url",
-        "sent_idx",
-        F.col("m.start").alias("start"),
-        F.col("m.end").alias("end"),
-        F.expr(
-            "substring(text, cast(m.start + 1 as int), cast(m.end - m.start as int))"
-        ).alias("surface"),
-        F.col("m.ent_type").alias("ent_type"),
-    )
-
-
-# --------------------------------------------------------------------------
-# window-function formulation of W1 (relational showcase / long-form path)
-# --------------------------------------------------------------------------
-def tokens_long(sentences: DataFrame) -> DataFrame:
-    """Explode the columnar token arrays into a long-form tokens table."""
-    z = F.arrays_zip("tokens", "starts", "ends", "bio")
-    return sentences.select(
-        "url",
-        "sent_idx",
-        "text",
-        F.posexplode(z).alias("tok_idx", "t"),
-    ).select(
-        "url",
-        "sent_idx",
-        "text",
-        "tok_idx",
-        F.col("t.tokens").alias("token"),
-        F.col("t.starts").alias("start"),
-        F.col("t.ends").alias("end"),
-        F.col("t.bio").alias("bio"),
-    )
-
-
-def mentions_stage_window(sentences: DataFrame) -> DataFrame:
-    """W1 as window functions: a running sum that ticks at every `B-` or
-    `O` tag assigns a chain id; grouping by chain id yields one span per
-    mention (min start, max end, type from the opening tag). Shuffles by
-    (url, sent_idx); semantically identical to `mentions_stage`.
-    """
-    toks = tokens_long(sentences)
-    w = Window.partitionBy("url", "sent_idx").orderBy("tok_idx")
-    chained = toks.withColumn(
-        "chain_id",
-        F.sum(
-            F.when(F.col("bio").startswith("I-"), F.lit(0)).otherwise(F.lit(1))
-        ).over(w),
-    )
-    return (
-        chained.filter(F.col("bio") != "O")
-        .groupBy("url", "sent_idx", "chain_id")
-        .agg(
-            F.min("start").alias("start"),
-            F.max("end").alias("end"),
-            F.min_by(F.expr("substring(bio, 3)"), F.col("tok_idx")).alias("ent_type"),
-            F.max("text").alias("text"),
-        )
-        .select(
-            "url",
-            "sent_idx",
-            "start",
-            "end",
-            F.expr("substring(text, cast(start+1 as int), cast(end-start as int))").alias(
-                "surface"
-            ),
-            "ent_type",
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# stage 4: triples — (M, P, M) pattern over the item sequence, JVM-side
-#
-# Hot path: per-row array expression over the sentence's own token and
-# mention-span arrays — ZERO shuffle. The window-function variant
-# (`triples_stage_window`) is kept as the relational formulation.
-# --------------------------------------------------------------------------
-def _predicates_sql_array() -> str:
-    return "array(" + ", ".join(f"'{p}'" for p in sorted(PREDICATE_VERBS)) + ")"
-
-
-def triples_stage(sentences: DataFrame, mentions: DataFrame = None) -> DataFrame:
-    """Consecutive (MENTION, PREDICATE, MENTION) runs in the per-sentence
-    item sequence → (subj, pred, obj). Pure per-row higher-order array
-    ops: build the item sequence (mentions + predicate tokens) sorted by
-    offset, scan every consecutive item triple. No shuffle, no Python.
-    Ground truth: kgref.triples. `mentions` is accepted for API
-    compatibility but unused — mention spans fold out of the sentence
-    row itself.
-    """
-    spanned = sentences_with_mention_spans(sentences)
-    items_expr = f"""
-    array_sort(concat(
-      transform(mention_spans, s -> named_struct(
-        'start', s.start, 'end', s.end, 'kind', 'M',
-        'surface', substring(text, cast(s.start + 1 as int), cast(s.end - s.start as int)),
-        'ent_type', s.ent_type)),
-      transform(
-        filter(arrays_zip(tokens, bio, starts, ends),
-               x -> x.bio = 'O' and array_contains({_predicates_sql_array()}, x.tokens)),
-        x -> named_struct(
-          'start', x.starts, 'end', x.ends, 'kind', 'P',
-          'surface', x.tokens, 'ent_type', cast(null as string)))
-    ))
-    """
-    triples_expr = """
-    filter(
-      transform(
-        if(size(items) >= 3, sequence(2, size(items) - 1), cast(array() as array<int>)),
-        i -> if(element_at(items, i - 1).kind = 'M'
-                and element_at(items, i).kind = 'P'
-                and element_at(items, i + 1).kind = 'M',
-             named_struct(
-               'subj', element_at(items, i - 1).surface,
-               'pred', element_at(items, i).surface,
-               'obj',  element_at(items, i + 1).surface,
-               'subj_type', element_at(items, i - 1).ent_type,
-               'obj_type',  element_at(items, i + 1).ent_type,
-               'subj_span', named_struct('start', element_at(items, i - 1).start,
-                                         'end',   element_at(items, i - 1).end),
-               'obj_span',  named_struct('start', element_at(items, i + 1).start,
-                                         'end',   element_at(items, i + 1).end)),
-             cast(null as struct<subj:string,pred:string,obj:string,
-                                 subj_type:string,obj_type:string,
-                                 subj_span:struct<start:bigint,end:bigint>,
-                                 obj_span:struct<start:bigint,end:bigint>>))),
-      t -> t is not null)
-    """
-    return (
-        spanned.withColumn("items", F.expr(items_expr))
-        .withColumn("triples", F.expr(triples_expr))
-        .select("url", "sent_idx", F.explode("triples").alias("t"))
-        .select(
-            "url",
-            "sent_idx",
-            F.col("t.subj").alias("subj"),
-            F.col("t.pred").alias("pred"),
-            F.col("t.obj").alias("obj"),
-            F.col("t.subj_type").alias("subj_type"),
-            F.col("t.obj_type").alias("obj_type"),
-            F.col("t.subj_span").alias("subj_span"),
-            F.col("t.obj_span").alias("obj_span"),
-        )
-    )
-
-
-def triples_stage_window(sentences: DataFrame, mentions: DataFrame) -> DataFrame:
-    """Window-function formulation of the (M, P, M) scan (`lead` over the
-    per-sentence item sequence, SURVEY.md §2.5). Shuffles by sentence;
-    semantically identical to `triples_stage`.
-    """
-    toks = tokens_long(sentences)
-    preds = toks.filter(
-        (F.col("bio") == "O") & F.col("token").isin(list(PREDICATE_VERBS))
-    ).select(
-        "url",
-        "sent_idx",
-        "start",
-        "end",
-        F.col("token").alias("surface"),
-        F.lit(None).cast("string").alias("ent_type"),
-        F.lit("P").alias("kind"),
-    )
-    ments = mentions.select(
-        "url", "sent_idx", "start", "end", "surface", "ent_type", F.lit("M").alias("kind")
-    )
-    items = ments.unionByName(preds)
-    w = Window.partitionBy("url", "sent_idx").orderBy("start")
-    seq = (
-        items.withColumn("kind1", F.lead("kind", 1).over(w))
-        .withColumn("kind2", F.lead("kind", 2).over(w))
-        .withColumn("pred", F.lead("surface", 1).over(w))
-        .withColumn("obj", F.lead("surface", 2).over(w))
-        .withColumn("obj_type", F.lead("ent_type", 2).over(w))
-        .withColumn("obj_start", F.lead("start", 2).over(w))
-        .withColumn("obj_end", F.lead("end", 2).over(w))
-    )
-    return seq.filter(
-        (F.col("kind") == "M") & (F.col("kind1") == "P") & (F.col("kind2") == "M")
-    ).select(
-        "url",
-        "sent_idx",
-        F.col("surface").alias("subj"),
-        "pred",
-        "obj",
-        F.col("ent_type").alias("subj_type"),
-        "obj_type",
-        F.struct(
-            F.col("start").alias("start"), F.col("end").alias("end")
-        ).alias("subj_span"),
-        F.struct(
-            F.col("obj_start").alias("start"), F.col("obj_end").alias("end")
-        ).alias("obj_span"),
-    )
 
 
 # --------------------------------------------------------------------------

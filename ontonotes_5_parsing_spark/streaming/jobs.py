@@ -38,7 +38,7 @@ def stream_pages_to_triples(
     checkpoint dir.
     """
     pages = read_pages_stream(spark, pages_dir)
-    parsed = extract_parse_stage(pages, lean=True, coref=True)
+    parsed = extract_parse_stage(pages)
     triples = triples_from_parsed(parsed)
     return (
         triples.writeStream.format("parquet")
@@ -65,7 +65,7 @@ def windowed_mention_counts(
     'mention_counts'.
     """
     pages = read_pages_stream(spark, pages_dir)
-    parsed = extract_parse_stage(pages, lean=True, coref=True)
+    parsed = extract_parse_stage(pages)
     # carry event time through the parse by re-joining the page feed's
     # timestamp on url (stream-static joins need a static side; instead
     # propagate warc_ts inside the UDF? — simpler: mention rows keep the
@@ -121,7 +121,7 @@ def stateful_entity_totals(
     pages = read_pages_stream(spark, pages_dir)
     # the lean parsed schema carries warc_ts through the UDF, so no
     # stream-stream join is needed (disallowed in update mode anyway)
-    parsed = extract_parse_stage(pages, lean=True, coref=True)
+    parsed = extract_parse_stage(pages)
     with_ts = parsed.select(
         F.explode("mention_spans").alias("m"),
         F.unix_timestamp("warc_ts").alias("epoch"),
@@ -187,7 +187,7 @@ def foreach_batch_pipeline(
     pages = read_pages_stream(spark, pages_dir)
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:
-        parsed = extract_parse_stage(batch_df, lean=True, coref=True)
+        parsed = extract_parse_stage(batch_df)
         triples = triples_from_parsed(parsed)
         triples.write.mode("append").parquet(f"{work_dir}/triples")
 

@@ -37,7 +37,7 @@ def test_pipeline_checkpoint_and_resume(spark, tmp_path):
     out1 = run_pipeline(pages, work_dir=work)
     n_edges = out1["edges"].count()
     assert n_edges > 0
-    for stage in ("extracted", "sentences", "mentions", "triples", "linked", "nodes", "edges"):
+    for stage in ("sentences", "mentions", "triples", "linked", "nodes", "edges"):
         assert lineage.is_complete(os.path.join(work, stage)), stage
     # resume run: stages load from manifests, results identical
     out2 = run_pipeline(pages, work_dir=work, resume=True)

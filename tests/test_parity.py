@@ -1,24 +1,23 @@
 """Distributed ↔ single-process conformance (the correctness gate).
 
-1. byte-identical extracted text per url (BASELINE.json:15-16);
-2. mention-set equality Spark vs kgref;
+The fused Spark extraction stages (`run.build_extraction`) against the
+kgref kernels run page by page — extract_text → split_sentences →
+annotate_sentence → the per-document coref triple scan:
+
+1. byte-identical extracted text (BASELINE.json:15-16), a pure kgref
+   invariant of the generated pages;
+2. sentence-set and mention-set equality Spark vs kgref;
 3. (subj, pred, obj) triple-set P/R ≥ 0.95 vs kgref (BASELINE.json:2) —
-   in fact asserted exact, since the Spark stages import the same
-   kernels / implement the same window semantics.
+   in fact asserted exact, since the Spark stage runs the same kernels.
 """
 
 import pytest
 
 from ontonotes_5_parsing_spark import corpus
 from ontonotes_5_parsing_spark.kgref import annotate_sentence, extract_text, split_sentences
+from ontonotes_5_parsing_spark.kgref.coref import CorefState, extract_triples_with_coref
 from ontonotes_5_parsing_spark.kgref.ner import bio_to_spans
-from ontonotes_5_parsing_spark.kgref.triples import extract_triples
-from ontonotes_5_parsing_spark.pipeline import (
-    extract_stage,
-    mentions_stage,
-    parse_stage,
-    triples_stage,
-)
+from ontonotes_5_parsing_spark.pipeline.run import build_extraction
 
 N_PAGES = 120
 
@@ -30,50 +29,59 @@ def pages(spark):
 
 @pytest.fixture(scope="module")
 def stages(spark, pages):
-    extracted = extract_stage(pages).cache()
-    sentences = parse_stage(extracted).cache()
-    mentions = mentions_stage(sentences)
-    triples = triples_stage(sentences, mentions)
-    return extracted, sentences, mentions, triples
+    return build_extraction(pages)
 
 
-def test_extract_byte_identity(stages):
-    extracted, *_ = stages
-    rows = extracted.select("url", "text").collect()
-    assert len(rows) == N_PAGES
-    for r in rows:
-        doc_id = int(r["url"].rsplit("doc", 1)[1])
+@pytest.fixture(scope="module")
+def oracle(pages):
+    """kgref, page by page: sentences, mentions and triples."""
+    out = {"sentences": set(), "mentions": set(), "triples": set()}
+    for r in pages.select("url", "html").collect():
+        state = CorefState()
+        for i, sent in enumerate(split_sentences(extract_text(r.html))):
+            ann = annotate_sentence(sent)
+            if not ann["tokens"]:
+                continue
+            out["sentences"].add((r.url, i, sent))
+            spans = bio_to_spans(ann["bio"], ann["bounds"])
+            for start, end, etype in spans:
+                out["mentions"].add((r.url, i, start, end, sent[start:end], etype))
+            for t in extract_triples_with_coref(
+                sent, ann["tokens"], ann["bounds"], ann["bio"], state
+            ):
+                out["triples"].add((r.url, i, t["subj"], t["pred"], t["obj"]))
+    return out
+
+
+def test_extract_byte_identity():
+    for doc_id in range(N_PAGES):
         page = corpus.generate_page(doc_id)
-        assert r["text"] == extract_text(page["html"])
-        assert r["text"] == page["text"]
+        assert extract_text(page["html"]) == page["text"], page["url"]
 
 
-def test_mentions_match_oracle(stages):
-    _, sentences, mentions, _ = stages
+def test_sentence_parity(stages, oracle):
+    spark_sents = {
+        (r.url, r.sent_idx, r.text)
+        for r in stages["sentences"].select("url", "sent_idx", "text").collect()
+    }
+    assert spark_sents == oracle["sentences"]
+    assert len({url for url, _, _ in spark_sents}) == N_PAGES
+
+
+def test_mentions_match_oracle(stages, oracle):
     spark_mentions = {
         (r.url, r.sent_idx, r.start, r.end, r.surface, r.ent_type)
-        for r in mentions.collect()
+        for r in stages["mentions"].collect()
     }
-    oracle_mentions = set()
-    for r in sentences.select("url", "sent_idx", "text").collect():
-        ann = annotate_sentence(r.text)
-        for start, end, etype in bio_to_spans(ann["bio"], ann["bounds"]):
-            oracle_mentions.add(
-                (r.url, r.sent_idx, start, end, r.text[start:end], etype)
-            )
-    assert spark_mentions == oracle_mentions
+    assert spark_mentions == oracle["mentions"]
     assert len(spark_mentions) > 0
 
 
-def test_triples_pr_vs_oracle(stages):
-    _, sentences, _, triples = stages
+def test_triples_pr_vs_oracle(stages, oracle):
     spark_triples = {
-        (r.url, r.sent_idx, r.subj, r.pred, r.obj) for r in triples.collect()
+        (r.url, r.sent_idx, r.subj, r.pred, r.obj) for r in stages["triples"].collect()
     }
-    oracle_triples = set()
-    for r in sentences.select("url", "sent_idx", "text").collect():
-        for t in extract_triples(r.text):
-            oracle_triples.add((r.url, r.sent_idx, t["subj"], t["pred"], t["obj"]))
+    oracle_triples = oracle["triples"]
     assert len(oracle_triples) > 0
     tp = len(spark_triples & oracle_triples)
     precision = tp / max(len(spark_triples), 1)
@@ -84,87 +92,16 @@ def test_triples_pr_vs_oracle(stages):
     assert spark_triples == oracle_triples
 
 
-def test_sentence_parity(stages):
-    extracted, sentences, *_ = stages
-    per_url = {r.url: r.text for r in extracted.collect()}
-    spark_sents = {
-        (r.url, r.sent_idx, r.text) for r in sentences.select("url", "sent_idx", "text").collect()
-    }
-    oracle_sents = set()
-    for url, text in per_url.items():
-        for i, s in enumerate(split_sentences(text)):
-            oracle_sents.add((url, i, s))
-    assert spark_sents == oracle_sents
-
-
-def test_window_and_fold_variants_agree(stages):
-    """The shuffle-free fold implementations must equal the
-    window-function formulations exactly."""
-    from ontonotes_5_parsing_spark.pipeline.stages import (
-        mentions_stage_window,
-        triples_stage_window,
-    )
-
-    _, sentences, mentions, triples = stages
-    win_mentions = {
-        tuple(r) for r in mentions_stage_window(sentences).collect()
-    }
-    fold_mentions = {tuple(r) for r in mentions.collect()}
-    assert win_mentions == fold_mentions
-
-    win_triples = {
-        (r.url, r.sent_idx, r.subj, r.pred, r.obj)
-        for r in triples_stage_window(sentences, mentions).collect()
-    }
-    fold_triples = {
-        (r.url, r.sent_idx, r.subj, r.pred, r.obj) for r in triples.collect()
-    }
-    assert win_triples == fold_triples
-
-
-def test_hot_path_matches_relational_variants(spark, pages):
-    """The fused extract+parse+annotate hot path must produce the same
-    mentions and triples as the relational (fold) formulations."""
-    from ontonotes_5_parsing_spark.pipeline.stages import (
-        extract_parse_stage,
-        mentions_from_parsed,
-        mentions_stage,
-        triples_from_parsed,
-        triples_stage,
-    )
-
-    parsed = extract_parse_stage(pages).cache()
-    hot_mentions = {tuple(r) for r in mentions_from_parsed(parsed).collect()}
-    fold_mentions = {tuple(r) for r in mentions_stage(parsed).collect()}
-    assert hot_mentions == fold_mentions
-    hot_triples = {
-        (r.url, r.sent_idx, r.subj, r.pred, r.obj)
-        for r in triples_from_parsed(parsed).collect()
-    }
-    fold_triples = {
-        (r.url, r.sent_idx, r.subj, r.pred, r.obj)
-        for r in triples_stage(parsed, None).collect()
-    }
-    assert hot_triples == fold_triples and len(hot_triples) > 0
-
-
-def test_coref_triples_match_oracle(spark, pages):
-    """Coref-merged triples (hot path) must equal the kgref per-document
-    sequential oracle (CorefState over sentences in order)."""
-    from ontonotes_5_parsing_spark import corpus
-    from ontonotes_5_parsing_spark.kgref import split_sentences, tokenize_any_text
-    from ontonotes_5_parsing_spark.kgref.coref import CorefState, extract_triples_with_coref
+def test_coref_triples_match_oracle(stages, pages):
+    """Coref-merged triples must equal the kgref per-document sequential
+    oracle (CorefState over sentences in order), built here from the
+    generator's text and the any-text tokenizer."""
+    from ontonotes_5_parsing_spark.kgref import tokenize_any_text
     from ontonotes_5_parsing_spark.kgref.ner import tag_bio
     from ontonotes_5_parsing_spark.kgref.spans import get_token_bounds
-    from ontonotes_5_parsing_spark.pipeline.stages import (
-        extract_parse_stage,
-        triples_from_parsed,
-    )
 
-    parsed = extract_parse_stage(pages, lean=True, coref=True)
     spark_triples = {
-        (r.url, r.sent_idx, r.subj, r.pred, r.obj)
-        for r in triples_from_parsed(parsed).collect()
+        (r.url, r.sent_idx, r.subj, r.pred, r.obj) for r in stages["triples"].collect()
     }
     oracle = set()
     n_pronoun_subjects = 0

@@ -59,7 +59,7 @@ def test_hot_path_mentions_have_no_shuffle(spark):
     )
 
     pages = corpus.web_pages_df(spark, 10)
-    parsed = extract_parse_stage(pages, lean=True)
+    parsed = extract_parse_stage(pages)
     # the only Exchange allowed is the id repartition before generation —
     # mention/triple extraction themselves add none
     base_exchanges = plan_of(parsed).count("Exchange")

@@ -98,7 +98,7 @@ def test_stateful_entity_totals(spark, pages_dir, tmp_path):
     expected = {
         r.ent_type: r.cnt
         for r in mentions_from_parsed(
-            extract_parse_stage(pages, lean=True, coref=True)
+            extract_parse_stage(pages)
         )
         .groupBy("ent_type")
         .count()
