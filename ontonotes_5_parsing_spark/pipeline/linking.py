@@ -59,47 +59,39 @@ def surface_vocab(mentions: DataFrame) -> DataFrame:
 
 
 def add_minhash_bands(vocab: DataFrame) -> DataFrame:
-    """MinHash signature over shingles, folded into LSH band hashes.
+    """Adds `bands`, the blocking keys of `norm`: an array of
+    (band int, bh long) structs.
 
-    minhash_k = min over shingles of xxhash64(shingle, k); band hash =
-    xxhash64 of the band's minhashes. Pure built-ins → JVM-side.
+    The first N_HASHES // BAND_SIZE keys are LSH bands over a MinHash
+    signature of the padded norm's character shingles: minhash_k = min
+    over shingles of xxhash64(shingle, k), and band b's hash is
+    xxhash64 of minhashes b·BAND_SIZE … b·BAND_SIZE + BAND_SIZE − 1.
+    The remaining keys (band −1) are one xxhash64 per token of the norm.
+
+    All of it is one SQL expression, parsed once on the JVM: building
+    it as DataFrame calls costs about a thousand py4j round-trips per
+    plan. The `aggregate` folds the shingles into the N_HASHES running
+    minima in one pass (`least` skips the null start), and its finish
+    step folds the signature into the band structs.
     """
     padded = "concat(char(1), norm, char(2))"
-    df = vocab.withColumn(
-        "shingles",
-        F.expr(
-            f"array_distinct(transform(sequence(1, greatest(length({padded}) - {SHINGLE - 1}, 1)),"
-            f" i -> substring({padded}, i, {SHINGLE})))"
-        ),
+    shingles = (
+        f"transform(sequence(1, greatest(length({padded}) - {SHINGLE - 1}, 1)),"
+        f" i -> substring({padded}, i, {SHINGLE}))"
     )
-    def _hash_fn(k: int):
-        # unary-lambda factory: a `lambda s, k=k:` two-parameter form
-        # would have k rebound to the array index (PySpark passes
-        # (element, idx) to binary transform lambdas), collapsing all
-        # N_HASHES minhash functions into one and degenerating the LSH
-        # bands to a single blocking key
-        return lambda s: F.xxhash64(s, F.lit(k))
-
-    minhashes = [
-        F.array_min(F.transform(F.col("shingles"), _hash_fn(k))).alias(f"mh{k}")
-        for k in range(N_HASHES)
-    ]
-    df = df.select("*", *minhashes)
-    bands = []
-    for b in range(N_HASHES // BAND_SIZE):
-        cols = [F.col(f"mh{b * BAND_SIZE + j}") for j in range(BAND_SIZE)]
-        bands.append(F.struct(F.lit(b).alias("band"), F.xxhash64(*cols).alias("bh")))
-    minhash_bands = F.array(*bands)
+    band_hash = ", ".join(f"mh[{BAND_SIZE} * b + {j}]" for j in range(BAND_SIZE))
+    minhash_bands = (
+        f"aggregate({shingles}, array_repeat(cast(null as bigint), {N_HASHES}),"
+        " (mh, s) -> transform(mh, (m, k) -> least(m, xxhash64(s, k))),"
+        f" mh -> transform(sequence(0, {N_HASHES // BAND_SIZE - 1}),"
+        f" b -> struct(b as band, xxhash64({band_hash}) as bh)))"
+    )
     # second blocking pass: one key per token of the normalized surface
     # (inverted-index blocking). MinHash alone has poor recall on short
     # alias pairs ("obama" vs "barack obama" share few shingles); token
     # blocking catches exactly the containment aliases the scorer accepts.
-    token_bands = F.expr(
-        "transform(split(norm, '\\\\s+'), t -> struct(-1 as band, xxhash64(t) as bh))"
-    )
-    return df.withColumn("bands", F.concat(minhash_bands, token_bands)).drop(
-        "shingles", *[f"mh{k}" for k in range(N_HASHES)]
-    )
+    token_bands = "transform(split(norm, '\\\\s+'), t -> struct(-1 as band, xxhash64(t) as bh))"
+    return vocab.withColumn("bands", F.expr(f"concat({minhash_bands}, {token_bands})"))
 
 
 MAX_BUCKET = 256  # hot-bucket guard: a blocking key shared by more
@@ -136,14 +128,14 @@ def candidate_pairs(vocab_with_bands: DataFrame) -> DataFrame:
         .filter(F.col("bucket_n") <= MAX_BUCKET)
         .drop("bucket_n")
     )
-    # localCheckpoint, not just persist: the minhash banding is a very
-    # large expression tree (12 × array_min(transform(shingles, …))),
-    # and this DF feeds both self-join sides — without the lineage cut
-    # Catalyst re-canonicalizes the giant tree per branch per action and
-    # planning time dominates the whole link stage (~3× the actual data
-    # work at bench scale). Round-4: the cut sits AFTER the window
-    # filter (fused into the same pass, VERDICT r3 #5), so the exploded
-    # keys are evaluated and materialized ONCE — post-guard, already
+    # localCheckpoint, not just persist: this DF feeds both self-join
+    # sides — without the lineage cut Catalyst re-plans the vocabulary
+    # aggregation and the banding per branch per action (measured when
+    # the banding was 12 separate transform columns: planning was ~3×
+    # the actual data work of the link stage at bench scale). Round-4:
+    # the cut sits AFTER the window filter (fused into the same pass,
+    # VERDICT r3 #5), so the exploded keys are evaluated and
+    # materialized ONCE — post-guard, already
     # hash-partitioned on the join key — instead of checkpoint-then-
     # shuffle writing the pre-filter set twice. At production scale this
     # materialization is the blocked-keys stage table the lineage/resume
@@ -213,23 +205,31 @@ def accepts(norm_a: str, norm_b: str, toks_a: list, toks_b: list) -> bool:
     """`score_pairs`' accept rule in-process, given each side's
     Spark-computed `tokens`. Lengths are code points on both engines
     and the ratio is the same double division, so the two agree."""
-    if len(set(toks_a) & set(toks_b)) == min(len(toks_a), len(toks_b)):
+    if len(set(toks_a).intersection(toks_b)) == min(len(toks_a), len(toks_b)):
         return True
+    len_a, len_b = len(norm_a), len(norm_b)
     # never 0: two empty norms both split to [""], accepted above
-    longest = max(len(norm_a), len(norm_b))
+    longest = max(len_a, len_b)
     # the edit distance is at least the length difference, so this
     # rejects exactly the pairs the full distance would reject
-    if abs(len(norm_a) - len(norm_b)) / longest > MAX_LEV_RATIO:
+    if abs(len_a - len_b) / longest > MAX_LEV_RATIO:
         return False
     # a shared prefix and suffix never change the edit distance
-    short = min(len(norm_a), len(norm_b))
+    short = min(len_a, len_b)
     lo = 0
     while lo < short and norm_a[lo] == norm_b[lo]:
         lo += 1
     hi = 0
-    while hi < short - lo and norm_a[-1 - hi] == norm_b[-1 - hi]:
+    while hi < short - lo and norm_a[len_a - 1 - hi] == norm_b[len_b - 1 - hi]:
         hi += 1
-    distance = levenshtein(norm_a[lo : len(norm_a) - hi], norm_b[lo : len(norm_b) - hi])
+    if 2 / longest > MAX_LEV_RATIO:
+        # two edits already fail, so only a distance of 0 or 1 can pass.
+        # Without the shared affixes, the distance is at most 1 exactly
+        # when neither rest is longer than 1, and then equals the longer
+        # rest's length; both are 2 or more otherwise
+        distance = longest - lo - hi
+    else:
+        distance = levenshtein(norm_a[lo : len_a - hi], norm_b[lo : len_b - hi])
     return distance / longest <= MAX_LEV_RATIO
 
 
@@ -259,22 +259,24 @@ def union_find(edges: Iterable[tuple[int, int]]) -> dict[int, int]:
 
 def link_collected(rows: list) -> tuple[dict[int, int], dict[str, int]]:
     """In-process twin of `candidate_pairs` → `score_pairs` →
-    `connected_components` over collected vocabulary rows (vertex_id,
-    norm, ent_type, bands, toks). Returns the remap (vertex_id →
-    component, non-identity rows only) and the counts: candidate and
-    accepted pairs, and blocking keys dropped by `MAX_BUCKET`.
+    `connected_components` over collected vocabulary rows whose first
+    five fields are (vertex_id, norm, ent_type, bands, toks). Returns
+    the remap (vertex_id → component, non-identity rows only) and the
+    counts: candidate and accepted pairs, and blocking keys dropped by
+    `MAX_BUCKET`.
 
     Bucket sizes count exploded rows like the window does: a surface
     listing a token twice counts twice, as does each vocabulary row
     sharing a vertex_id ("Obama"/"obama"). Keys with a null ent_type
     count but never pair, as in the equi-join."""
-    vertex = [r.vertex_id for r in rows]
-    norm = [r.norm for r in rows]
-    toks = [r.toks for r in rows]
+    vertex, norm, toks = [], [], []
     buckets: dict[tuple, list[int]] = defaultdict(list)
-    for i, r in enumerate(rows):
-        for band, bh in r.bands or ():
-            buckets[(r.ent_type, band, bh)].append(i)
+    for i, (vertex_id, norm_i, ent_type, bands, toks_i, *_) in enumerate(rows):
+        vertex.append(vertex_id)
+        norm.append(norm_i)
+        toks.append(toks_i)
+        for band, bh in bands or ():
+            buckets[(ent_type, band, bh)].append(i)
     dropped = 0
     # (src, dst, norm_a, norm_b) → row indices, as the distinct pair rows
     pairs: dict[tuple, tuple[int, int]] = {}

@@ -187,19 +187,23 @@ def _driver_graph(vocab: DataFrame, triples: DataFrame):
     relations and the surface → entity mapping is broadcast into the
     shared edge aggregation."""
     spark = vocab.sparkSession
+    # in link_collected's field order; rows are read by unpacking, as a
+    # Row's attribute lookup costs a field-name search per access
     rows = (
         add_minhash_bands(vocab)
-        .withColumn("toks", tokens("norm"))
-        .withColumn("entity_id", F.xxhash64("surface", "ent_type"))
+        .select(
+            "vertex_id", "norm", "ent_type", "bands", tokens("norm").alias("toks"),
+            "surface", "n_mentions", F.xxhash64("surface", "ent_type").alias("entity_id"),
+        )
         .collect()
     )
     vocab.unpersist()
     remap, counts = link_collected(rows)
     linked, members = [], []
-    for r in rows:
-        component = remap.get(r.vertex_id, r.vertex_id)
-        linked.append((r.vertex_id, r.surface, r.ent_type, r.n_mentions, r.norm, component))
-        members.append((r.surface, r.ent_type, r.n_mentions, component, r.entity_id))
+    for vertex_id, norm, ent_type, _bands, _toks, surface, n_mentions, entity_id in rows:
+        component = remap.get(vertex_id, vertex_id)
+        linked.append((vertex_id, surface, ent_type, n_mentions, norm, component))
+        members.append((surface, ent_type, n_mentions, component, entity_id))
     nodes, mapping = canonical_rows(members)
     fields = {f.name: f for f in vocab.schema.fields}
     linked_schema = T.StructType(

@@ -164,12 +164,39 @@ norms = st.lists(
 ).map("".join)
 
 
-@given(st.lists(st.tuples(norms, norms), min_size=1, max_size=12))
+
+@st.composite
+def near_duplicates(draw):
+    """A base string and a copy with 0-3 random edits. The longest
+    lengths straddle 5, 10 and 15, where the edit budget of the 0.2
+    ratio grows from 0 to 1, 2 and 3 edits, so pairs land on both sides
+    of `accepts`' one-edit shortcut and of the threshold itself."""
+    alphabet = draw(st.sampled_from(["0123456789", "0a1b \u00e9\u65e5\U0001d538"]))
+    n = draw(st.sampled_from([4, 5, 9, 10, 14, 15]))
+    base = draw(st.text(alphabet=st.sampled_from(alphabet), min_size=n, max_size=n))
+    edited = list(base)
+    for _ in range(draw(st.integers(0, 3))):
+        op = draw(st.sampled_from(["substitute", "insert", "delete"]))
+        pos = draw(st.integers(0, len(edited)))
+        char = draw(st.sampled_from(alphabet))
+        if op == "insert":
+            edited.insert(pos, char)
+        elif edited:
+            pos = min(pos, len(edited) - 1)
+            if op == "substitute":
+                edited[pos] = char
+            else:
+                del edited[pos]
+    return base, "".join(edited)
+
+
+@given(st.lists(st.one_of(st.tuples(norms, norms), near_duplicates()), min_size=1, max_size=12))
 @settings(max_examples=200, deadline=None)
 def test_inprocess_accept_rule_matches_score_pairs(spark, pairs):
     """linking.accepts on Spark-computed tokens keeps exactly the pairs
-    the Spark score_pairs filter keeps. Each example's pairs are one
-    local DataFrame, so both sides run without a Spark job."""
+    the Spark score_pairs filter keeps, on arbitrary whitespace-laden
+    norms and on near-duplicates. Each example's pairs are one local
+    DataFrame, so both sides run without a Spark job."""
     import pyarrow as pa
 
     from ontonotes_5_parsing_spark.pipeline.linking import accepts, score_pairs, tokens
