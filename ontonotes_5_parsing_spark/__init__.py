@@ -5,9 +5,10 @@ A from-scratch re-expression of the capabilities of
 ``nsu-ai/ontonotes-5-parsing`` (reference at /root/reference, read-only)
 as a Spark-first pipeline over Common-Crawl-style web pages:
 
-    web_pages → extract_text (pandas UDF) → parse_document (mapInPandas)
-    → mentions → (subj, pred, obj) triples → MinHash/LSH-blocked entity
-    linking → salted canonicalization → nodes/edges tables.
+    web_pages → sentences (one fused extract/parse/NER/coref/triple
+    mapInPandas pass) → mentions, (subj, pred, obj) triples (explodes)
+    → MinHash/LSH-blocked entity linking → salted canonicalization
+    → nodes/edges tables.
 
 Subpackages:
 

@@ -438,12 +438,16 @@ def link_entities(mentions: DataFrame) -> DataFrame:
     """mentions → (vertex_id, surface, ent_type, n_mentions, norm,
     component).
 
-    The vocabulary is persisted: it feeds banding, both sides of the
-    candidate self-join, the component join, and canonicalization —
-    without the persist each consumer would re-run the salted two-phase
-    aggregation over the full mentions table.
+    Eager: returns the linked frame persisted and counted, so the
+    vocabulary it was built from (persisted, as it feeds banding, both
+    sides of the candidate self-join and the component join) can be
+    unpersisted here. The caller unpersists the result.
     """
-    return link_vocab(surface_vocab(mentions).persist())
+    vocab = surface_vocab(mentions).persist()
+    linked = link_vocab(vocab).persist()
+    linked.count()
+    vocab.unpersist()
+    return linked
 
 
 def link_vocab(vocab: DataFrame) -> DataFrame:
@@ -460,6 +464,9 @@ def link_vocab(vocab: DataFrame) -> DataFrame:
         pairs,
         mapping_only=True,
     )
+    # every branch of connected_components returns a frame that no
+    # longer reads the pairs (a local mapping or checkpointed labels)
+    pairs.unpersist()
     return vocab.join(components, "vertex_id", "left").withColumn(
         "component", F.coalesce("component", "vertex_id")
     )

@@ -175,6 +175,9 @@ def build_graph(mentions: DataFrame, triples: DataFrame) -> dict[str, DataFrame]
             out = {"linked": linked, "nodes": nodes.persist(), "edges": edges.persist()}
             out["edges"].count()
             out["nodes"].count()
+            # counting nodes and edges filled linked's cache; the caller
+            # unpersists only the frames returned
+            vocab.unpersist()
     # counts the distributed branch does not compute are logged as null
     log.info("build_graph %s", json.dumps({"branch": branch, "vocab_rows": n_vocab, **counts}))
     return out

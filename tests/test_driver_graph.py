@@ -9,6 +9,7 @@ plus the structured log line. The sf0.001 pages are compared in
 import json
 import logging
 
+import pytest
 from pyspark.sql import functions as F
 
 import ontonotes_5_parsing_spark.pipeline.run as run
@@ -233,3 +234,34 @@ def test_build_graph_logs_one_structured_line(spark, monkeypatch, caplog):
         "accepted_pairs": None,
         "dropped_keys": None,
     }
+
+
+def cache_is_empty(spark) -> bool:
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+@pytest.mark.parametrize("gate", [None, 0], ids=["driver", "distributed"])
+def test_graph_phase_leaves_nothing_cached(spark, monkeypatch, tmp_path, gate):
+    """Once the caller unpersists every frame it was handed, no cache
+    is left behind: build_graph on both branches, link_entities, and a
+    checkpointed run (which materializes the stages, so it keeps
+    nothing)."""
+    if gate is not None:
+        monkeypatch.setattr(run, "DRIVER_GRAPH_MAX_ROWS", gate)
+    pages = corpus.web_pages_df(spark, 60, seed=11)
+    spark.catalog.clearCache()
+
+    out = run.build_extraction(pages)
+    out.update(run.build_graph(out["mentions"], out["triples"]))
+    for df in out.values():
+        df.unpersist()
+    assert cache_is_empty(spark)
+
+    out = run.build_extraction(pages)
+    linked = linking.link_entities(out["mentions"])
+    for df in (*out.values(), linked):
+        df.unpersist()
+    assert cache_is_empty(spark)
+
+    run.run_pipeline(pages, work_dir=str(tmp_path / "work"))
+    assert cache_is_empty(spark)

@@ -119,3 +119,17 @@ def test_coref_triples_match_oracle(stages, pages):
                     n_pronoun_subjects += 1
     assert spark_triples == oracle
     assert n_pronoun_subjects > 0  # the corpus plants coref chains
+
+
+def test_batch_of_empty_text_pages(spark):
+    """An Arrow batch whose pages all extract to empty text yields no
+    sentences; an empty frame built from the empty column lists would
+    be float64 and fail the cast to the schema's timestamp."""
+    from ontonotes_5_parsing_spark.pipeline.stages import extract_parse_stage
+
+    pages = spark.createDataFrame(
+        [(f"https://e{i}.example/x", html, "en")
+         for i, html in enumerate([b"<html><body></body></html>", b"   ", b""])],
+        "url string, html binary, lang string",
+    ).coalesce(1)
+    assert extract_parse_stage(pages).count() == 0
