@@ -212,17 +212,17 @@ def q_jaccard_pairs(spark, sf_dir):
     _jkey = (session_cache_key(spark), sf_dir)
     if _jkey in _JACCARD_CACHE:
         return _JACCARD_CACHE[_jkey]
-    # Same scheduling cut as the KG graph phase (pipeline/run.py): at
-    # small input sizes AQE's one-job-per-query-stage mechanics dominate
+    # Same scheduling cut as the KG graph phase (pipeline/run.py): the
+    # input is the `documents` table (500 rows at sf0.001/sf0.01, 5,000
+    # at sf0.1), where AQE's one-job-per-query-stage mechanics dominate
     # this query (measured 11 jobs/48 stages/54 tasks per run at sf0.1 —
     # nearly every stage single-task), while every post-encode shuffle
-    # is postings/pairs-sized. Below the size gate the whole build —
-    # including the verified-pairs materialization — runs as static
-    # plans; at corpus scale AQE stays on for the token-keyed join.
-    from ..pipeline.run import _static_plan_if_small
+    # is postings/pairs-sized. The whole build — including the
+    # verified-pairs materialization — runs as static plans.
+    from ..pipeline.run import _static_plan
 
     base = _docs(spark, sf_dir)
-    with _static_plan_if_small(spark, base):
+    with _static_plan(spark):
         # materialized while still inside the static-plan scope, so the
         # caller's action is a cached-scan job regardless of planner mode
         out = _jaccard_pairs_plan(spark, base).localCheckpoint(eager=True)
@@ -541,7 +541,10 @@ def q_dedup_components(spark, sf_dir):
         .union(pairs.select(F.col("dst").alias("vertex_id")))
         .distinct()
     )
-    comp = connected_components(vertices, pairs)
+    remap = connected_components(vertices, pairs)
+    comp = vertices.join(remap, "vertex_id", "left").withColumn(
+        "component", F.coalesce("component", "vertex_id")
+    )
     return comp.groupBy("component").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.min("vertex_id").alias("keeper_doc_id"),

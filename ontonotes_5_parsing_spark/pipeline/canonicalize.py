@@ -91,10 +91,7 @@ def build_nodes_edges(
     n_mentions, n_surfaces) and edges(src_entity_id, pred,
     dst_entity_id, n_evidence)."""
     canon = canonical_entities(linked)
-    # persisted: the mapping is broadcast twice (src side and dst side);
-    # without the persist each broadcast build would re-run the
-    # canonical-entities aggregation over `linked`
-    mapping = surface_to_entity(linked, canon).persist()
+    mapping = surface_to_entity(linked, canon)
 
     nodes = canon.select(
         "entity_id", "canonical", "ent_type", "n_mentions", "n_surfaces"
@@ -114,7 +111,11 @@ def aggregate_edges(triples: DataFrame, mapping: DataFrame) -> DataFrame:
     # growing plan is re-analyzed at each of about ten calls, ~0.15 s
     # of driver time per build. Both endpoint joins read the same
     # `mapping` relation, so Catalyst's ReuseExchange builds and ships
-    # one broadcast for both
+    # one broadcast for both.
+    # spark.sql drops the temp views it registers for DataFrame
+    # arguments, and dropping a view uncaches its plan: a projection
+    # of `triples` keeps the caller's persisted `triples` cached
+    triples = triples.select("url", "sent_idx", "subj", "pred", "obj", "subj_type", "obj_type")
     return triples.sparkSession.sql(
         "SELECT src_entity_id, pred, dst_entity_id, sum(cnt) AS n_evidence FROM ("
         " SELECT /*+ BROADCAST(s, d) */ s.entity_id AS src_entity_id, t.pred,"

@@ -312,14 +312,18 @@ def connected_components(
     edges: DataFrame,
     max_iter: int = 12,
     driver_side_max_edges: int = 2_000_000,
-    mapping_only: bool = False,
 ) -> DataFrame:
     """Bounded label propagation: component = min vertex_id reachable.
+
+    Returns the remap rows (vertex_id, component) with component !=
+    vertex_id; a vertex without a row is its own component, so callers
+    left-join the result onto their vertices and coalesce a missing
+    component to vertex_id.
 
     Converges in O(diameter) rounds; alias clusters have tiny diameter
     (≤ 3), so `max_iter=12` is a hard safety bound, and the loop exits
     early on a converged round. Each round localCheckpoints to cut
-    lineage (SURVEY.md §7 hard part 5). Returns (vertex_id, component).
+    lineage (SURVEY.md §7 hard part 5).
 
     Iterative jobs pay per-stage scheduling overhead, so parallelism is
     sized to the data: the vertex set is counted once and the loop runs
@@ -328,15 +332,6 @@ def connected_components(
     distinct-surface vocabulary is orders of magnitude smaller than the
     corpus) this keeps each round a handful of tasks instead of
     shuffle.partitions-many near-empty ones.
-
-    ``mapping_only=True`` (round-4, VERDICT r3 #5): callers that will
-    left-join the result onto a vertex-bearing frame anyway (and
-    coalesce missing components to identity) don't need the complete
-    per-vertex labeling — this returns just the remap rows (component !=
-    vertex_id) on BOTH branches; the driver-side branch additionally
-    broadcast-hints them and never executes the vertices plan or the
-    identity join (two fewer jobs in the link stage). The result is only
-    valid under left-join + coalesce-to-identity.
     """
     spark = vertices.sparkSession
 
@@ -349,42 +344,21 @@ def connected_components(
     # distributed label-propagation loop below remains the fallback for
     # genuinely huge vocabularies.
     #
-    # The branch decision costs one count over the (persisted) pairs;
-    # the former extra vertices.count() is deferred to the distributed
-    # branch that actually needs it. NOTE: a limit(max+1).collect()
-    # "single action" variant was tried and reverted — when total rows
-    # stay under the limit (the common case), CollectLimitExec scans
-    # partitions in sequential scale-up rounds and is strictly slower
-    # than count + collect.
+    # The branch decision costs one count over the (persisted) pairs.
+    # NOTE: a limit(max+1).collect() "single action" variant was tried
+    # and reverted — when total rows stay under the limit (the common
+    # case), CollectLimitExec scans partitions in sequential scale-up
+    # rounds and is strictly slower than count + collect.
     n_edges = edges.count()
-    if n_edges == 0:
-        if mapping_only:
-            return F.broadcast(
-                spark.createDataFrame([], "vertex_id long, component long")
-            )
-        return vertices.select("vertex_id", F.col("vertex_id").alias("component"))
     if n_edges <= driver_side_max_edges:
         mapping = list(
             union_find(tuple(r) for r in edges.select("src", "dst").collect()).items()
         )
-        if mapping_only:
-            return F.broadcast(
-                spark.createDataFrame(mapping, "vertex_id long, component long")
-            )
-        map_df = spark.createDataFrame(mapping, "vertex_id long, mapped_component long")
-        return (
-            vertices.join(F.broadcast(map_df), "vertex_id", "left")
-            .select(
-                "vertex_id",
-                F.coalesce("mapped_component", "vertex_id").alias("component"),
-            )
-        )
+        return F.broadcast(spark.createDataFrame(mapping, "vertex_id long, component long"))
 
     # the vertex count is only needed to size the iterative loop's
     # partitioning — pay for it on the distributed branch only
     n_vertices = vertices.count()
-    if n_vertices == 0:
-        return vertices.select("vertex_id", F.col("vertex_id").alias("component"))
     max_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
     parts = max(1, min(n_vertices // 100_000 + 1, max_parts))
 
@@ -426,12 +400,7 @@ def connected_components(
         labels = new_labels
         if changed == 0:
             break
-    if mapping_only:
-        # Same contract as the driver-side branch (round-4 ADVICE):
-        # remap rows only — callers left-join and coalesce to identity,
-        # so identity rows are redundant weight in the result.
-        return labels.filter(F.col("component") != F.col("vertex_id"))
-    return labels
+    return labels.filter(F.col("component") != F.col("vertex_id"))
 
 
 def link_entities(mentions: DataFrame) -> DataFrame:
@@ -456,14 +425,9 @@ def link_vocab(vocab: DataFrame) -> DataFrame:
     # pairs feed both the edge count and the collect/propagation inside
     # connected_components — persist so the LSH self-join runs once
     pairs = score_pairs(candidate_pairs(banded)).persist()
-    # mapping_only: the left join + coalesce below completes partial
-    # remap rows to the identity labeling, so on the driver-side CC
-    # branch the vertices plan (a distinct over vocab) never executes.
-    components = connected_components(
-        vocab.select("vertex_id").distinct(),
-        pairs,
-        mapping_only=True,
-    )
+    # the vertices plan (a distinct over vocab) only executes on the
+    # distributed CC branch
+    components = connected_components(vocab.select("vertex_id").distinct(), pairs)
     # every branch of connected_components returns a frame that no
     # longer reads the pairs (a local mapping or checkpointed labels)
     pairs.unpersist()

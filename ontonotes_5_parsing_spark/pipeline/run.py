@@ -9,13 +9,14 @@ Two phases with distinct execution characters:
 - `build_graph`: mentions/triples → linked → nodes/edges. Eager. The
   graph phase works on the surface vocabulary, which stays roughly
   constant as the corpus grows, so one exact gate — the row count of
-  the persisted vocabulary — picks the engine: at or below
-  `DRIVER_GRAPH_MAX_ROWS` the vocabulary is collected and linked,
-  clustered and canonicalized in-process, and only the corpus-sized
-  edge aggregation runs in Spark; above it the distributed
-  `link_vocab`/`build_nodes_edges` path runs. Both give identical
-  linked/nodes/edges. One structured log line per call records the
-  branch and its counts.
+  the persisted vocabulary — picks both the engine and the planning
+  mode: at or below `DRIVER_GRAPH_MAX_ROWS` the vocabulary is collected
+  and linked, clustered and canonicalized in-process, and only the
+  corpus-sized edge aggregation runs in Spark, all under the static
+  plan; above it the distributed `link_vocab`/`build_nodes_edges` path
+  runs under the session's own adaptive-execution setting. Both give
+  identical linked/nodes/edges. One structured log line per call
+  records the branch and its counts.
 
 `run_pipeline` composes both. Every run mode runs this one stage graph;
 checkpointed mode (`work_dir` set) only changes how a stage is kept: it
@@ -70,16 +71,12 @@ def build_extraction(
     return {"sentences": sentences, "mentions": mentions, "triples": triples}
 
 
-# shared probe (pipeline/plansize.py); legacy names kept for tests/tools
-from .plansize import STATIC_PLAN_MAX_BYTES as _STATIC_PLAN_MAX_BYTES
-from .plansize import plan_size_bytes as _plan_size_bytes
-
-# Task-count right-sizing inside the static-plan scope: the scope's own
-# gate proves every shuffle in it is vocabulary-/postings-sized, so 32
-# shuffle partitions means mostly-empty tasks whose scheduling IS the
-# stage cost at bench scale. 8 matches what the CC loop already picks
-# for vocabulary-sized data (~1 partition per 100k vertices, min 1,
-# here bounded by parallelism). Results are partition-count-invariant.
+# Task-count right-sizing inside the static-plan scope: every shuffle
+# in it is vocabulary-/postings-sized, so 32 shuffle partitions means
+# mostly-empty tasks whose scheduling IS the stage cost. 8 matches what
+# the CC loop picks for vocabulary-sized data (~1 partition per 100k
+# vertices, min 1, here bounded by parallelism). Results are
+# partition-count-invariant.
 _STATIC_PLAN_SHUFFLE_PARTITIONS = 8
 
 
@@ -96,24 +93,18 @@ _aqe_scope_depth = 0
 
 
 @contextmanager
-def _static_plan_if_small(spark, probe: DataFrame):
-    """Run the enclosed actions without adaptive execution when the
-    probe input is small.
+def _static_plan(spark):
+    """Run the enclosed actions without adaptive execution.
 
-    Every shuffle in the graph phase is vocabulary-sized by
-    construction (the corpus-scale work — the mentions scan feeding the
-    salted vocab aggregation, the triples scan feeding the edge
-    aggregation — is map-side; what shuffles is per-key partials), so
-    AQE's runtime re-planning has nothing to optimize there, while its
-    mechanics cost one scheduled job per query stage: measured at
-    bench sf0.1, the link stage is 24 jobs/76 stages with AQE vs 8
-    jobs/29 stages without, identical results. Below a size threshold
-    the static plan wins outright; above it we keep AQE (its skew/
-    coalescing value on genuinely large inputs outweighs scheduling)."""
+    For work the caller knows to be small: the driver branch of
+    `build_graph` (an exact vocabulary count at or below
+    `DRIVER_GRAPH_MAX_ROWS`) and `q_jaccard_pairs` (the `documents`
+    table). Every shuffle there is vocabulary- or postings-sized by
+    construction, so AQE's runtime re-planning has nothing to optimize,
+    while its mechanics cost one scheduled job per query stage:
+    measured on a warm crawl build, 15 jobs per build with AQE vs 6
+    without, identical results."""
     global _aqe_scope_depth
-    if _plan_size_bytes(probe) > _STATIC_PLAN_MAX_BYTES:
-        yield
-        return
     with _aqe_scope_lock:
         _aqe_scope_depth += 1
         outermost = _aqe_scope_depth == 1
@@ -149,6 +140,16 @@ def _static_plan_if_small(spark, probe: DataFrame):
 # The in-process scoring grows with the candidate pairs (~0.1M at 5k);
 # the distributed path is mostly fixed scheduling cost until ~10k, and
 # the two meet between 10k and 15k.
+# Re-run at 10k-20k rows with the distributed branch under AQE, as it
+# runs now (10 numbers per sentence drawn from 10,000-34,999: 25-38
+# candidate pairs per surface), same host and timing:
+#   vocab rows       10k    15k    20k
+#   candidate pairs 254k   476k   758k
+#   driver s        2.48   3.15   4.73
+#   distributed s   5.30   5.88   7.26
+# The driver branch has got cheaper since the first sweep and now leads
+# through 20k; the gate stays where the first sweep put it until a
+# workload above it is benchmarked.
 DRIVER_GRAPH_MAX_ROWS = 10_000
 
 log = logging.getLogger(__name__)
@@ -157,27 +158,28 @@ log = logging.getLogger(__name__)
 def build_graph(mentions: DataFrame, triples: DataFrame) -> dict[str, DataFrame]:
     """mentions/triples → linked/nodes/edges.
 
-    Eager: the vocabulary is persisted and counted (the gate), then
-    either branch materializes nodes/edges inside the static-plan scope,
-    so the whole graph phase executes under one planning mode."""
+    Eager: the vocabulary is persisted and counted under the static
+    plan, and that one row count picks the branch. The driver branch
+    materializes edges inside the same scope; the distributed branch
+    runs after it closes, under the session's adaptive-execution
+    setting, and materializes linked/nodes/edges there."""
     spark = mentions.sparkSession
-    with _static_plan_if_small(spark, mentions):
+    with _static_plan(spark):
         vocab = surface_vocab(mentions).persist()
         n_vocab = vocab.count()
-        if n_vocab <= DRIVER_GRAPH_MAX_ROWS:
-            branch = "driver"
+        branch = "driver" if n_vocab <= DRIVER_GRAPH_MAX_ROWS else "distributed"
+        if branch == "driver":
             out, counts = _driver_graph(vocab, triples)
-        else:
-            branch = "distributed"
-            counts = dict.fromkeys(("candidate_pairs", "accepted_pairs", "dropped_keys"))
-            linked = link_vocab(vocab).persist()
-            nodes, edges = build_nodes_edges(triples, linked)
-            out = {"linked": linked, "nodes": nodes.persist(), "edges": edges.persist()}
-            out["edges"].count()
-            out["nodes"].count()
-            # counting nodes and edges filled linked's cache; the caller
-            # unpersists only the frames returned
-            vocab.unpersist()
+    if branch == "distributed":
+        counts = dict.fromkeys(("candidate_pairs", "accepted_pairs", "dropped_keys"))
+        linked = link_vocab(vocab).persist()
+        nodes, edges = build_nodes_edges(triples, linked)
+        out = {"linked": linked, "nodes": nodes.persist(), "edges": edges.persist()}
+        out["edges"].count()
+        out["nodes"].count()
+        # counting nodes and edges filled linked's cache; the caller
+        # unpersists only the frames returned
+        vocab.unpersist()
     # counts the distributed branch does not compute are logged as null
     log.info("build_graph %s", json.dumps({"branch": branch, "vocab_rows": n_vocab, **counts}))
     return out

@@ -241,6 +241,23 @@ def cache_is_empty(spark) -> bool:
 
 
 @pytest.mark.parametrize("gate", [None, 0], ids=["driver", "distributed"])
+def test_build_graph_keeps_the_callers_caches(spark, monkeypatch, gate):
+    """build_graph leaves the extraction frames it was handed cached:
+    `storageLevel` asks the session's cache manager, so it reads NONE
+    once something has uncached a frame's plan."""
+    from pyspark import StorageLevel
+
+    if gate is not None:
+        monkeypatch.setattr(run, "DRIVER_GRAPH_MAX_ROWS", gate)
+    out = run.build_extraction(corpus.web_pages_df(spark, 40, seed=3))
+    levels = {k: df.storageLevel for k, df in out.items()}
+    assert StorageLevel.NONE not in levels.values()
+    run.build_graph(out["mentions"], out["triples"])
+    assert {k: df.storageLevel for k, df in out.items()} == levels
+    spark.catalog.clearCache()
+
+
+@pytest.mark.parametrize("gate", [None, 0], ids=["driver", "distributed"])
 def test_graph_phase_leaves_nothing_cached(spark, monkeypatch, tmp_path, gate):
     """Once the caller unpersists every frame it was handed, no cache
     is left behind: build_graph on both branches, link_entities, and a

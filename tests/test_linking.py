@@ -1,6 +1,8 @@
 """Entity linking + canonicalization + graph materialization."""
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from ontonotes_5_parsing_spark import corpus
@@ -12,6 +14,7 @@ from ontonotes_5_parsing_spark.pipeline.linking import (
     connected_components,
     link_entities,
     score_pairs,
+    union_find,
 )
 
 
@@ -71,14 +74,24 @@ def test_node_mention_mass_conserved(out):
     assert node_sum == total_mentions
 
 
+def component_labels(vertices, edges, **kwargs) -> dict[int, int]:
+    """vertex_id → component: connected_components' remap rows, left
+    joined onto the vertices with a missing component coalesced to the
+    vertex itself."""
+    remap = connected_components(vertices, edges, **kwargs)
+    return {
+        r.vertex_id: r.component
+        for r in vertices.join(remap, "vertex_id", "left")
+        .select("vertex_id", F.coalesce("component", "vertex_id").alias("component"))
+        .collect()
+    }
+
+
 def test_connected_components_chain(spark):
     # A-B, B-C, D alone → components {A,B,C} and {D}
     vertices = spark.createDataFrame([(1,), (2,), (3,), (4,)], ["vertex_id"])
     edges = spark.createDataFrame([(2, 1), (3, 2)], ["src", "dst"])
-    labels = {
-        r.vertex_id: r.component
-        for r in connected_components(vertices, edges).collect()
-    }
+    labels = component_labels(vertices, edges)
     assert labels[1] == labels[2] == labels[3] == 1
     assert labels[4] == 4
 
@@ -102,10 +115,6 @@ def test_distributed_label_propagation_matches_union_find(spark):
     path) by setting the driver-side threshold to 0 and assert it
     reaches the identical component fixpoint as the union-find path on
     graphs with chains, cycles, stars, and isolated vertices."""
-    from pyspark.sql import functions as F
-
-    from ontonotes_5_parsing_spark.pipeline.linking import connected_components
-
     edges = spark.createDataFrame(
         [
             (1, 2), (2, 3), (3, 4),          # chain
@@ -119,18 +128,46 @@ def test_distributed_label_propagation_matches_union_find(spark):
         [(v,) for v in [1, 2, 3, 4, 10, 11, 12, 20, 21, 22, 23, 30, 31, 99]],
         "vertex_id long",
     )
-    uf = {
-        r.vertex_id: r.component
-        for r in connected_components(verts, edges).collect()
-    }
-    lp = {
-        r.vertex_id: r.component
-        for r in connected_components(
-            verts, edges, driver_side_max_edges=0
-        ).collect()
-    }
+    uf = component_labels(verts, edges)
+    lp = component_labels(verts, edges, driver_side_max_edges=0)
     assert lp == uf
     assert uf[4] == 1 and uf[12] == 10 and uf[23] == 20 and uf[99] == 99
+
+
+# Vertex-id stride between examples: more than any example's vertices.
+STRIDE = 16
+
+
+@st.composite
+def edge_sets(draw):
+    """(n, edges) over vertices 0..n-1, n ≤ 12: duplicate, reversed and
+    self edges may repeat, and vertices no edge touches stay isolated."""
+    n = draw(st.integers(1, 12))
+    vertex = st.integers(0, n - 1)
+    return n, draw(st.lists(st.tuples(vertex, vertex), max_size=2 * n))
+
+
+@given(st.lists(edge_sets(), min_size=100, max_size=100))
+@settings(max_examples=3, deadline=None)
+def test_label_propagation_matches_union_find_on_random_edge_sets(spark, examples):
+    """The distributed label propagation returns the remap union_find
+    computes, on 100 random edge sets at a time. Each example is
+    shifted into its own vertex-id range, so one
+    `connected_components(..., driver_side_max_edges=0)` call covers
+    all of them. An example has at most 12 vertices, so no component's
+    diameter exceeds the `max_iter=12` rounds the loop is bounded by."""
+    vertices, edges = [], []
+    for i, (n, pairs) in enumerate(examples):
+        base = i * STRIDE
+        vertices += [(base + v,) for v in range(n)]
+        edges += [(base + a, base + b) for a, b in pairs]
+    remap = connected_components(
+        spark.createDataFrame(vertices, "vertex_id long"),
+        spark.createDataFrame(edges, "src long, dst long"),
+        driver_side_max_edges=0,
+    )
+    got = {r.vertex_id: r.component for r in remap.collect()}
+    assert got == union_find(edges)
 
 
 def test_salted_vocab_counts_exact_under_extreme_skew(spark):

@@ -1,38 +1,42 @@
-"""Contracts for the round-4 graph-phase scheduling cuts.
+"""Contracts for the graph-phase scheduling cuts.
 
-1. ``_static_plan_if_small`` disables AQE only inside the scope, only
-   when the probe input's Catalyst size estimate is under the
-   threshold, and always restores the prior setting (even on error).
-2. ``connected_components(mapping_only=True)`` returns only the remap
-   rows on the driver-side branch, and the caller-side left join +
-   coalesce reconstructs the exact complete labeling.
+1. ``_static_plan`` disables AQE only inside the scope and always
+   restores the prior setting (even on error). ``build_graph`` opens it
+   for the vocabulary count and the driver branch only: the distributed
+   branch runs under the session's own setting.
+2. ``connected_components`` returns only the remap rows on both
+   branches, and the caller-side left join + coalesce reconstructs the
+   complete labeling.
 """
 
 import pytest
 from pyspark.sql import functions as F
 
 from ontonotes_5_parsing_spark.pipeline.linking import connected_components
-from ontonotes_5_parsing_spark.pipeline.run import (
-    _STATIC_PLAN_MAX_BYTES,
-    _plan_size_bytes,
-    _static_plan_if_small,
-)
+from ontonotes_5_parsing_spark.pipeline.run import _static_plan
+
+
+def labeling(vertices, remap):
+    """The complete (vertex_id, component) labeling from remap rows."""
+    return {
+        (r.vertex_id, r.component)
+        for r in vertices.join(remap, "vertex_id", "left")
+        .withColumn("component", F.coalesce("component", "vertex_id"))
+        .collect()
+    }
 
 
 def test_static_plan_disables_and_restores_aqe(spark):
-    df = spark.range(10)
-    assert _plan_size_bytes(df) <= _STATIC_PLAN_MAX_BYTES
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    with _static_plan_if_small(spark, df):
+    with _static_plan(spark):
         assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
 def test_static_plan_restores_on_error(spark):
-    df = spark.range(10)
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     with pytest.raises(RuntimeError):
-        with _static_plan_if_small(spark, df):
+        with _static_plan(spark):
             raise RuntimeError("boom")
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
@@ -54,14 +58,14 @@ def test_static_plan_failing_conf_set_leaves_aqe_as_it_was(spark, monkeypatch):
 
     monkeypatch.setattr(conf, "set", flaky_set)
     with pytest.raises(RuntimeError, match="conf.set failed"):
-        with _static_plan_if_small(spark, spark.range(10)):
+        with _static_plan(spark):
             pass
     monkeypatch.undo()
     assert failed
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
     assert spark.conf.get("spark.sql.shuffle.partitions") == parts
     # the depth counter unwound too: the next scope toggles again
-    with _static_plan_if_small(spark, spark.range(10)):
+    with _static_plan(spark):
         assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
 
 
@@ -79,19 +83,10 @@ def test_static_plan_unparsable_partitions_changes_nothing(spark, monkeypatch):
 
     monkeypatch.setattr(conf, "get", get)
     with pytest.raises(ValueError):
-        with _static_plan_if_small(spark, spark.range(10)):
+        with _static_plan(spark):
             pass
     monkeypatch.undo()
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-
-
-def test_static_plan_noop_when_probe_is_large(spark, monkeypatch):
-    import ontonotes_5_parsing_spark.pipeline.run as run
-
-    monkeypatch.setattr(run, "_plan_size_bytes", lambda _df: 1 << 62)
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    with run._static_plan_if_small(spark, spark.range(10)):
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
 def test_static_plan_concurrent_scopes_never_strand_aqe_off(spark):
@@ -101,13 +96,12 @@ def test_static_plan_concurrent_scopes_never_strand_aqe_off(spark):
     import threading
 
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    df = spark.range(10)
     inside = []
     errs = []
 
     def worker():
         try:
-            with _static_plan_if_small(spark, df):
+            with _static_plan(spark):
                 inside.append(spark.conf.get("spark.sql.adaptive.enabled"))
         except Exception as exc:  # noqa: BLE001
             errs.append(exc)
@@ -126,78 +120,55 @@ def test_static_plan_nested_scopes_same_thread(spark):
     """Nesting (run_pipeline's checkpointed path) must not deadlock and
     must restore only at the outermost exit."""
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    df = spark.range(10)
-    with _static_plan_if_small(spark, df):
-        with _static_plan_if_small(spark, df):
+    with _static_plan(spark):
+        with _static_plan(spark):
             assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
         assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
 def test_mapping_only_distributed_branch_filters_identity_rows(spark):
-    """Branch-consistent contract (round-4 ADVICE): with the driver-side
-    gate forced off, the distributed loop must also return remap rows
-    only, and left-join + coalesce reconstructs the complete labeling."""
+    """Branch-consistent contract: with the driver-side gate forced off,
+    the distributed loop also returns remap rows only, and left-join +
+    coalesce reconstructs the complete labeling."""
     vertices = spark.createDataFrame([(i,) for i in range(1, 7)], ["vertex_id"])
     edges = spark.createDataFrame([(1, 2), (2, 3), (4, 5)], ["src", "dst"])
-    remap = connected_components(
-        vertices, edges, mapping_only=True, driver_side_max_edges=0
-    )
+    remap = connected_components(vertices, edges, driver_side_max_edges=0)
     rows = {(r.vertex_id, r.component) for r in remap.collect()}
-    assert all(v != c for v, c in rows)
-    reconstructed = {
-        (r.vertex_id, r.component)
-        for r in vertices.join(remap, "vertex_id", "left")
-        .withColumn("component", F.coalesce("component", "vertex_id"))
-        .collect()
-    }
-    assert reconstructed == {(1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (6, 6)}
+    assert rows == {(2, 1), (3, 1), (5, 4)}
+    assert labeling(vertices, remap) == {(1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (6, 6)}
 
 
 def test_mapping_only_matches_complete_labeling(spark):
+    """The driver-side branch: the same remap rows as the distributed
+    loop, and the same complete labeling after the left join."""
     # two components {1,2,3} and {4,5}; 6 is isolated
-    vertices = spark.createDataFrame(
-        [(i,) for i in range(1, 7)], ["vertex_id"]
-    )
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (4, 5)], ["src", "dst"]
-    )
-    complete = {
-        (r.vertex_id, r.component)
-        for r in connected_components(vertices, edges).collect()
-    }
-    remap = connected_components(vertices, edges, mapping_only=True)
+    vertices = spark.createDataFrame([(i,) for i in range(1, 7)], ["vertex_id"])
+    edges = spark.createDataFrame([(1, 2), (2, 3), (4, 5)], ["src", "dst"])
+    remap = connected_components(vertices, edges)
+    distributed = connected_components(vertices, edges, driver_side_max_edges=0)
     # remap-only: no identity row for the isolated vertex 6
     remap_rows = {(r.vertex_id, r.component) for r in remap.collect()}
+    assert remap_rows == {(r.vertex_id, r.component) for r in distributed.collect()}
     assert (6, 6) not in remap_rows
-    reconstructed = {
-        (r.vertex_id, r.component)
-        for r in vertices.join(remap, "vertex_id", "left")
-        .withColumn("component", F.coalesce("component", "vertex_id"))
-        .collect()
-    }
-    assert reconstructed == complete == {
-        (1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (6, 6)
-    }
+    assert labeling(vertices, remap) == {(1, 1), (2, 1), (3, 1), (4, 4), (5, 4), (6, 6)}
 
 
 def test_mapping_only_no_edges(spark):
     vertices = spark.createDataFrame([(1,), (2,)], ["vertex_id"])
     edges = spark.createDataFrame([], "src long, dst long")
-    remap = connected_components(vertices, edges, mapping_only=True)
+    remap = connected_components(vertices, edges)
     assert remap.count() == 0
     assert remap.columns == ["vertex_id", "component"]
+    assert labeling(vertices, remap) == {(1, 1), (2, 2)}
 
 
 def test_build_graph_identical_with_gate_forced_noop(spark, monkeypatch):
-    """The untested half of the static-plan gate (round-4 VERDICT #3):
-    above the size threshold the scope must no-op — AQE stays ON — and
-    the graph phase must produce IDENTICAL linked/nodes/edges either
-    way. The second run also forces the vocabulary gate to 0, so this
-    compares the driver branch of the graph phase with the distributed
-    one on the sf0.001 pages.
-    Forcing the gate low on a real corpus exercises exactly the plan the
-    5M+-page deployment would run."""
+    """The vocabulary gate forced to 0 sends the sf0.001 pages through
+    the distributed branch, which runs under the session's AQE setting;
+    linked/nodes/edges must be IDENTICAL to the driver branch's, and
+    AQE must be back on afterwards. Forcing the gate low on a real
+    corpus exercises exactly the plan a large deployment would run."""
     import ontonotes_5_parsing_spark.pipeline.run as run
     from ontonotes_5_parsing_spark.corpus import web_pages_from_documents
 
@@ -213,16 +184,45 @@ def test_build_graph_identical_with_gate_forced_noop(spark, monkeypatch):
         }
 
     spark.conf.set("spark.sql.adaptive.enabled", "true")
-    with_scope = graph_outputs()
-    monkeypatch.setattr(run, "_plan_size_bytes", lambda _df: 1 << 62)
-    # also force the vocabulary gate to the distributed branch — the
-    # large-input regime must hold end to end
+    driver = graph_outputs()
     monkeypatch.setattr(run, "DRIVER_GRAPH_MAX_ROWS", 0)
     spark.catalog.clearCache()
-    without_scope = graph_outputs()
+    distributed = graph_outputs()
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    assert with_scope == without_scope
-    assert all(len(rows) > 0 for _cols, rows in without_scope.values())
+    assert driver == distributed
+    assert all(len(rows) > 0 for _cols, rows in distributed.values())
+
+
+@pytest.mark.parametrize(
+    "gate, spied, planned",
+    [(None, "link_collected", "false"), (0, "link_vocab", "true")],
+    ids=["driver", "distributed"],
+)
+def test_build_graph_plans_each_branch_by_the_vocabulary_count(
+    spark, monkeypatch, gate, spied, planned
+):
+    """One count picks the planning mode: the driver branch runs under
+    the static plan (AQE off), the distributed branch under the
+    session's own setting (on here), and the setting is restored."""
+    import ontonotes_5_parsing_spark.pipeline.run as run
+    from ontonotes_5_parsing_spark import corpus
+
+    if gate is not None:
+        monkeypatch.setattr(run, "DRIVER_GRAPH_MAX_ROWS", gate)
+    seen = []
+    real = getattr(run, spied)
+
+    def spy(*args, **kwargs):
+        seen.append(spark.conf.get("spark.sql.adaptive.enabled"))
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(run, spied, spy)
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    out = run.build_extraction(corpus.web_pages_df(spark, 20, seed=5))
+    run.build_graph(out["mentions"], out["triples"])
+    spark.catalog.clearCache()
+    assert seen == [planned]
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
 def test_nodes_edges_broadcast_exchange_is_reused(spark):

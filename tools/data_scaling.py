@@ -6,10 +6,7 @@ check; this re-runs the full DAG on HEAD at two corpus sizes with the
 SAME local[8] resources in fresh spark-submit JVMs and reports:
 
 - per-triple wall cost at each size (flat cost == linear data scaling;
-  the driver-instruction criterion is ~10%),
-- the Catalyst size estimate of the mentions input at each size, and
-  whether the static-plan scope engages (<= 512 MiB) or no-ops (AQE
-  stays ON) — evidencing the untested half of the gate on real data.
+  the driver-instruction criterion is ~10%).
 
 Usage: python tools/data_scaling.py [--sizes 100000,400000] [--cores 8]
 Prints one JSON line per size plus a summary line.
@@ -38,29 +35,6 @@ def materialize(n_pages: int) -> str:
     write_web_pages_parquet(spark, n_pages, path)
     spark.stop()
     return path
-
-
-def probe_gate(pages_parquet: str) -> dict:
-    """Catalyst size estimate of the mentions plan + gate decision,
-    in-process (no actions run)."""
-    sys.path.insert(0, REPO)
-    from ontonotes_5_parsing_spark.corpus import read_web_pages
-    from ontonotes_5_parsing_spark.pipeline.plansize import (
-        STATIC_PLAN_MAX_BYTES,
-        plan_size_bytes,
-    )
-    from ontonotes_5_parsing_spark.pipeline.run import build_extraction
-    from ontonotes_5_parsing_spark.session import get_spark
-
-    spark = get_spark(app_name="gate_probe", master="local[2]")
-    out = build_extraction(read_web_pages(spark, pages_parquet))
-    est = plan_size_bytes(out["mentions"])
-    spark.stop()
-    return {
-        "mentions_size_estimate_bytes": est,
-        "gate_bytes": STATIC_PLAN_MAX_BYTES,
-        "static_plan_engages": est <= STATIC_PLAN_MAX_BYTES,
-    }
 
 
 def spark_run(pages_parquet: str, cores: int, repeat: int) -> dict:
@@ -94,7 +68,6 @@ def main() -> int:
     results = {}
     for n in sizes:
         path = materialize(n)
-        gate = probe_gate(path)
         run = spark_run(path, args.cores, args.repeat)
         n_triples = run["stages"]["triples"]
         rec = {
@@ -106,7 +79,6 @@ def main() -> int:
                 1e6 * run["triples_wall_sec"] / n_triples, 3
             ),
             "stages": run["stages"],
-            **gate,
         }
         results[n] = rec
         print(json.dumps(rec))
