@@ -32,28 +32,6 @@ HEADLINE = [
     "evt_sessionize",
 ]
 
-# Calm-window bests at sf0.1 local[32] (BENCH/BASELINE.md round-4
-# records). Used only as refinement floors: a query measuring within
-# FLOOR_SLACK of its floor is considered steal-free and not re-run.
-# Round-5: the link and jaccard floors were stale (2.40 vs calm 1.33),
-# so the steal-recovery loop declared victory ~2× above calm — exactly
-# the two entries that dominated the BENCH_r04 driver-vs-calm gap.
-FLOORS = {
-    "kg_pipeline": 4.0,  # triples + link_canonicalize combined (0.91+3.08)
-    "rel_pricing_summary": 0.27,
-    "rel_shipping_priority": 0.67,
-    "rel_local_supplier_volume": 0.88,
-    "win_customer_running_spend": 0.15,
-    "txt_token_stats": 0.16,
-    "txt_vocab_reduce": 0.32,
-    "dedup_jaccard_pairs": 1.35,
-    "dedup_minhash_md5_buckets": 0.70,
-    "ann_cosine_topk": 0.63,
-    "evt_sessionize": 0.21,
-}
-FLOOR_SLACK = 1.3
-
-
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -104,8 +82,6 @@ def main() -> int:
     )
     web_pages_from_documents(spark, sf_dir).write.mode("overwrite").parquet(pages_path)
 
-    t_start = time.time()
-
     kg_extract_sec = kg_link_sec = float("inf")
     kg_stats = {}
 
@@ -152,43 +128,6 @@ def main() -> int:
             best = min(best, time.time() - t0)
             reps_done += 1
         timings[name] = round(best, 3)
-
-    # --- steal-recovery refinement: the sandbox's CPU steal can triple a
-    # single window's timings (the round-2 driver run did exactly that);
-    # spend any leftover wall budget re-running whichever entry is
-    # furthest above its calm-window floor, keeping the min. Monotonic:
-    # timings only ever improve. SPARK_GRAFT_BENCH_BUDGET caps total
-    # bench wall seconds so the driver run always terminates promptly.
-    budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "300"))
-    # under heavy steal the mandatory passes alone can eat the budget —
-    # guarantee at least 120 s of refinement runway, since that is
-    # exactly the window where refinement recovers the most
-    deadline = max(t_start + budget, time.time() + 120.0)
-
-    def worst_entry():
-        ratios = []
-        kg_now = timings["kg_pipeline_triples"] + timings["kg_pipeline_link_canonicalize"]
-        ratios.append(("kg_pipeline", kg_now / FLOORS["kg_pipeline"]))
-        for n in HEADLINE:
-            ratios.append((n, timings[n] / FLOORS[n]))
-        name, ratio = max(ratios, key=lambda x: x[1])
-        return (name, ratio) if ratio > FLOOR_SLACK else (None, ratio)
-
-    while time.time() < deadline:
-        name, _ratio = worst_entry()
-        if name is None:
-            break
-        if name == "kg_pipeline":
-            kg_rep()
-            timings["kg_pipeline_triples"] = round(kg_extract_sec, 3)
-            timings["kg_pipeline_link_canonicalize"] = round(kg_link_sec, 3)
-        else:
-            fn, _sql = ALL_QUERIES[name]
-            _dedup._JACCARD_CACHE.clear()
-            gc.collect()
-            t0 = time.time()
-            fn(spark, sf_dir).count()
-            timings[name] = round(min(timings[name], time.time() - t0), 3)
 
     total = round(sum(timings.values()), 3)
     kg_sec = kg_extract_sec + kg_link_sec

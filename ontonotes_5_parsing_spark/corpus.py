@@ -18,8 +18,6 @@ page — the corpus-level statement of the per-row invariant.
 from __future__ import annotations
 
 import html as _html
-import json
-import os
 import random
 from datetime import datetime, timedelta
 from typing import Iterable, List
@@ -156,83 +154,16 @@ def generate_pages(doc_ids: Iterable[int], seed: int = 42) -> pd.DataFrame:
 _DOCS_PER_TASK = 512
 
 
-def _task_partitions(spark, n_rows: int) -> int:
+def _task_partitions(spark, n_rows: int | None) -> int:
     """clamp(rows/_DOCS_PER_TASK, cores, 4×cores): one task wave at
-    small scale, bounded per-task memory + skew smoothing at large."""
+    small scale, bounded per-task memory + skew smoothing at large.
+    4 tasks per core when the row count is unknown (unreadable
+    parquet footers)."""
+    if n_rows is None:
+        return max(spark.sparkContext.defaultParallelism * 4, 4)
     cores = max(spark.sparkContext.defaultParallelism, 4)
     want = max(1, -(-n_rows // _DOCS_PER_TASK))
     return max(cores, min(want, cores * 4))
-
-
-def _hidden(name: str) -> bool:
-    """Names Spark's file listing skips: a leading `.`, or a leading `_`
-    outside a key=value partition name (`_temporary`, `_SUCCESS`)."""
-    return name.startswith(".") or (name.startswith("_") and "=" not in name)
-
-
-def _parquet_footers(path: str) -> dict | None:
-    """Footer metadata of every parquet file Spark would read at `path`,
-    by file path — driver-side, no Spark job (the Iceberg analog is a
-    snapshot's manifest). None if any footer cannot be read."""
-    try:
-        import pyarrow.parquet as pq
-
-        if not os.path.isdir(path):
-            return {path: pq.read_metadata(path)}
-        footers = {}
-        # os.walk, not listdir: partitioned tables nest part files
-        # under key=value subdirectories
-        for root, dirs, files in os.walk(path):
-            dirs[:] = [d for d in dirs if not _hidden(d)]
-            for f in files:
-                if f.endswith(".parquet") and not _hidden(f):
-                    footers[os.path.join(root, f)] = pq.read_metadata(os.path.join(root, f))
-        return footers
-    except Exception:  # noqa: BLE001 — a hint only; callers fall back to Spark
-        return None
-
-
-def _parquet_num_rows(path: str) -> int | None:
-    """Row count from parquet footer metadata, without a Spark job."""
-    footers = _parquet_footers(path)
-    return None if footers is None else sum(m.num_rows for m in footers.values())
-
-
-_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
-
-
-def _footer_schema(path: str, footers: dict):
-    """The schema `spark.read.parquet(path)` infers, read off the
-    footers: the Spark schema a Spark writer stores in the key-value
-    metadata (Spark's inference reads it first), else the Arrow schema
-    converted. None where inference could differ: no files, files that
-    disagree, partition columns (they come from key=value directory
-    names), a naive timestamp (Spark infers INT96 as TIMESTAMP but
-    INT64 as TIMESTAMP_NTZ), or an Arrow type with no Spark type."""
-    import pyarrow as pa
-    from pyspark.sql import types as T
-    from pyspark.sql.pandas.types import from_arrow_schema
-
-    schemas = []
-    for f, meta in footers.items():
-        if os.sep in os.path.relpath(f, path):
-            return None
-        spark_json = (meta.metadata or {}).get(_SPARK_ROW_METADATA)
-        if spark_json is not None:
-            schemas.append(T.StructType.fromJson(json.loads(spark_json)))
-            continue
-        try:
-            arrow = meta.schema.to_arrow_schema()
-            schema = from_arrow_schema(arrow)
-        except (TypeError, pa.ArrowException):
-            return None
-        # the two differ exactly where a naive timestamp is, at any depth
-        if schema != from_arrow_schema(arrow, prefer_timestamp_ntz=True):
-            return None
-        schemas.append(schema)
-    if not schemas or any(s != schemas[0] for s in schemas):
-        return None
-    return schemas[0]
 
 
 def web_pages_df(spark, n_pages: int, seed: int = 42, partitions: int | None = None):
@@ -264,21 +195,16 @@ def write_web_pages_parquet(spark, n_pages: int, path: str, seed: int = 42) -> N
 
 
 def read_web_pages(spark, path: str):
-    """Read a materialized web_pages table, repartitioned for the Arrow
-    UDF stages (html is ~3 KB/row; the default 128 MB scan splits give
-    far fewer partitions than cores). The parquet footers give the task
-    count (from the row count) and the schema, so the read plans
-    without a Spark job; where they cannot, Spark infers the schema in
-    one job as usual."""
-    footers = _parquet_footers(path)
-    parallelism = (
-        _task_partitions(spark, sum(m.num_rows for m in footers.values()))
-        if footers is not None
-        else max(spark.sparkContext.defaultParallelism * 4, 4)
-    )
-    schema = _footer_schema(path, footers) if footers is not None else None
-    reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(path).repartition(parallelism)
+    """Read a materialized web_pages table with its declared schema,
+    repartitioned for the Arrow UDF stages (html is ~3 KB/row; the
+    default 128 MB scan splits give far fewer partitions than cores).
+    The parquet footers give the task count (from the row count), so
+    the read plans without a Spark job."""
+    from .pipeline.lineage import parquet_num_rows
+    from .pipeline.schemas import WEB_PAGES_SCHEMA
+
+    return spark.read.schema(WEB_PAGES_SCHEMA).parquet(path).repartition(
+        _task_partitions(spark, parquet_num_rows(path)))
 
 
 def web_pages_from_documents(spark, sf_dir: str, seed: int = 42):
@@ -287,6 +213,7 @@ def web_pages_from_documents(spark, sf_dir: str, seed: int = 42):
     page. Keeps entry()/bench anchored on the driver's tables while the
     page content stays lexicon-deterministic.
     """
+    from .pipeline.lineage import parquet_num_rows
     from .pipeline.schemas import WEB_PAGES_SCHEMA
 
     # a single parquet file scans as ONE partition — repartition the ids
@@ -294,16 +221,10 @@ def web_pages_from_documents(spark, sf_dir: str, seed: int = 42):
     # parallelizes across the cluster; task count sized from the parquet
     # footer row count (metadata only, no extra job)
     path = f"{sf_dir}/documents.parquet"
-    n = _parquet_num_rows(path)
-    parallelism = (
-        _task_partitions(spark, n)
-        if n is not None
-        else max(spark.sparkContext.defaultParallelism * 4, 4)
-    )
     docs = (
         spark.read.parquet(path)
         .select("doc_id")
-        .repartition(parallelism, "doc_id")
+        .repartition(_task_partitions(spark, parquet_num_rows(path)), "doc_id")
     )
 
     def gen(batches):

@@ -88,7 +88,8 @@ def merged_counts(spark: SparkSession, work_dir: str) -> DataFrame:
     )
     if not batch_dirs:
         raise ValueError(f"no completed batch partials under {root}")
-    partials = spark.read.parquet(*batch_dirs)
+    # every partial has the schema of partial_mention_counts
+    partials = spark.read.schema(lineage.stage_schema(batch_dirs[0])).parquet(*batch_dirs)
     return partials.groupBy("surface", "ent_type").agg(
         F.sum("cnt").alias("n_mentions"),
         F.countDistinct("batch_id").alias("n_batches"),

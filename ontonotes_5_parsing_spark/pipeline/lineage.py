@@ -1,8 +1,12 @@
 """Per-stage lineage manifests + checkpoint-resume (BASELINE.json:14).
 
 Every materialized stage writes parquet plus a `_lineage.json` manifest
-(stage name, row count, schema, per-file row counts, wall time). Resume
-is relational: the still-to-do inputs are
+(stage name, row count, schema, per-file row counts, wall time). The
+manifest is read off what the build already knows: the frame's own
+schema and the parquet footers of the files just written, so writing
+it starts no Spark job, and a completed stage is re-read with the
+schema it stores. This module is the package's one reader of parquet
+footers. Resume is relational: the still-to-do inputs are
 ``input.join(done_urls, "url", "left_anti")`` — the Spark mapping of the
 reference's files_with_errors bookkeeping
 (/root/reference/ontonotes5_to_json.py:80,106-107,145-151) generalized
@@ -12,6 +16,7 @@ Iceberg note: on a cluster these writes become
 ``df.writeTo("catalog.db.<stage>").append()`` with identical schemas;
 the sandbox has no Iceberg runtime jar, so the format-agnostic
 `materialize` falls back to partitioned parquet (SURVEY.md §7 M0).
+Iceberg keeps the same per-file record counts in its manifests.
 """
 
 from __future__ import annotations
@@ -21,7 +26,7 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 MANIFEST_NAME = "_lineage.json"
 
@@ -32,6 +37,41 @@ def manifest_path(stage_dir: str) -> str:
 
 def is_complete(stage_dir: str) -> bool:
     return os.path.exists(manifest_path(stage_dir))
+
+
+def _hidden(name: str) -> bool:
+    """Names Spark's file listing skips: a leading `.`, or a leading `_`
+    outside a key=value partition name (`_temporary`, `_SUCCESS`)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def parquet_footers(path: str) -> dict | None:
+    """Footer metadata of every parquet file Spark would read at `path`,
+    by file path — driver-side, no Spark job (the Iceberg analog is a
+    snapshot's manifest). None if any footer cannot be read."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    try:
+        if not os.path.isdir(path):
+            return {path: pq.read_metadata(path)}
+        footers = {}
+        # os.walk, not listdir: partitioned tables nest part files
+        # under key=value subdirectories
+        for root, dirs, files in os.walk(path):
+            dirs[:] = [d for d in dirs if not _hidden(d)]
+            for f in files:
+                if f.endswith(".parquet") and not _hidden(f):
+                    footers[os.path.join(root, f)] = pq.read_metadata(os.path.join(root, f))
+        return footers
+    except (OSError, pa.ArrowException):  # callers decide what a missing footer means
+        return None
+
+
+def parquet_num_rows(path: str) -> int | None:
+    """Row count from parquet footer metadata, without a Spark job."""
+    footers = parquet_footers(path)
+    return None if footers is None else sum(m.num_rows for m in footers.values())
 
 
 def materialize(
@@ -45,7 +85,11 @@ def materialize(
 
     Re-reading from parquet pins the stage boundary: downstream plans
     start from a fresh scan (column pruning / predicate pushdown apply)
-    instead of dragging the full upstream lineage along.
+    instead of dragging the full upstream lineage along. The write is
+    the only Spark job: the re-read takes `df`'s schema and the manifest
+    takes its row counts from the written files' footers. The manifest
+    is written last, and atomically, so a stage dir without one (a run
+    stopped after the parquet write) is rebuilt on resume.
     """
     spark = df.sparkSession
     t0 = time.time()
@@ -53,16 +97,14 @@ def materialize(
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(stage_dir)
-    out = spark.read.parquet(stage_dir)
-    per_file = {
-        r["file"]: r["rows"]
-        for r in out.groupBy(F.input_file_name().alias("file"))
-        .agg(F.count(F.lit(1)).alias("rows"))
-        .collect()
-    }
+    out = spark.read.schema(df.schema).parquet(stage_dir)
+    footers = parquet_footers(stage_dir)
+    if footers is None:
+        raise RuntimeError(f"cannot read the parquet footers under {stage_dir}; no manifest written")
+    per_file = {f: m.num_rows for f, m in footers.items()}
     manifest = {
         "stage": stage_name,
-        "rows": int(sum(per_file.values())),
+        "rows": sum(per_file.values()),
         "n_files": len(per_file),
         "per_file_rows": per_file,
         "schema": out.schema.jsonValue(),
@@ -70,13 +112,21 @@ def materialize(
         "wall_sec": round(time.time() - t0, 3),
         "finished_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
     }
-    with open(manifest_path(stage_dir), "w") as fh:
+    tmp = manifest_path(stage_dir) + ".tmp"
+    with open(tmp, "w") as fh:
         json.dump(manifest, fh, indent=2, sort_keys=True)
+    os.replace(tmp, manifest_path(stage_dir))
     return out
 
 
+def stage_schema(stage_dir: str) -> T.StructType:
+    """The schema a completed stage's manifest stores."""
+    return T.StructType.fromJson(read_manifest(stage_dir)["schema"])
+
+
 def load_stage(spark: SparkSession, stage_dir: str) -> DataFrame:
-    return spark.read.parquet(stage_dir)
+    """A completed stage, read with its stored schema: no Spark job."""
+    return spark.read.schema(stage_schema(stage_dir)).parquet(stage_dir)
 
 
 # --- Iceberg table sink (cluster path; parquet fallback in-sandbox) --------
@@ -148,7 +198,7 @@ def resume_filter(input_df: DataFrame, done_dir: str, key: str = "url") -> DataF
     the anti-join resume primitive (SURVEY.md §2.3)."""
     if not is_complete(done_dir):
         return input_df
-    done_keys = input_df.sparkSession.read.parquet(done_dir).select(key).distinct()
+    done_keys = load_stage(input_df.sparkSession, done_dir).select(key).distinct()
     return input_df.join(done_keys, key, "left_anti")
 
 

@@ -280,10 +280,13 @@ def _build_checkpointed(pages: DataFrame, work_dir: str, resume: bool) -> dict[s
     else:
         resume = False
         built = build_graph(out["mentions"], out["triples"])
-        graph = {n: keep(n, built[n], ["ent_type"] if n == "nodes" else None) for n in graph_stages}
-        # downstream reads the materialized copies; drop build_graph's caches
-        for df in built.values():
-            df.unpersist()
+        try:
+            graph = {n: keep(n, built[n], ["ent_type"] if n == "nodes" else None)
+                     for n in graph_stages}
+        finally:
+            # downstream reads the materialized copies; drop build_graph's caches
+            for df in built.values():
+                df.unpersist()
     # partitionBy moves ent_type to the last column of the re-read nodes
     graph["nodes"] = graph["nodes"].select(*NODES_SCHEMA.fieldNames())
     out.update(graph)

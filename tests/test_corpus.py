@@ -1,12 +1,14 @@
 """Corpus generator invariants (FIXTURES.md §1), and reading a
-materialized pages table from its parquet footers."""
+materialized pages table with its declared schema."""
 
 import pytest
 
+from conftest import jobs_in_group
 from ontonotes_5_parsing_spark import corpus
 from ontonotes_5_parsing_spark.corpus import generate_page, generate_pages
 from ontonotes_5_parsing_spark.kgref import extract_text, split_sentences
 from ontonotes_5_parsing_spark.kgref.lexicon import HEAD_ENTITIES
+from ontonotes_5_parsing_spark.pipeline.schemas import WEB_PAGES_SCHEMA
 
 
 def test_deterministic_and_order_independent():
@@ -57,21 +59,6 @@ def write_arrow_pages(path, doc_ids, name="part-00000.parquet", tz="UTC"):
                    os.path.join(path, name), coerce_timestamps="us")
 
 
-def test_footers_skip_names_spark_skips(spark, tmp_path):
-    """A failed job's `_temporary` attempt dir and `.`/`_` files are
-    never read by Spark, so they must not count rows either."""
-    d = str(tmp_path / "pages")
-    write_arrow_pages(d, range(0, 30), "part-00000.parquet")
-    write_arrow_pages(d, range(30, 50), "part-00001.parquet")
-    write_arrow_pages(f"{d}/_temporary/0", range(50, 90), "part-00002.parquet")
-    write_arrow_pages(d, range(90, 95), ".part-00003.parquet")
-    write_arrow_pages(d, range(95, 99), "_part-00004.parquet")
-    assert sorted(corpus._parquet_footers(d)) == [
-        f"{d}/part-00000.parquet", f"{d}/part-00001.parquet"]
-    assert corpus._parquet_num_rows(d) == 50
-    assert corpus.read_web_pages(spark, d).count() == 50
-
-
 def write_pages(spark, layout, path):
     if layout == "spark":
         corpus.write_web_pages_parquet(spark, 40, path)
@@ -85,45 +72,36 @@ def write_pages(spark, layout, path):
     return path
 
 
-@pytest.mark.parametrize("layout, from_footers", [
-    ("spark", True),
-    ("arrow", True),
-    ("arrow_file", True),
-    # Spark infers a naive INT64 timestamp as TIMESTAMP_NTZ
-    ("arrow_naive_ts", False),
-    # partition columns come from directory names, not footers
-    ("spark_partitioned", False),
+@pytest.mark.parametrize("layout", [
+    "spark",
+    "arrow",
+    "arrow_file",
+    # inference reads a naive INT64 timestamp as TIMESTAMP_NTZ
+    "arrow_naive_ts",
+    # lang is not in the files, only in the key=value directory names
+    "spark_partitioned",
 ])
-def test_read_web_pages_schema_equals_inference(spark, tmp_path, layout, from_footers):
+def test_read_web_pages_schema_equals_inference(spark, tmp_path, layout):
+    """The declared schema plans the scan without a job and reads the
+    values Spark's own inference reads, whatever wrote the files."""
     path = write_pages(spark, layout, str(tmp_path / "pages"))
-    footers = corpus._parquet_footers(path)
-    assert (corpus._footer_schema(path, footers) is not None) == from_footers
-    pages = corpus.read_web_pages(spark, path)
-    assert pages.schema == spark.read.parquet(path).schema
+    pages, scan_jobs = jobs_in_group(spark, f"read-{layout}",
+                                     lambda: corpus.read_web_pages(spark, path))
+    assert scan_jobs == 0
+    assert pages.schema == WEB_PAGES_SCHEMA.toNullable()
+    columns = WEB_PAGES_SCHEMA.fieldNames()
+    inferred = spark.read.parquet(path).select(*columns)
+    assert sorted(map(tuple, pages.collect())) == sorted(map(tuple, inferred.collect()))
     assert pages.count() == 40
-
-
-def jobs_in_group(spark, group, fn):
-    """fn()'s result and the number of Spark jobs it started."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        result = fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    # the status tracker is fed by the listener bus, behind the actions
-    sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.mark.parametrize("layout", ["spark", "arrow"])
 def test_scan_and_driver_graph_job_counts(spark, tmp_path, layout):
-    """The fixed Spark cost of a build, pinned: the pages scan plans from
-    the parquet footers without a job, and the driver branch of
-    build_graph runs four — the vocabulary count, the collect of its
-    bands, the broadcast of the surface → entity mapping (Spark builds
-    a broadcast in a job of its own, even from a local relation), and
-    the edge aggregation."""
+    """The fixed Spark cost of a build, pinned: the pages scan plans
+    without a job, and the driver branch of build_graph runs four —
+    the vocabulary count, the collect of its bands, the broadcast of
+    the surface → entity mapping (Spark builds a broadcast in a job of
+    its own, even from a local relation), and the edge aggregation."""
     from ontonotes_5_parsing_spark.pipeline import run
 
     path = write_pages(spark, layout, str(tmp_path / "pages"))

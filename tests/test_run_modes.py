@@ -17,6 +17,7 @@ from collections import Counter
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import jobs_in_group
 from ontonotes_5_parsing_spark import corpus
 from ontonotes_5_parsing_spark.pipeline import lineage, run_pipeline
 from ontonotes_5_parsing_spark.pipeline.incremental import ingest_batch, merged_counts
@@ -25,6 +26,7 @@ from ontonotes_5_parsing_spark.streaming import foreach_batch_pipeline
 
 N_PAGES = 60
 COMPARED = ("triples", "mentions", "nodes", "edges")
+STAGES = ("sentences", "mentions", "triples", "linked", "nodes", "edges")
 
 
 def rows(df, columns):
@@ -69,7 +71,7 @@ def test_checkpointed_equals_in_memory(spark, in_memory, pages_dir, work_dir):
     # nodes is written partitioned by ent_type; the re-read frame keeps
     # the schema's column order all the same
     assert out["nodes"].columns == in_memory["nodes"].columns == NODES_SCHEMA.fieldNames()
-    for stage in ("sentences", "mentions", "triples", "linked", "nodes", "edges"):
+    for stage in STAGES:
         assert lineage.is_complete(os.path.join(work_dir, stage)), stage
 
 
@@ -84,6 +86,49 @@ def test_resume_after_partial_run(spark, in_memory, pages_dir, work_dir):
         assert manifest_stamp(work_dir, stage) == stamp, f"{stage} was rebuilt, not loaded"
     assert_same(out, in_memory)
     assert out["nodes"].columns == NODES_SCHEMA.fieldNames()
+
+
+@pytest.mark.parametrize("stage", STAGES)
+def test_resume_after_crash_before_manifest(spark, in_memory, pages_dir, tmp_path,
+                                            monkeypatch, stage):
+    """A run stopped between a stage's parquet write and its manifest
+    write leaves that stage incomplete; the resumed run rebuilds it and
+    everything after it, and ends with the uninterrupted graph."""
+    work = str(tmp_path / "work")
+    dump = lineage.json.dump
+
+    def crash(obj, fh, **kw):
+        if isinstance(obj, dict) and obj.get("stage") == stage:
+            raise OSError(f"stopped before the {stage} manifest")
+        return dump(obj, fh, **kw)
+
+    monkeypatch.setattr(lineage.json, "dump", crash)
+    with pytest.raises(OSError, match="stopped before"):
+        run_pipeline(corpus.read_web_pages(spark, pages_dir), work_dir=work)
+    monkeypatch.undo()
+    assert os.listdir(os.path.join(work, stage)) and not lineage.is_complete(
+        os.path.join(work, stage))
+    out = run_pipeline(corpus.read_web_pages(spark, pages_dir), work_dir=work, resume=True)
+    assert_same(out, in_memory, ("triples", "nodes", "edges"))
+    for name in STAGES:
+        assert lineage.is_complete(os.path.join(work, name)), name
+
+
+def test_checkpointed_job_counts(spark, in_memory, tmp_path):
+    """A fresh checkpointed build runs the in-memory build's 6 jobs (the
+    fused UDF's job writes sentences) plus the other 5 stage writes; the
+    manifests and the re-reads start none. A fully resumed run loads
+    every stage without a job."""
+    # a pages dir of its own: a scan of pages_dir would hit in_memory's caches
+    pages_dir = str(tmp_path / "pages")
+    corpus.web_pages_df(spark, N_PAGES, partitions=4).write.parquet(pages_dir)
+    work = str(tmp_path / "work")
+    _, fresh = jobs_in_group(spark, "checkpointed-fresh", lambda: run_pipeline(
+        corpus.read_web_pages(spark, pages_dir), work_dir=work))
+    out, resumed = jobs_in_group(spark, "checkpointed-resumed", lambda: run_pipeline(
+        corpus.read_web_pages(spark, pages_dir), work_dir=work, resume=True))
+    assert (fresh, resumed) == (11, 0)
+    assert_same(out, in_memory)
 
 
 def test_streaming_triples_equal_in_memory(spark, in_memory, pages_dir, tmp_path):
