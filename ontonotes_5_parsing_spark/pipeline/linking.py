@@ -14,17 +14,22 @@ higher-order array functions for shingling/minhashing, `levenshtein`
 for scoring. No Python UDFs.
 
 The vocabulary stays roughly constant as the corpus grows, so
-`run.build_graph` usually collects it instead (one exact row-count
-gate) and runs `link_collected` in-process: the same blocking keys,
-`MAX_BUCKET` guard, accept rule (`accepts`) and union-find, over the
-Spark-computed bands and tokens, so both paths give identical links.
+`run.build_graph` usually takes it to the driver instead (one exact
+row-count gate), as one Arrow table of the Spark-computed bands and
+tokens, and runs `link_collected` on its columns: the same blocking
+keys, `MAX_BUCKET` guard and accept rule (`accepts`) as numpy array
+operations over all pairs at once, then `union_find`, so both paths
+give identical links.
 """
 
 from __future__ import annotations
 
-from collections import defaultdict
+import os
 from typing import Iterable
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -201,36 +206,107 @@ def score_pairs(pairs: DataFrame) -> DataFrame:
     return pairs.filter(containment | lev_ok).select("src", "dst")
 
 
-def accepts(norm_a: str, norm_b: str, toks_a: list, toks_b: list) -> bool:
-    """`score_pairs`' accept rule in-process, given each side's
-    Spark-computed `tokens`. Lengths are code points on both engines
-    and the ratio is the same double division, so the two agree."""
-    if len(set(toks_a).intersection(toks_b)) == min(len(toks_a), len(toks_b)):
-        return True
-    len_a, len_b = len(norm_a), len(norm_b)
-    # never 0: two empty norms both split to [""], accepted above
-    longest = max(len_a, len_b)
+def accepts(norm: pa.Array, toks: pa.Array, a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """`score_pairs`' accept rule over the pairs (norm[a[i]], norm[b[i]])
+    as a boolean mask, given each norm's Spark-computed `tokens`.
+    Lengths are code points on both engines and the ratio is the same
+    double division, so the two agree.
+
+    Containment counts the distinct tokens a pair shares, one packed
+    (pair, token) key per distinct token of each side, against the
+    shorter token *list*, as `array_intersect` against `size` does.
+    The rest is scored on code points: the length difference alone
+    rejects most pairs; below 10 code points only a distance of 0 or 1
+    can pass, which the shared prefix and suffix decide; the few longer
+    pairs go through `levenshtein`."""
+    n = len(a)
+    n_toks = pc.fill_null(pc.list_value_length(toks), 0).to_numpy()
+    tok_row = pc.list_parent_indices(toks).to_numpy().astype(np.int64)
+    tok_code = pc.dictionary_encode(pc.list_flatten(toks)).indices.to_numpy().astype(np.int64)
+    n_codes = int(tok_code.max()) + 1 if len(tok_code) else 1
+    # distinct (row, token) keys in row order, as CSR offsets per row
+    row_tok = np.unique(tok_row * n_codes + tok_code)
+    offsets = np.searchsorted(row_tok // n_codes, np.arange(len(norm) + 1))
+    codes = row_tok % n_codes
+    side_a = _ragged_take(offsets, codes, a)
+    side_b = _ragged_take(offsets, codes, b)
+    common = np.intersect1d(side_a[0] * n_codes + side_a[1],
+                            side_b[0] * n_codes + side_b[1], assume_unique=True)
+    ok = np.bincount(common // n_codes, minlength=n) == np.minimum(n_toks[a], n_toks[b])
+
+    length = pc.fill_null(pc.utf8_length(norm), 0).to_numpy()
+    rest = np.flatnonzero(~ok)
+    len_a, len_b = length[a[rest]], length[b[rest]]
+    # never 0: two empty norms both split to [""], contained above
+    longest = np.maximum(len_a, len_b)
     # the edit distance is at least the length difference, so this
     # rejects exactly the pairs the full distance would reject
-    if abs(len_a - len_b) / longest > MAX_LEV_RATIO:
-        return False
-    # a shared prefix and suffix never change the edit distance
-    short = min(len_a, len_b)
-    lo = 0
-    while lo < short and norm_a[lo] == norm_b[lo]:
-        lo += 1
-    hi = 0
-    while hi < short - lo and norm_a[len_a - 1 - hi] == norm_b[len_b - 1 - hi]:
-        hi += 1
-    if 2 / longest > MAX_LEV_RATIO:
-        # two edits already fail, so only a distance of 0 or 1 can pass.
-        # Without the shared affixes, the distance is at most 1 exactly
-        # when neither rest is longer than 1, and then equals the longer
-        # rest's length; both are 2 or more otherwise
-        distance = longest - lo - hi
-    else:
-        distance = levenshtein(norm_a[lo : len_a - hi], norm_b[lo : len_b - hi])
-    return distance / longest <= MAX_LEV_RATIO
+    keep = np.abs(len_a - len_b) / longest <= MAX_LEV_RATIO
+    rest, longest, short = rest[keep], longest[keep], np.minimum(len_a, len_b)[keep]
+    # where two edits already fail, only a distance of 0 or 1 can pass.
+    # Without the shared affixes, the distance is at most 1 exactly when
+    # neither rest is longer than 1, and then equals the longer rest's
+    # length; both are 2 or more otherwise
+    one_edit = 2 / longest > MAX_LEV_RATIO
+    distance = np.empty(len(rest), np.int64)
+    if one_edit.any():
+        near, width = rest[one_edit], int(longest[one_edit].max())
+        head, tail = _code_points(norm, length, width)
+        x, y = a[near], b[near]
+        lo = np.minimum(_leading_true(head[x] == head[y]), short[one_edit])
+        hi = np.minimum(_leading_true(tail[x] == tail[y]), short[one_edit] - lo)
+        distance[one_edit] = longest[one_edit] - lo - hi
+    far = rest[~one_edit]
+    if len(far):
+        strings = norm.to_pylist()
+        distance[~one_edit] = [
+            _affix_free_levenshtein(strings[i], strings[j]) for i, j in zip(a[far], b[far])
+        ]
+    ok[rest] = distance / longest <= MAX_LEV_RATIO
+    return ok
+
+
+def _leading_true(eq: np.ndarray) -> np.ndarray:
+    """The number of leading True values of each row."""
+    return np.logical_and.accumulate(eq, axis=1).sum(axis=1)
+
+
+def _ragged_take(offsets: np.ndarray, values: np.ndarray, rows: np.ndarray):
+    """values[offsets[r]:offsets[r + 1]] for each r in rows, concatenated,
+    with the position in `rows` each value came from."""
+    counts = offsets[rows + 1] - offsets[rows]
+    starts = np.repeat(offsets[rows] - (np.cumsum(counts) - counts), counts)
+    return np.repeat(np.arange(len(rows)), counts), values[starts + np.arange(counts.sum())]
+
+
+# above every code point (0x10FFFF), so padding never matches a
+# character; numpy's `<U` strings would pad with (and strip) NUL
+_PAD = np.uint32(0xFFFFFFFF)
+
+
+def _code_points(norm: pa.Array, length: np.ndarray, width: int):
+    """The first and the last `width` code points of each norm, as two
+    padded uint32 matrices; the second is reversed (column k holds the
+    k-th code point from the end)."""
+    cps = np.frombuffer("".join(norm.fill_null("").to_pylist()).encode("utf-32-le"), "<u4")
+    row = np.repeat(np.arange(len(length)), length)
+    col = np.arange(len(cps)) - np.repeat(np.cumsum(length) - length, length)
+    out = []
+    for pos in (col, length[row] - 1 - col):
+        m = np.full((len(length), width), _PAD, np.uint32)
+        keep = pos < width
+        m[row[keep], pos[keep]] = cps[keep]
+        out.append(m)
+    return out
+
+
+def _affix_free_levenshtein(x: str, y: str) -> int:
+    """`levenshtein` of the two strings without their shared prefix and
+    suffix, which never change the distance."""
+    lo = len(os.path.commonprefix((x, y)))
+    x, y = x[lo:], y[lo:]
+    hi = len(os.path.commonprefix((x[::-1], y[::-1])))
+    return levenshtein(x[: len(x) - hi], y[: len(y) - hi])
 
 
 def union_find(edges: Iterable[tuple[int, int]]) -> dict[int, int]:
@@ -257,51 +333,69 @@ def union_find(edges: Iterable[tuple[int, int]]) -> dict[int, int]:
     return {v: find(v) for v in list(parent)}
 
 
-def link_collected(rows: list) -> tuple[dict[int, int], dict[str, int]]:
+def link_collected(table: pa.Table) -> tuple[dict[int, int], dict[str, int]]:
     """In-process twin of `candidate_pairs` → `score_pairs` →
-    `connected_components` over collected vocabulary rows whose first
-    five fields are (vertex_id, norm, ent_type, bands, toks). Returns
-    the remap (vertex_id → component, non-identity rows only) and the
-    counts: candidate and accepted pairs, and blocking keys dropped by
+    `connected_components` over a collected vocabulary with the columns
+    vertex_id, norm, ent_type, bands and toks. Returns the remap
+    (vertex_id → component, non-identity rows only) and the counts:
+    candidate and accepted pairs, and blocking keys dropped by
     `MAX_BUCKET`.
 
-    Bucket sizes count exploded rows like the window does: a surface
-    listing a token twice counts twice, as does each vocabulary row
-    sharing a vertex_id ("Obama"/"obama"). Keys with a null ent_type
-    count but never pair, as in the equi-join."""
-    vertex, norm, toks = [], [], []
-    buckets: dict[tuple, list[int]] = defaultdict(list)
-    for i, (vertex_id, norm_i, ent_type, bands, toks_i, *_) in enumerate(rows):
-        vertex.append(vertex_id)
-        norm.append(norm_i)
-        toks.append(toks_i)
-        for band, bh in bands or ():
-            buckets[(ent_type, band, bh)].append(i)
-    dropped = 0
-    # (src, dst, norm_a, norm_b) → row indices, as the distinct pair rows
-    pairs: dict[tuple, tuple[int, int]] = {}
-    for (ent_type, _band, _bh), members in buckets.items():
-        if len(members) > MAX_BUCKET:
-            dropped += 1
-            continue
-        if ent_type is None:
-            continue
-        side = list({(vertex[i], norm[i]): i for i in members}.items())
-        for x, ((va, na), ia) in enumerate(side):
-            for (vb, nb), ib in side[x + 1:]:
-                if va < vb:
-                    pairs.setdefault((va, vb, na, nb), (ia, ib))
-                elif vb < va:
-                    pairs.setdefault((vb, va, nb, na), (ib, ia))
-    accepted = [
-        (va, vb)
-        for (va, vb, na, nb), (ia, ib) in pairs.items()
-        if accepts(na, nb, toks[ia], toks[ib])
-    ]
-    remap = union_find(accepted)
+    Pairs are between distinct (vertex_id, norm) classes, as the
+    distinct pair rows are: rows sharing a vertex_id and a norm
+    ("Obama"/"obama") are one class. The exploded keys are sorted by
+    (ent_type, band, bh), so a bucket is a run; its size counts exploded
+    rows like the window does, so a surface listing a token twice counts
+    twice, as does each row of a class. Keys with a null ent_type count
+    but never pair, as in the equi-join. Each bucket's pairs come from
+    the upper triangle of its member classes, taken for all buckets of
+    one size at once, then oriented by vertex_id and deduplicated on one
+    packed int64 key."""
+    vertex = table["vertex_id"].to_numpy()
+    norm = table["norm"].combine_chunks()
+    _, vertex_rank = np.unique(vertex, return_inverse=True)
+    norm_code = pc.fill_null(pc.dictionary_encode(norm).indices, -1).to_numpy()
+    class_key = vertex_rank * (len(vertex) + 1) + norm_code + 1
+    _, first, row_class = np.unique(class_key, return_index=True, return_inverse=True)
+    n_classes = len(first)
+    class_vertex = vertex[first]
+
+    bands = table["bands"].combine_chunks()
+    keys = pc.list_flatten(bands)
+    key_row = pc.list_parent_indices(bands).to_numpy()
+    ent_code = pc.fill_null(
+        pc.dictionary_encode(table["ent_type"].combine_chunks()).indices, -1
+    ).to_numpy()[key_row]
+    band = pc.struct_field(keys, "band").to_numpy()
+    bh = pc.struct_field(keys, "bh").to_numpy()
+    order = np.lexsort((bh, band, ent_code))
+    ent_code, band, bh = ent_code[order], band[order], bh[order]
+    new = np.ones(len(order), bool)
+    new[1:] = (ent_code[1:] != ent_code[:-1]) | (band[1:] != band[:-1]) | (bh[1:] != bh[:-1])
+    starts = np.flatnonzero(new)
+    sizes = np.diff(np.append(starts, len(order)))
+    dropped = int(np.count_nonzero(sizes > MAX_BUCKET))
+    pairing = (sizes > 1) & (sizes <= MAX_BUCKET) & (ent_code[starts] >= 0)
+    member = row_class[key_row[order]]
+    src, dst = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
+    for size in np.unique(sizes[pairing]):
+        classes = member[starts[pairing & (sizes == size)][:, None] + np.arange(size)]
+        i, j = np.triu_indices(size, 1)
+        src.append(classes[:, i].ravel())
+        dst.append(classes[:, j].ravel())
+    src, dst = np.concatenate(src), np.concatenate(dst)
+    v_src, v_dst = class_vertex[src], class_vertex[dst]
+    lower = v_src < v_dst
+    keep = v_src != v_dst
+    pair = np.unique(
+        np.where(lower, src, dst)[keep] * n_classes + np.where(lower, dst, src)[keep]
+    )
+    a, b = pair // n_classes, pair % n_classes
+    ok = accepts(norm.take(first), table["toks"].combine_chunks().take(first), a, b)
+    remap = union_find(zip(class_vertex[a[ok]].tolist(), class_vertex[b[ok]].tolist()))
     counts = {
-        "candidate_pairs": len(pairs),
-        "accepted_pairs": len(accepted),
+        "candidate_pairs": len(pair),
+        "accepted_pairs": int(np.count_nonzero(ok)),
         "dropped_keys": dropped,
     }
     return remap, counts

@@ -10,8 +10,9 @@ Two phases with distinct execution characters:
   graph phase works on the surface vocabulary, which stays roughly
   constant as the corpus grows, so one exact gate — the row count of
   the persisted vocabulary — picks both the engine and the planning
-  mode: at or below `DRIVER_GRAPH_MAX_ROWS` the vocabulary is collected
-  and linked, clustered and canonicalized in-process, and only the
+  mode: at or below `DRIVER_GRAPH_MAX_ROWS` the vocabulary is taken to
+  the driver as one Arrow table and linked (numpy over its columns),
+  clustered and canonicalized in-process, and only the
   corpus-sized edge aggregation runs in Spark, all under the static
   plan; above it the distributed `link_vocab`/`build_nodes_edges` path
   runs under the session's own adaptive-execution setting. Both give
@@ -29,9 +30,11 @@ from __future__ import annotations
 import json
 import logging
 import threading
+import time
 from contextlib import contextmanager
 from typing import Callable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -150,6 +153,18 @@ def _static_plan(spark):
 # The driver branch has got cheaper since the first sweep and now leads
 # through 20k; the gate stays where the first sweep put it until a
 # workload above it is benchmarked.
+# Re-run with the numpy driver branch (the same number draws on
+# 1,280/2,290/4,000 pages), same host and timing; "row loop" is the
+# per-pair Python linking it replaced, and each distributed row comes
+# from the same sessions as the driver row above it:
+#   vocab rows           10,046   15,067   20,031
+#   candidate pairs        249k     497k     752k
+#   driver s, numpy        1.44     1.36     1.80
+#   distributed s          4.28     4.41     6.55
+#   driver s, row loop     2.21     3.28     5.31
+#   distributed s          5.22     5.33     7.30
+# In-process linking (`link_s`) is 0.24/0.43/0.68 s of the numpy
+# driver time. The driver branch now leads about 3x through 20k rows.
 DRIVER_GRAPH_MAX_ROWS = 10_000
 
 log = logging.getLogger(__name__)
@@ -171,7 +186,7 @@ def build_graph(mentions: DataFrame, triples: DataFrame) -> dict[str, DataFrame]
         if branch == "driver":
             out, counts = _driver_graph(vocab, triples)
     if branch == "distributed":
-        counts = dict.fromkeys(("candidate_pairs", "accepted_pairs", "dropped_keys"))
+        counts = dict.fromkeys(("candidate_pairs", "accepted_pairs", "dropped_keys", "link_s"))
         linked = link_vocab(vocab).persist()
         nodes, edges = build_nodes_edges(triples, linked)
         out = {"linked": linked, "nodes": nodes.persist(), "edges": edges.persist()}
@@ -187,40 +202,46 @@ def build_graph(mentions: DataFrame, triples: DataFrame) -> dict[str, DataFrame]
 
 def _driver_graph(vocab: DataFrame, triples: DataFrame):
     """The graph phase of a collected vocabulary: bands, tokens and
-    entity ids come from Spark in one collect; linking, clustering and
-    the canonical pick run in-process; linked/nodes come back as local
-    relations and the surface → entity mapping is broadcast into the
-    shared edge aggregation."""
+    entity ids come from Spark as one Arrow table (`toArrow`, so no
+    `Row` objects are built); linking runs on its columns in numpy,
+    clustering and the canonical pick in-process; linked is the table's
+    columns plus the component array, nodes come from the canonical
+    rows, both as local relations, and the surface → entity mapping is
+    broadcast into the shared edge aggregation. `link_s` in the returned
+    counts is the in-process linking time."""
     spark = vocab.sparkSession
-    # in link_collected's field order; rows are read by unpacking, as a
-    # Row's attribute lookup costs a field-name search per access
-    rows = (
+    table = (
         add_minhash_bands(vocab)
         .select(
-            "vertex_id", "norm", "ent_type", "bands", tokens("norm").alias("toks"),
-            "surface", "n_mentions", F.xxhash64("surface", "ent_type").alias("entity_id"),
+            "vertex_id", "surface", "ent_type", "n_mentions", "norm", "bands",
+            tokens("norm").alias("toks"), F.xxhash64("surface", "ent_type").alias("entity_id"),
         )
-        .collect()
+        .toArrow()
     )
     vocab.unpersist()
-    remap, counts = link_collected(rows)
-    linked, members = [], []
-    for vertex_id, norm, ent_type, _bands, _toks, surface, n_mentions, entity_id in rows:
-        component = remap.get(vertex_id, vertex_id)
-        linked.append((vertex_id, surface, ent_type, n_mentions, norm, component))
-        members.append((surface, ent_type, n_mentions, component, entity_id))
-    nodes, mapping = canonical_rows(members)
-    fields = {f.name: f for f in vocab.schema.fields}
-    linked_schema = T.StructType(
-        [fields[c] for c in ("vertex_id", "surface", "ent_type", "n_mentions", "norm")]
-        + [T.StructField("component", T.LongType(), False)]
+    start = time.perf_counter()
+    remap, counts = link_collected(table)
+    counts["link_s"] = round(time.perf_counter() - start, 4)
+    component = [remap.get(v, v) for v in table["vertex_id"].to_pylist()]
+    members = zip(
+        *(table[c].to_pylist() for c in ("surface", "ent_type", "n_mentions")),
+        component,
+        table["entity_id"].to_pylist(),
     )
+    nodes, mapping = canonical_rows(list(members))
+    fields = {f.name: f for f in vocab.schema.fields}
+    linked_cols = ("vertex_id", "surface", "ent_type", "n_mentions", "norm")
+    linked_schema = T.StructType(
+        [fields[c] for c in linked_cols] + [T.StructField("component", T.LongType(), False)]
+    )
+    linked = pa.table([*(table[c] for c in linked_cols), pa.array(component, pa.int64())],
+                      names=linked_schema.names)
     mapping_schema = T.StructType(
         [fields["surface"], fields["ent_type"], T.StructField("entity_id", T.LongType(), False)]
     )
     edges = aggregate_edges(triples, _local_frame(spark, mapping, mapping_schema))
     out = {
-        "linked": _local_frame(spark, linked, linked_schema),
+        "linked": spark.createDataFrame(linked, linked_schema),
         "nodes": _local_frame(spark, nodes, NODES_SCHEMA),
         "edges": edges.persist(),
     }
@@ -232,8 +253,6 @@ def _local_frame(spark, rows: list[tuple], schema: T.StructType) -> DataFrame:
     """Rows as a LocalRelation (built through Arrow): scanning or
     broadcasting it runs no Spark job, unlike `createDataFrame(list)`,
     which parallelizes an RDD."""
-    import pyarrow as pa
-
     columns = list(zip(*rows)) if rows else [() for _ in schema.fields]
     table = pa.table({f.name: list(c) for f, c in zip(schema.fields, columns)})
     return spark.createDataFrame(table, schema)

@@ -204,6 +204,7 @@ def test_empty_vocabulary(spark, monkeypatch, caplog):
     counts = both_branches(
         spark, monkeypatch, caplog, *vocab_frames(spark, []), forced_gate=-1
     )
+    assert counts.pop("link_s") >= 0
     assert counts == {"branch": "driver", "vocab_rows": 0, "candidate_pairs": 0,
                       "accepted_pairs": 0, "dropped_keys": 0}
 
@@ -216,7 +217,11 @@ def test_build_graph_logs_one_structured_line(spark, monkeypatch, caplog):
         [("Obama", "visited", "France", "PERSON", "GPE")],
     )
     run.build_graph(mentions, triples)
-    assert graph_log(caplog) == {
+    record = graph_log(caplog)
+    # the driver branch's in-process linking seconds, a timing
+    link_s = record.pop("link_s")
+    assert isinstance(link_s, float) and 0 <= link_s < 60
+    assert record == {
         "branch": "driver",
         "vocab_rows": 3,
         "candidate_pairs": 1,
@@ -233,6 +238,7 @@ def test_build_graph_logs_one_structured_line(spark, monkeypatch, caplog):
         "candidate_pairs": None,
         "accepted_pairs": None,
         "dropped_keys": None,
+        "link_s": None,
     }
 
 

@@ -170,6 +170,74 @@ def test_label_propagation_matches_union_find_on_random_edge_sets(spark, example
     assert got == union_find(edges)
 
 
+# Tokens that share shingles and prefixes, so buckets hold several
+# surfaces and pairs land on both sides of the accept rule.
+LINK_TOKENS = ["ab", "abc", "abd", "ba", "b", "12345", "12346", "1234", "\u00e9t\u00e9"]
+
+
+@st.composite
+def vocabularies(draw):
+    """(surface, ent_type) mention rows: surfaces of 1-3 tokens (so a
+    token may repeat within a surface), some with case and leading-space
+    variants that share their vertex_id, under two entity types or
+    none; a surface may be mentioned twice."""
+    rows = []
+    for _ in range(draw(st.integers(1, 24))):
+        surface = " ".join(draw(st.lists(st.sampled_from(LINK_TOKENS), min_size=1, max_size=3)))
+        ent_type = draw(st.sampled_from(["A", "A", "B", None]))
+        variants = draw(st.sets(st.sampled_from([str.upper, str.title, " {}".format])))
+        for form in (surface, *(v(surface) for v in variants)):
+            rows += [(form, ent_type)] * draw(st.integers(1, 2))
+    return rows
+
+
+@given(st.sampled_from([2, 3, 5, 256, 256]), st.lists(vocabularies(), min_size=10, max_size=10))
+@settings(max_examples=8, deadline=None)
+def test_arrow_linking_matches_spark_formulation(spark, max_bucket, examples):
+    """link_collected on the driver branch's Arrow table gives the remap
+    and counts of the Spark formulation: union_find over `candidate_pairs`
+    → `score_pairs`, and the keys the bucket-size window drops. The 10
+    vocabularies of an example are one input, each under its own entity
+    types (rows without one share the null type), so that one Spark
+    round checks all of them; MAX_BUCKET is set low in most examples,
+    so that keys drop."""
+    from ontonotes_5_parsing_spark.pipeline import linking
+    from ontonotes_5_parsing_spark.pipeline.run import _static_plan
+
+    rows = [
+        (f"u{k}", 0, surface, None if ent_type is None else f"{i}{ent_type}")
+        for i, vocab in enumerate(examples)
+        for k, (surface, ent_type) in enumerate(vocab)
+    ]
+    mentions = spark.createDataFrame(
+        rows, "url string, sent_idx int, surface string, ent_type string"
+    )
+    saved = linking.MAX_BUCKET
+    linking.MAX_BUCKET = max_bucket
+    try:
+        with _static_plan(spark):
+            banded = linking.add_minhash_bands(linking.surface_vocab(mentions)).persist()
+            table = banded.select(
+                "vertex_id", "norm", "ent_type", "bands", linking.tokens("norm").alias("toks")
+            ).toArrow()
+            remap, counts = linking.link_collected(table)
+            pairs = candidate_pairs(banded).persist()
+            n_pairs = pairs.count()
+            accepted = [tuple(r) for r in score_pairs(pairs).collect()]
+            dropped = (
+                banded.select("ent_type", F.explode("bands").alias("b"))
+                .groupBy("ent_type", "b.band", "b.bh").count()
+                .filter(F.col("count") > max_bucket).count()
+            )
+            pairs.unpersist()
+            banded.unpersist()
+    finally:
+        linking.MAX_BUCKET = saved
+    assert counts == {"candidate_pairs": n_pairs, "accepted_pairs": len(accepted),
+                      "dropped_keys": dropped}
+    assert remap == union_find(accepted)
+
+
 def test_salted_vocab_counts_exact_under_extreme_skew(spark):
     """90%-hot-key mention distribution: the two-phase salted aggregation
     must produce exactly the same counts as a plain groupBy (salting

@@ -159,7 +159,7 @@ def test_split_sentences_partition(sents):
 # a leading separator yields an empty first token: all must agree.
 norms = st.lists(
     st.sampled_from(["a", "b", "ab", "\u00e9", "\u65e5", " ", "\t", "\n", "\u00a0",
-                     "\u2003", "\x0b", "\x0c", "\r", "\U0001d538"]),
+                     "\u2003", "\x0b", "\x0c", "\r", "\U0001d538", "\x00"]),
     max_size=10,
 ).map("".join)
 
@@ -167,7 +167,9 @@ norms = st.lists(
 
 @st.composite
 def near_duplicates(draw):
-    """A base string and a copy with 0-3 random edits. The longest
+    """A base string and a copy with 0-3 random edits, both sometimes
+    ending in NUL (padding that equals NUL, or numpy's `<U` strings,
+    which strip trailing NULs, would see a shorter string). The longest
     lengths straddle 5, 10 and 15, where the edit budget of the 0.2
     ratio grows from 0 to 1, 2 and 3 edits, so pairs land on both sides
     of `accepts`' one-edit shortcut and of the threshold itself."""
@@ -187,7 +189,8 @@ def near_duplicates(draw):
                 edited[pos] = char
             else:
                 del edited[pos]
-    return base, "".join(edited)
+    end = draw(st.sampled_from(["", "\x00"]))
+    return base + end, "".join(edited) + end
 
 
 @given(st.lists(st.one_of(st.tuples(norms, norms), near_duplicates()), min_size=1, max_size=12))
@@ -197,6 +200,7 @@ def test_inprocess_accept_rule_matches_score_pairs(spark, pairs):
     the Spark score_pairs filter keeps, on arbitrary whitespace-laden
     norms and on near-duplicates. Each example's pairs are one local
     DataFrame, so both sides run without a Spark job."""
+    import numpy as np
     import pyarrow as pa
 
     from ontonotes_5_parsing_spark.pipeline.linking import accepts, score_pairs, tokens
@@ -211,6 +215,10 @@ def test_inprocess_accept_rule_matches_score_pairs(spark, pairs):
         table, "src long, dst long, norm_a string, norm_b string"
     )
     kept = {r.src for r in score_pairs(df).collect()}
-    split = df.select("src", "norm_a", "norm_b", tokens("norm_a").alias("ta"),
-                      tokens("norm_b").alias("tb")).collect()
-    assert {r.src for r in split if accepts(r.norm_a, r.norm_b, r.ta, r.tb)} == kept
+    split = df.select(tokens("norm_a").alias("ta"), tokens("norm_b").alias("tb")).collect()
+    # norm_a's rows first, then norm_b's: pair i is rows (i, n + i)
+    n = len(pairs)
+    norm = pa.array([a for a, _ in pairs] + [b for _, b in pairs])
+    toks = pa.array([r.ta for r in split] + [r.tb for r in split], pa.list_(pa.string()))
+    ok = accepts(norm, toks, np.arange(n), np.arange(n) + n)
+    assert set(np.flatnonzero(ok).tolist()) == kept
