@@ -6,7 +6,7 @@ A from-scratch re-expression of the capabilities of
 as a Spark-first pipeline over Common-Crawl-style web pages:
 
     web_pages → sentences (one fused extract/parse/NER/coref/triple
-    mapInPandas pass) → mentions, (subj, pred, obj) triples (explodes)
+    mapInArrow pass) → mentions, (subj, pred, obj) triples (explodes)
     → MinHash/LSH-blocked entity linking → salted canonicalization
     → nodes/edges tables.
 

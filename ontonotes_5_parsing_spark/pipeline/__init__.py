@@ -1,7 +1,7 @@
 """pipeline — distributed Spark stages of the KG-construction DAG.
 
     web_pages → sentences (one fused extract/parse/NER/coref/triple
-    mapInPandas pass) → mentions, triples (explodes, JVM-side)
+    mapInArrow pass) → mentions, triples (explodes, JVM-side)
     → linking (MinHash/LSH blocking + label-propagation components)
     → canonicalize (salted two-phase groupBy) → nodes/edges.
 

@@ -72,9 +72,13 @@ def ingest_batch(
     stage_dir = _batch_dir(work_dir, batch_id)
     if resume and lineage.is_complete(stage_dir):
         return lineage.load_stage(spark, stage_dir)
-    mentions = build_extraction(pages_builder())["mentions"]
-    partial = partial_mention_counts(mentions, batch_id)
-    return lineage.materialize(partial, stage_dir, f"partials/batch={batch_id}")
+    out = build_extraction(pages_builder())
+    try:
+        partial = partial_mention_counts(out["mentions"], batch_id)
+        return lineage.materialize(partial, stage_dir, f"partials/batch={batch_id}")
+    finally:
+        # the partial is re-read from its files; drop the extraction's cache
+        out["sentences"].unpersist()
 
 
 def merged_counts(spark: SparkSession, work_dir: str) -> DataFrame:

@@ -3,21 +3,26 @@
 Two phases with distinct execution characters:
 
 - `build_extraction`: pages → sentences → mentions → triples. One fused
-  Arrow UDF stage, then shuffle-free explodes; each output is kept
-  (persisted, or materialized in checkpointed mode) because it fans out
-  to several consumers.
+  Arrow UDF stage, then shuffle-free explodes. In memory only
+  `sentences` is kept (persisted under the static plan); mentions and
+  triples are lazy explodes over it. Checkpointed mode materializes all
+  three.
 - `build_graph`: mentions/triples → linked → nodes/edges. Eager. The
   graph phase works on the surface vocabulary, which stays roughly
   constant as the corpus grows, so one exact gate — the row count of
-  the persisted vocabulary — picks both the engine and the planning
-  mode: at or below `DRIVER_GRAPH_MAX_ROWS` the vocabulary is taken to
-  the driver as one Arrow table and linked (numpy over its columns),
-  clustered and canonicalized in-process, and only the
-  corpus-sized edge aggregation runs in Spark, all under the static
-  plan; above it the distributed `link_vocab`/`build_nodes_edges` path
-  runs under the session's own adaptive-execution setting. Both give
-  identical linked/nodes/edges. One structured log line per call
-  records the branch and its counts.
+  the banded vocabulary, taken with a collect bounded at
+  `DRIVER_GRAPH_MAX_ROWS + 1` rows — picks both the engine and the
+  planning mode: at or below the gate the collected Arrow table is
+  linked (numpy over its columns), clustered and canonicalized
+  in-process, and only the corpus-sized edge aggregation runs in Spark,
+  all under the static plan; above it the distributed
+  `link_vocab`/`build_nodes_edges` path runs under the session's own
+  adaptive-execution setting. Both give identical linked/nodes/edges.
+  One structured log line per call records the branch and its counts.
+
+A warm in-memory build runs three Spark jobs: the vocabulary collect
+(which runs the fused stage and fills the `sentences` cache), the
+mapping broadcast and the edge aggregation.
 
 `run_pipeline` composes both. Every run mode runs this one stage graph;
 checkpointed mode (`work_dir` set) only changes how a stage is kept: it
@@ -52,7 +57,10 @@ from .stages import (
 
 
 def _persist(name: str, df: DataFrame) -> DataFrame:
-    return df.persist()
+    """The in-memory `keep`: caches `sentences` only. mentions and
+    triples each have one consumer in `build_graph` and stay explodes
+    over the cache."""
+    return df.persist() if name == "sentences" else df
 
 
 def build_extraction(
@@ -61,14 +69,21 @@ def build_extraction(
     """pages → sentences/mentions/triples (lazy).
 
     Uses the fused extract+parse+annotate stage (one Arrow roundtrip);
-    mentions/triples are pure explodes. Each has several consumers
-    (sentences feeds both explodes; mentions and triples feed the stage
-    counts and `build_graph`), so each goes through `keep(name, df)`,
-    which returns the frame downstream builds on: persisted by default,
-    so the Python chain runs once; `run_pipeline`'s checkpointed mode
-    passes a step that materializes (or resumes) the stage instead.
+    mentions/triples are pure explodes of `sentences`. Each stage goes
+    through `keep(name, df)`, which returns the frame downstream builds
+    on. The default persists `sentences` alone, so the Python chain runs
+    once and both explodes read its cache; `run_pipeline`'s checkpointed
+    mode passes a step that materializes (or resumes) every stage
+    instead.
+
+    `sentences` is kept under the static plan. A plan is fixed when it
+    is persisted or written, and its only shuffle, the pages
+    `repartition`, already has an exact partition count; planned
+    adaptively, that shuffle would run as a job of its own before the
+    job that fills the cache or writes the stage.
     """
-    sentences = keep("sentences", extract_parse_stage(pages))
+    with _static_plan(pages.sparkSession):
+        sentences = keep("sentences", extract_parse_stage(pages))
     mentions = keep("mentions", mentions_from_parsed(sentences))
     triples = keep("triples", triples_from_parsed(sentences))
     return {"sentences": sentences, "mentions": mentions, "triples": triples}
@@ -106,7 +121,9 @@ def _static_plan(spark):
     construction, so AQE's runtime re-planning has nothing to optimize,
     while its mechanics cost one scheduled job per query stage:
     measured on a warm crawl build, 15 jobs per build with AQE vs 6
-    without, identical results."""
+    without, identical results. `build_extraction` keeps `sentences`
+    under it too: its only shuffle is the pages `repartition`, whose
+    partition count is already exact."""
     global _aqe_scope_depth
     with _aqe_scope_lock:
         _aqe_scope_depth += 1
@@ -173,18 +190,24 @@ log = logging.getLogger(__name__)
 def build_graph(mentions: DataFrame, triples: DataFrame) -> dict[str, DataFrame]:
     """mentions/triples → linked/nodes/edges.
 
-    Eager: the vocabulary is persisted and counted under the static
-    plan, and that one row count picks the branch. The driver branch
-    materializes edges inside the same scope; the distributed branch
-    runs after it closes, under the session's adaptive-execution
-    setting, and materializes linked/nodes/edges there."""
+    Eager. Under the static plan, the banded vocabulary is collected
+    with a limit of one row over the gate, so the collect is bounded
+    before it runs and its row count is the exact gate. The driver
+    branch links that table and materializes edges inside the same
+    scope. Above the gate the vocabulary is persisted and counted
+    there, for the log line's exact count, and the distributed branch
+    runs after the scope closes, under the session's adaptive-execution
+    setting, and materializes linked/nodes/edges."""
     spark = mentions.sparkSession
     with _static_plan(spark):
-        vocab = surface_vocab(mentions).persist()
-        n_vocab = vocab.count()
-        branch = "driver" if n_vocab <= DRIVER_GRAPH_MAX_ROWS else "distributed"
+        vocab = surface_vocab(mentions)
+        table = _banded(vocab).limit(DRIVER_GRAPH_MAX_ROWS + 1).toArrow()
+        branch = "driver" if table.num_rows <= DRIVER_GRAPH_MAX_ROWS else "distributed"
         if branch == "driver":
-            out, counts = _driver_graph(vocab, triples)
+            n_vocab = table.num_rows
+            out, counts = _driver_graph(table, vocab.schema, triples)
+        else:
+            n_vocab = vocab.persist().count()
     if branch == "distributed":
         counts = dict.fromkeys(("candidate_pairs", "accepted_pairs", "dropped_keys", "link_s"))
         linked = link_vocab(vocab).persist()
@@ -200,25 +223,25 @@ def build_graph(mentions: DataFrame, triples: DataFrame) -> dict[str, DataFrame]
     return out
 
 
-def _driver_graph(vocab: DataFrame, triples: DataFrame):
-    """The graph phase of a collected vocabulary: bands, tokens and
-    entity ids come from Spark as one Arrow table (`toArrow`, so no
-    `Row` objects are built); linking runs on its columns in numpy,
-    clustering and the canonical pick in-process; linked is the table's
-    columns plus the component array, nodes come from the canonical
-    rows, both as local relations, and the surface → entity mapping is
-    broadcast into the shared edge aggregation. `link_s` in the returned
-    counts is the in-process linking time."""
-    spark = vocab.sparkSession
-    table = (
-        add_minhash_bands(vocab)
-        .select(
-            "vertex_id", "surface", "ent_type", "n_mentions", "norm", "bands",
-            tokens("norm").alias("toks"), F.xxhash64("surface", "ent_type").alias("entity_id"),
-        )
-        .toArrow()
+def _banded(vocab: DataFrame) -> DataFrame:
+    """The vocabulary columns the driver branch works on: its blocking
+    keys, the tokens of its norm and each surface's entity id."""
+    return add_minhash_bands(vocab).select(
+        "vertex_id", "surface", "ent_type", "n_mentions", "norm", "bands",
+        tokens("norm").alias("toks"), F.xxhash64("surface", "ent_type").alias("entity_id"),
     )
-    vocab.unpersist()
+
+
+def _driver_graph(table: pa.Table, vocab_schema: T.StructType, triples: DataFrame):
+    """The graph phase of a collected vocabulary, `_banded`'s columns as
+    one Arrow table (from `toArrow`, so no `Row` objects are built):
+    linking runs on its columns in numpy, clustering and the canonical
+    pick in-process; linked is the table's columns plus the component
+    array, nodes come from the canonical rows, both as local relations,
+    and the surface → entity mapping is broadcast into the shared edge
+    aggregation. `link_s` in the returned counts is the in-process
+    linking time."""
+    spark = triples.sparkSession
     start = time.perf_counter()
     remap, counts = link_collected(table)
     counts["link_s"] = round(time.perf_counter() - start, 4)
@@ -229,7 +252,7 @@ def _driver_graph(vocab: DataFrame, triples: DataFrame):
         table["entity_id"].to_pylist(),
     )
     nodes, mapping = canonical_rows(list(members))
-    fields = {f.name: f for f in vocab.schema.fields}
+    fields = {f.name: f for f in vocab_schema.fields}
     linked_cols = ("vertex_id", "surface", "ent_type", "n_mentions", "norm")
     linked_schema = T.StructType(
         [fields[c] for c in linked_cols] + [T.StructField("component", T.LongType(), False)]

@@ -15,33 +15,19 @@ import sys
 import zipimport
 from typing import Iterator
 
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
+from ..kgref.coref import CorefState, extract_triples_with_coref
 from ..kgref.extract import extract_text, split_sentences
-from ..kgref.ner import tag_bio
+from ..kgref.ner import bio_to_spans, tag_bio
+from ..kgref.tokenize import tokenize_with_bounds
 from .schemas import LEAN_PARSED_SCHEMA
 
-
-# NOTE on sentence-level memoization: a per-worker {sentence →
-# annotation} cache was tried here (the bench corpus repeats ~45% of
-# sentences) and REVERTED — at 100k pages the resident cache (250k
-# entries ≈ millions of long-lived small objects) costs more in Python
-# GC pressure than the ~45% kernel hits save (measured 3523 → 1929
-# pages/s single-process). Boilerplate dedup belongs UPSTREAM as a
-# relational groupBy-distinct over sentence hashes, not inside the
-# worker heap.
-def _annotate(sent: str):
-    from ..kgref.ner import bio_to_spans
-    from ..kgref.tokenize import tokenize_with_bounds
-
-    tokens, bounds = tokenize_with_bounds(sent)
-    if not tokens:
-        return None
-    bio = tag_bio(tokens)
-    spans = bio_to_spans(bio, bounds)
-    return tokens, bounds, bio, spans
+# the fused stage's output batches, in the types Spark reads them with
+_PARSED_ARROW = to_arrow_schema(LEAN_PARSED_SCHEMA)
 
 
 def _drop_zip_importers() -> None:
@@ -64,52 +50,114 @@ def _drop_zip_importers() -> None:
             sys.path_importer_cache.pop(path, None)
 
 
-def _extract_parse_batches_impl(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ..kgref.coref import CorefState, extract_triples_with_coref
+def _list_of_structs(offsets: list[int], children: list[pa.Array], field: pa.Field) -> pa.Array:
+    """A list<struct> column from its flat child arrays and the int32
+    offsets of each row's first element."""
+    values = pa.StructArray.from_arrays(children, fields=list(field.type.value_type))
+    return pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), values, type=field.type)
 
-    for pdf in batches:
-        out = {f.name: [] for f in LEAN_PARSED_SCHEMA.fields}
-        ts_col = pdf["warc_ts"] if "warc_ts" in pdf.columns else [None] * len(pdf)
-        for url, lang, html, warc_ts in zip(pdf["url"], pdf["lang"], pdf["html"], ts_col):
+
+def _passed(batch: pa.RecordBatch, name: str, page: pa.Array) -> pa.Array:
+    """Input column `name` at each output row's page index, in the
+    output's type; all null where the input has no such column."""
+    t = _PARSED_ARROW.field(name).type
+    if name not in batch.schema.names:
+        return pa.nulls(len(page), t)
+    return batch.column(name).take(page).cast(t)
+
+
+def _span(starts: list[int], ends: list[int], field: pa.Field) -> pa.Array:
+    return pa.StructArray.from_arrays(
+        [pa.array(starts, pa.int64()), pa.array(ends, pa.int64())], fields=list(field.type)
+    )
+
+
+# NOTE on sentence-level memoization: a per-worker {sentence →
+# annotation} cache was tried here (the bench corpus repeats ~45% of
+# sentences) and REVERTED — at 100k pages the resident cache (250k
+# entries ≈ millions of long-lived small objects) costs more in Python
+# GC pressure than the ~45% kernel hits save (measured 3523 → 1929
+# pages/s single-process). Boilerplate dedup belongs UPSTREAM as a
+# relational groupBy-distinct over sentence hashes, not inside the
+# worker heap.
+def _extract_parse_batches_impl(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """Pages (url, lang, html and optionally warc_ts) → sentence rows in
+    `_PARSED_ARROW`, one output batch per input batch that has any.
+
+    The kernels' results go into flat per-batch lists; the two array
+    columns are built from offsets into them, and url, lang and warc_ts
+    are taken from the input batch by each sentence's page index, so no
+    per-sentence dict and no pandas frame is built."""
+    mention_field = _PARSED_ARROW.field("mention_spans")
+    triple_field = _PARSED_ARROW.field("triple_items")
+    span_field = triple_field.type.value_type.field("subj_span")
+    for batch in batches:
+        page, sent_idx, texts, n_tokens = [], [], [], []
+        m_offsets, m_start, m_end, m_type = [0], [], [], []
+        t_offsets = [0]
+        subj, pred, obj, subj_type, obj_type = [], [], [], [], []
+        subj_start, subj_end, obj_start, obj_end = [], [], [], []
+        for row, html in enumerate(batch.column("html").to_pylist()):
             text = extract_text(html)
             if not text:
                 continue
             state = CorefState()  # per-document antecedent tracker
-            for sent_idx, sent in enumerate(split_sentences(text)):
-                annot = _annotate(sent)
-                if annot is None:
+            for idx, sent in enumerate(split_sentences(text)):
+                tokens, bounds = tokenize_with_bounds(sent)
+                if not tokens:
                     continue
-                tokens, bounds, bio, spans = annot
+                bio = tag_bio(tokens)
+                spans = bio_to_spans(bio, bounds)
                 triples = extract_triples_with_coref(
                     sent, tokens, bounds, bio, state, mention_spans=spans
                 )
-                out["url"].append(url)
-                out["warc_ts"].append(warc_ts)
-                out["sent_idx"].append(sent_idx)
-                out["text"].append(sent)
-                out["lang"].append(lang)
-                out["n_tokens"].append(len(tokens))
-                out["mention_spans"].append(
-                    [{"start": s, "end": e, "ent_type": t} for s, e, t in spans]
-                )
-                out["triple_items"].append(
-                    [
-                        {
-                            "subj": t["subj"],
-                            "pred": t["pred"],
-                            "obj": t["obj"],
-                            "subj_type": t["subj_type"],
-                            "obj_type": t["obj_type"],
-                            "subj_span": {"start": t["subj_span"][0], "end": t["subj_span"][1]},
-                            "obj_span": {"start": t["obj_span"][0], "end": t["obj_span"][1]},
-                        }
-                        for t in triples
-                    ]
-                )
-        # a batch of empty-text pages only would make float64 columns,
-        # which Arrow cannot cast to the schema's timestamp
-        if out["url"]:
-            yield pd.DataFrame(out)
+                page.append(row)
+                sent_idx.append(idx)
+                texts.append(sent)
+                n_tokens.append(len(tokens))
+                for s, e, t in spans:
+                    m_start.append(s)
+                    m_end.append(e)
+                    m_type.append(t)
+                m_offsets.append(len(m_start))
+                for t in triples:
+                    subj.append(t["subj"])
+                    pred.append(t["pred"])
+                    obj.append(t["obj"])
+                    subj_type.append(t["subj_type"])
+                    obj_type.append(t["obj_type"])
+                    subj_start.append(t["subj_span"][0])
+                    subj_end.append(t["subj_span"][1])
+                    obj_start.append(t["obj_span"][0])
+                    obj_end.append(t["obj_span"][1])
+                t_offsets.append(len(subj))
+        if not page:
+            continue
+        rows = pa.array(page, pa.int32())
+        yield pa.RecordBatch.from_arrays(
+            [
+                _passed(batch, "url", rows),
+                _passed(batch, "warc_ts", rows),
+                pa.array(sent_idx, pa.int32()),
+                pa.array(texts, pa.string()),
+                _passed(batch, "lang", rows),
+                pa.array(n_tokens, pa.int32()),
+                _list_of_structs(
+                    m_offsets,
+                    [pa.array(m_start, pa.int64()), pa.array(m_end, pa.int64()),
+                     pa.array(m_type, pa.string())],
+                    mention_field,
+                ),
+                _list_of_structs(
+                    t_offsets,
+                    [pa.array(c, pa.string()) for c in (subj, pred, obj, subj_type, obj_type)]
+                    + [_span(subj_start, subj_end, span_field),
+                       _span(obj_start, obj_end, span_field)],
+                    triple_field,
+                ),
+            ],
+            schema=_PARSED_ARROW,
+        )
     _drop_zip_importers()
 
 
@@ -130,7 +178,7 @@ def extract_parse_stage(pages: DataFrame) -> DataFrame:
     in_cols = ["url", "lang", "html"]
     if "warc_ts" in pages.columns:
         in_cols.append("warc_ts")  # event-time passthrough for streaming
-    return pages.select(*in_cols).mapInPandas(
+    return pages.select(*in_cols).mapInArrow(
         _extract_parse_batches_impl, schema=LEAN_PARSED_SCHEMA
     )
 

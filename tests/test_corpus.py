@@ -98,10 +98,10 @@ def test_read_web_pages_schema_equals_inference(spark, tmp_path, layout):
 @pytest.mark.parametrize("layout", ["spark", "arrow"])
 def test_scan_and_driver_graph_job_counts(spark, tmp_path, layout):
     """The fixed Spark cost of a build, pinned: the pages scan plans
-    without a job, and the driver branch of build_graph runs four —
-    the vocabulary count, the collect of its bands, the broadcast of
-    the surface → entity mapping (Spark builds a broadcast in a job of
-    its own, even from a local relation), and the edge aggregation."""
+    without a job, and the driver branch of build_graph runs three —
+    the bounded collect of the banded vocabulary, the broadcast of the
+    surface → entity mapping (Spark builds a broadcast in a job of its
+    own, even from a local relation), and the edge aggregation."""
     from ontonotes_5_parsing_spark.pipeline import run
 
     path = write_pages(spark, layout, str(tmp_path / "pages"))
@@ -112,6 +112,28 @@ def test_scan_and_driver_graph_job_counts(spark, tmp_path, layout):
     assert out["mentions"].count() > 0 and out["triples"].count() > 0
     graph, graph_jobs = jobs_in_group(spark, f"graph-{layout}",
                                       lambda: run.build_graph(out["mentions"], out["triples"]))
-    assert graph_jobs == 4
+    assert graph_jobs == 3
     assert graph["edges"].count() > 0
+    spark.catalog.clearCache()
+
+
+def test_warm_in_memory_build_runs_three_jobs(spark, tmp_path):
+    """A whole warm build from the pages files runs three jobs: the
+    vocabulary collect runs the fused stage too (with the pages
+    repartition in it) and fills the sentences cache, which the edge
+    aggregation then reads."""
+    from ontonotes_5_parsing_spark.pipeline import run
+
+    path = write_pages(spark, "spark", str(tmp_path / "pages"))
+
+    def build():
+        out = run.build_extraction(corpus.read_web_pages(spark, path))
+        out.update(run.build_graph(out["mentions"], out["triples"]))
+        return out
+
+    build()  # the first build starts the Python workers
+    spark.catalog.clearCache()
+    out, jobs = jobs_in_group(spark, "warm-build", build)
+    assert jobs == 3
+    assert out["edges"].count() > 0 and out["nodes"].count() > 0
     spark.catalog.clearCache()

@@ -248,19 +248,52 @@ def cache_is_empty(spark) -> bool:
 
 @pytest.mark.parametrize("gate", [None, 0], ids=["driver", "distributed"])
 def test_build_graph_keeps_the_callers_caches(spark, monkeypatch, gate):
-    """build_graph leaves the extraction frames it was handed cached:
-    `storageLevel` asks the session's cache manager, so it reads NONE
-    once something has uncached a frame's plan."""
+    """build_graph leaves the extraction frames it was handed as it
+    found them: in memory only `sentences` is cached, and it stays
+    cached. `storageLevel` asks the session's cache manager, so it
+    reads NONE once something has uncached a frame's plan."""
     from pyspark import StorageLevel
 
     if gate is not None:
         monkeypatch.setattr(run, "DRIVER_GRAPH_MAX_ROWS", gate)
     out = run.build_extraction(corpus.web_pages_df(spark, 40, seed=3))
     levels = {k: df.storageLevel for k, df in out.items()}
-    assert StorageLevel.NONE not in levels.values()
+    assert [k for k, level in levels.items() if level != StorageLevel.NONE] == ["sentences"]
     run.build_graph(out["mentions"], out["triples"])
     assert {k: df.storageLevel for k, df in out.items()} == levels
     spark.catalog.clearCache()
+
+
+def test_bounded_collect_gate_boundary(spark, monkeypatch, caplog):
+    """The driver branch takes the vocabulary with a collect bounded at
+    one row over the gate: a vocabulary of exactly the gate's rows takes
+    the driver branch, one row more the distributed one, and the log
+    line's `vocab_rows` is the exact count on both, whatever the limit.
+    linked, nodes and edges are the same on every side."""
+    caplog.set_level(logging.INFO, logger=LOGGER)
+    surfaces = [("Obama", "PERSON", 3), ("Barack Obama", "PERSON", 1), ("obama", "PERSON", 1),
+                ("Turing", "PERSON", 2), ("Alan Turing", "PERSON", 1), ("France", "GPE", 2)]
+    surfaces += [(str(10_000 + 7 * i), "CARDINAL", 1 + i % 3) for i in range(24)]
+    mentions, triples = vocab_frames(
+        spark, surfaces,
+        [("Obama", "visited", "France", "PERSON", "GPE"),
+         ("Alan Turing", "visited", "France", "PERSON", "GPE"),
+         ("obama", "met", "Turing", "PERSON", "PERSON")],
+    )
+    n_vocab = len(surfaces)
+    results = {}
+    for gate, branch in ((n_vocab, "driver"), (n_vocab - 1, "distributed"), (1, "distributed")):
+        monkeypatch.setattr(run, "DRIVER_GRAPH_MAX_ROWS", gate)
+        caplog.clear()
+        g = run.build_graph(mentions, triples)
+        record = graph_log(caplog)
+        assert (record["branch"], record["vocab_rows"]) == (branch, n_vocab), gate
+        results[gate] = {k: (g[k].columns, sorted(map(tuple, g[k].collect())))
+                         for k in ("linked", "nodes", "edges")}
+        spark.catalog.clearCache()
+    assert results[n_vocab] == results[n_vocab - 1] == results[1]
+    assert len(results[n_vocab]["linked"][1]) == n_vocab
+    assert results[n_vocab]["edges"][1]
 
 
 @pytest.mark.parametrize("gate", [None, 0], ids=["driver", "distributed"])

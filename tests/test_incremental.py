@@ -128,3 +128,13 @@ def test_snapshot_from_partials_matches_direct_pick(spark, corpus, work_dir):
         for r in direct_df.join(comp, ["surface", "ent_type"]).collect()
     }
     assert got == expect and got
+
+
+def test_ingest_batch_leaves_nothing_cached(spark, corpus, tmp_path):
+    """The extraction's cache is dropped once the partial is written:
+    the returned partial is read from its files."""
+    spark.catalog.clearCache()
+    b1 = corpus["batch_dirs"][1]
+    partial = ingest_batch(spark, lambda: spark.read.parquet(b1), str(tmp_path / "work"), 1)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert partial.count() > 0

@@ -123,8 +123,7 @@ def test_coref_triples_match_oracle(stages, pages):
 
 def test_batch_of_empty_text_pages(spark):
     """An Arrow batch whose pages all extract to empty text yields no
-    sentences; an empty frame built from the empty column lists would
-    be float64 and fail the cast to the schema's timestamp."""
+    sentences."""
     from ontonotes_5_parsing_spark.pipeline.stages import extract_parse_stage
 
     pages = spark.createDataFrame(

@@ -353,13 +353,24 @@ def test_ref_check_onf_name_neg01(spark):
 
 
 # --- parse_splitting (test_utils.py:676-686) -------------------------------
-def test_ref_parse_splitting(spark):
+def test_ref_parse_splitting(spark, tmp_path):
     """Deep-nested id-list dirs (identifiers/{1,2}/all/*.id) must load
     recursively and union per split (utils.py:886-936 recursion ↔
-    recursiveFileLookup in load_split_ids)."""
+    recursiveFileLookup in load_split_ids). The tree is the reference
+    fixture's layout, written from the same vectors: each split's ids
+    are spread over both dirs, one id is listed in both (the union keeps
+    it once) and the files end in a blank line (dropped)."""
     from ontonotes_5_parsing_spark.sources.onf import load_split_ids
 
-    ids = load_split_ids(spark, "/root/reference/tests/data/identifiers")
+    root = tmp_path / "identifiers"
+    for split, docs in _IDENTIFIERS.items():
+        halves = {"1": docs[: len(docs) // 2 + 1], "2": docs[len(docs) // 2:]}
+        for part, chunk in halves.items():
+            d = root / part / "all"
+            d.mkdir(parents=True, exist_ok=True)
+            (d / f"{split}.id").write_text("\n".join(chunk) + "\n\n")
+
+    ids = load_split_ids(spark, str(root))
     got = {
         split: sorted(r.doc_id for r in rows)
         for split, rows in (

@@ -115,10 +115,12 @@ def test_resume_after_crash_before_manifest(spark, in_memory, pages_dir, tmp_pat
 
 
 def test_checkpointed_job_counts(spark, in_memory, tmp_path):
-    """A fresh checkpointed build runs the in-memory build's 6 jobs (the
-    fused UDF's job writes sentences) plus the other 5 stage writes; the
-    manifests and the re-reads start none. A fully resumed run loads
-    every stage without a job."""
+    """A fresh checkpointed build runs 9 jobs: the three extraction
+    stage writes (the sentences write runs the fused stage), build_graph's
+    three (the vocabulary collect, the mapping broadcast and the edge
+    aggregation, over the materialized stages) and the three graph stage
+    writes; the manifests and the re-reads start none. A fully resumed
+    run loads every stage without a job."""
     # a pages dir of its own: a scan of pages_dir would hit in_memory's caches
     pages_dir = str(tmp_path / "pages")
     corpus.web_pages_df(spark, N_PAGES, partitions=4).write.parquet(pages_dir)
@@ -127,7 +129,7 @@ def test_checkpointed_job_counts(spark, in_memory, tmp_path):
         corpus.read_web_pages(spark, pages_dir), work_dir=work))
     out, resumed = jobs_in_group(spark, "checkpointed-resumed", lambda: run_pipeline(
         corpus.read_web_pages(spark, pages_dir), work_dir=work, resume=True))
-    assert (fresh, resumed) == (11, 0)
+    assert (fresh, resumed) == (9, 0)
     assert_same(out, in_memory)
 
 

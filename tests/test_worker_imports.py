@@ -6,7 +6,7 @@ import sys
 import zipfile
 import zipimport
 
-import pandas as pd
+import pyarrow as pa
 
 from ontonotes_5_parsing_spark.pipeline.stages import _extract_parse_batches_impl
 
@@ -34,7 +34,7 @@ def test_fused_generator_drops_cached_zipimporters(tmp_path):
         assert first.VALUE == 1
         assert str(archive) in zip_importers()
 
-        page = pd.DataFrame(
+        page = pa.RecordBatch.from_pydict(
             {
                 "url": ["https://t.example/1"],
                 "lang": ["en"],
@@ -42,7 +42,7 @@ def test_fused_generator_drops_cached_zipimporters(tmp_path):
             }
         )
         batches = list(_extract_parse_batches_impl(iter([page])))
-        assert len(batches) == 1 and len(batches[0]) == 1
+        assert len(batches) == 1 and batches[0].num_rows == 1
         assert zip_importers() == []
 
         from kg_zip_probe_pkg import second
