@@ -18,6 +18,8 @@ import os
 import sys
 import time
 
+import pandas as pd
+
 
 HEADLINE = [
     "rel_pricing_summary",
@@ -47,10 +49,9 @@ def main() -> int:
     # warm up the JVM and the Python UDF workers (package import per
     # worker) so timings measure steady-state throughput, not fork+import
     from pyspark.sql import functions as F
-    from pyspark.sql.functions import PandasUDFType
 
-    @F.pandas_udf("long", PandasUDFType.SCALAR)
-    def _warm(s):
+    @F.pandas_udf("long")
+    def _warm(s: pd.Series) -> pd.Series:
         import ontonotes_5_parsing_spark.kgref  # noqa: F401
         return s
 

@@ -22,7 +22,7 @@ Subpackages:
                    a DuckDB oracle.
 - ``corpus``     — deterministic synthetic web_pages generator
                    (FIXTURES.md §1); no external data.
-- ``session``    — SparkSession factory (Arrow on, AQE on).
+- ``session``    — SparkSession factory (Arrow on, AQE off).
 """
 
 __version__ = "0.1.0"

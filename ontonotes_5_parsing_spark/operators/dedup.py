@@ -212,20 +212,8 @@ def q_jaccard_pairs(spark, sf_dir):
     _jkey = (session_cache_key(spark), sf_dir)
     if _jkey in _JACCARD_CACHE:
         return _JACCARD_CACHE[_jkey]
-    # Same scheduling cut as the KG graph phase (pipeline/run.py): the
-    # input is the `documents` table (500 rows at sf0.001/sf0.01, 5,000
-    # at sf0.1), where AQE's one-job-per-query-stage mechanics dominate
-    # this query (measured 11 jobs/48 stages/54 tasks per run at sf0.1 —
-    # nearly every stage single-task), while every post-encode shuffle
-    # is postings/pairs-sized. The whole build — including the
-    # verified-pairs materialization — runs as static plans.
-    from ..pipeline.run import _static_plan
-
-    base = _docs(spark, sf_dir)
-    with _static_plan(spark):
-        # materialized while still inside the static-plan scope, so the
-        # caller's action is a cached-scan job regardless of planner mode
-        out = _jaccard_pairs_plan(spark, base).localCheckpoint(eager=True)
+    # materialized here, so the caller's action is a cached-scan job
+    out = _jaccard_pairs_plan(spark, _docs(spark, sf_dir)).localCheckpoint(eager=True)
     _JACCARD_CACHE[_jkey] = out
     return out
 

@@ -733,6 +733,8 @@ def q_kg_merge_increment(spark, sf_dir):
     n_batches) — n_batches = batches contributing to the canonical
     surface's count (1 or 2), all exact ints/strings.
     """
+    from ..pipeline.incremental import canonical_snapshot
+
     base = _materialize_for_oracle(spark, sf_dir)
     mentions = spark.read.parquet(f"{base}/mentions.parquet")
     linked = spark.read.parquet(f"{base}/linked.parquet")
@@ -750,29 +752,7 @@ def q_kg_merge_increment(spark, sf_dir):
         F.sum("cnt").alias("n_mentions"),
         F.countDistinct("batch").alias("n_batches"),
     )
-    comp = linked.select("surface", "ent_type", "component")
-    joined = merged.join(F.broadcast(comp), ["surface", "ent_type"])
-    per_component = joined.groupBy("component").agg(
-        F.min_by(
-            F.struct("surface", "ent_type", "n_batches"),
-            F.struct(
-                (-F.col("n_mentions")).alias("neg_freq"),
-                F.length("surface").alias("len"),
-                F.col("surface"),
-                F.col("ent_type"),
-            ),
-        ).alias("canon"),
-        F.sum("n_mentions").alias("n_mentions"),
-        F.count(F.lit(1)).alias("n_surfaces"),
-    )
-    return per_component.select(
-        "component",
-        F.col("canon.surface").alias("canonical"),
-        F.col("canon.ent_type").alias("ent_type"),
-        "n_mentions",
-        "n_surfaces",
-        F.col("canon.n_batches").alias("n_batches"),
-    )
+    return canonical_snapshot(merged, linked.select("surface", "ent_type", "component"))
 
 
 SQL_KG_MERGE_INCREMENT = f"""

@@ -53,7 +53,8 @@ def q_resume_pending(spark: SparkSession, sf_dir: str) -> DataFrame:
     primitive as txt_hash_sample), materialized with a lineage manifest,
     then `resume_filter` anti-joins it away. Scale shape: the done side
     is a distinct-key projection, so at 100 TB the anti-join shuffles
-    only (key) pairs and AQE can broadcast a small done set.
+    only (key) pairs, and a done set whose files are under
+    `spark.sql.autoBroadcastJoinThreshold` is broadcast.
     """
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     done_dir = _done_dir(sf_dir)

@@ -104,10 +104,16 @@ def merge_snapshot(
     spark: SparkSession, work_dir: str, components: DataFrame
 ) -> DataFrame:
     """Canonical-entity snapshot from merged partials + a component
-    remap (surface, ent_type, component): per component, the canonical
-    is the most frequent surface (ties: shortest, then lexicographic —
-    the reduce_entities.py:111-113 pick, same as canonicalize.py)."""
-    merged = merged_counts(spark, work_dir)
+    remap (surface, ent_type, component); see `canonical_snapshot`."""
+    return canonical_snapshot(merged_counts(spark, work_dir), components)
+
+
+def canonical_snapshot(merged: DataFrame, components: DataFrame) -> DataFrame:
+    """Per component, the canonical of merged (surface, ent_type,
+    n_mentions, n_batches) counts: the most frequent surface (ties:
+    shortest, then lexicographic — the reduce_entities.py:111-113 pick,
+    same as canonicalize.py), with the component's mention and surface
+    totals and the canonical's n_batches."""
     joined = merged.join(F.broadcast(components), ["surface", "ent_type"])
     per_component = joined.groupBy("component").agg(
         F.min_by(

@@ -112,7 +112,7 @@ def candidate_pairs(vocab_with_bands: DataFrame) -> DataFrame:
     documents the vocabulary still joins bucket-locally instead of
     all-pairs. Bucket-size skew is bounded explicitly: buckets larger
     than MAX_BUCKET are dropped before the self-join (the quadratic
-    blow-up guard), and AQE skew-join splits what remains.
+    blow-up guard), so no bucket emits more than MAX_BUCKET² pairs.
     """
     exploded = vocab_with_bands.select(
         "vertex_id",

@@ -4,21 +4,23 @@ Two phases with distinct execution characters:
 
 - `build_extraction`: pages → sentences → mentions → triples. One fused
   Arrow UDF stage, then shuffle-free explodes. In memory only
-  `sentences` is kept (persisted under the static plan); mentions and
-  triples are lazy explodes over it. Checkpointed mode materializes all
-  three.
+  `sentences` is kept (persisted); mentions and triples are lazy
+  explodes over it. Checkpointed mode materializes all three.
 - `build_graph`: mentions/triples → linked → nodes/edges. Eager. The
   graph phase works on the surface vocabulary, which stays roughly
   constant as the corpus grows, so one exact gate — the row count of
   the banded vocabulary, taken with a collect bounded at
-  `DRIVER_GRAPH_MAX_ROWS + 1` rows — picks both the engine and the
-  planning mode: at or below the gate the collected Arrow table is
-  linked (numpy over its columns), clustered and canonicalized
-  in-process, and only the corpus-sized edge aggregation runs in Spark,
-  all under the static plan; above it the distributed
-  `link_vocab`/`build_nodes_edges` path runs under the session's own
-  adaptive-execution setting. Both give identical linked/nodes/edges.
-  One structured log line per call records the branch and its counts.
+  `DRIVER_GRAPH_MAX_ROWS + 1` rows — picks the engine: at or below the
+  gate the collected Arrow table is linked (numpy over its columns),
+  clustered and canonicalized in-process, and only the corpus-sized
+  edge aggregation runs in Spark; above it the distributed
+  `link_vocab`/`build_nodes_edges` path runs. Both give identical
+  linked/nodes/edges. One structured log line per call records the
+  branch and its counts.
+
+Every plan is static (`session.get_spark` turns AQE off): each shuffle
+here is salted, bounded or sized in code, and no code here writes
+session conf.
 
 A warm in-memory build runs three Spark jobs: the vocabulary collect
 (which runs the fused stage and fills the `sentences` cache), the
@@ -34,9 +36,7 @@ from __future__ import annotations
 
 import json
 import logging
-import threading
 import time
-from contextlib import contextmanager
 from typing import Callable
 
 import pyarrow as pa
@@ -74,78 +74,13 @@ def build_extraction(
     on. The default persists `sentences` alone, so the Python chain runs
     once and both explodes read its cache; `run_pipeline`'s checkpointed
     mode passes a step that materializes (or resumes) every stage
-    instead.
-
-    `sentences` is kept under the static plan. A plan is fixed when it
-    is persisted or written, and its only shuffle, the pages
-    `repartition`, already has an exact partition count; planned
-    adaptively, that shuffle would run as a job of its own before the
+    instead. The only shuffle, the pages `repartition`, runs inside the
     job that fills the cache or writes the stage.
     """
-    with _static_plan(pages.sparkSession):
-        sentences = keep("sentences", extract_parse_stage(pages))
+    sentences = keep("sentences", extract_parse_stage(pages))
     mentions = keep("mentions", mentions_from_parsed(sentences))
     triples = keep("triples", triples_from_parsed(sentences))
     return {"sentences": sentences, "mentions": mentions, "triples": triples}
-
-
-# Task-count right-sizing inside the static-plan scope: every shuffle
-# in it is vocabulary-/postings-sized, so 32 shuffle partitions means
-# mostly-empty tasks whose scheduling IS the stage cost. 8 matches what
-# the CC loop picks for vocabulary-sized data (~1 partition per 100k
-# vertices, min 1, here bounded by parallelism). Results are
-# partition-count-invariant.
-_STATIC_PLAN_SHUFFLE_PARTITIONS = 8
-
-
-# The static-plan scope flips a *session-global* conf, so concurrent
-# scopes on one session must serialize: an RLock (no pipeline path
-# nests scopes, but a caller may wrap `build_graph`, which opens its
-# own, in another) plus a depth counter so only the outermost scope
-# toggles/restores. A thread that merely *plans a query* during another
-# thread's scope still sees AQE off — that is the documented single-controller contract; the lock
-# guarantees the stronger invariant that scopes themselves can never
-# interleave and leave AQE permanently off (round-4 ADVICE / VERDICT #6).
-_aqe_scope_lock = threading.RLock()
-_aqe_scope_depth = 0
-
-
-@contextmanager
-def _static_plan(spark):
-    """Run the enclosed actions without adaptive execution.
-
-    For work the caller knows to be small: the driver branch of
-    `build_graph` (an exact vocabulary count at or below
-    `DRIVER_GRAPH_MAX_ROWS`) and `q_jaccard_pairs` (the `documents`
-    table). Every shuffle there is vocabulary- or postings-sized by
-    construction, so AQE's runtime re-planning has nothing to optimize,
-    while its mechanics cost one scheduled job per query stage:
-    measured on a warm crawl build, 15 jobs per build with AQE vs 6
-    without, identical results. `build_extraction` keeps `sentences`
-    under it too: its only shuffle is the pages `repartition`, whose
-    partition count is already exact."""
-    global _aqe_scope_depth
-    with _aqe_scope_lock:
-        _aqe_scope_depth += 1
-        outermost = _aqe_scope_depth == 1
-        try:
-            if outermost:
-                prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-                prev_parts = spark.conf.get("spark.sql.shuffle.partitions", "32")
-                # parsed before any conf changes, so a bad value raises
-                # with the session untouched
-                parts = str(min(int(prev_parts), _STATIC_PLAN_SHUFFLE_PARTITIONS))
-                try:
-                    spark.conf.set("spark.sql.adaptive.enabled", "false")
-                    spark.conf.set("spark.sql.shuffle.partitions", parts)
-                    yield
-                finally:
-                    spark.conf.set("spark.sql.adaptive.enabled", prev)
-                    spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-            else:
-                yield
-        finally:
-            _aqe_scope_depth -= 1
 
 
 # The gate of build_graph: vocabularies of at most this many rows are
@@ -182,6 +117,12 @@ def _static_plan(spark):
 #   distributed s          5.22     5.33     7.30
 # In-process linking (`link_s`) is 0.24/0.43/0.68 s of the numpy
 # driver time. The driver branch now leads about 3x through 20k rows.
+# Far above the gate, with every plan static: 10,000 pages of 7 numbers
+# drawn from 10,000-99,999 (48,505 vocabulary rows), gate forced to 0,
+# build_graph alone, warm builds 1-3 of two sessions per side: 9 jobs
+# in 9.75-13.22 s static, against 29 jobs in 11.62-13.02 s under AQE
+# (with the vocabulary aggregated twice, before it was cached ahead of
+# the collect), at identical linked/nodes/edges.
 DRIVER_GRAPH_MAX_ROWS = 10_000
 
 log = logging.getLogger(__name__)
@@ -190,25 +131,21 @@ log = logging.getLogger(__name__)
 def build_graph(mentions: DataFrame, triples: DataFrame) -> dict[str, DataFrame]:
     """mentions/triples → linked/nodes/edges.
 
-    Eager. Under the static plan, the banded vocabulary is collected
-    with a limit of one row over the gate, so the collect is bounded
-    before it runs and its row count is the exact gate. The driver
-    branch links that table and materializes edges inside the same
-    scope. Above the gate the vocabulary is persisted and counted
-    there, for the log line's exact count, and the distributed branch
-    runs after the scope closes, under the session's adaptive-execution
-    setting, and materializes linked/nodes/edges."""
-    spark = mentions.sparkSession
-    with _static_plan(spark):
-        vocab = surface_vocab(mentions)
-        table = _banded(vocab).limit(DRIVER_GRAPH_MAX_ROWS + 1).toArrow()
-        branch = "driver" if table.num_rows <= DRIVER_GRAPH_MAX_ROWS else "distributed"
-        if branch == "driver":
-            n_vocab = table.num_rows
-            out, counts = _driver_graph(table, vocab.schema, triples)
-        else:
-            n_vocab = vocab.persist().count()
-    if branch == "distributed":
+    Eager. The vocabulary is persisted, and its banded columns are
+    collected with a limit of one row over the gate, so the collect is
+    bounded before it runs, its row count is the exact gate, and its job
+    fills the vocabulary cache. The driver branch drops that cache, links
+    the table and materializes edges. Above the gate the vocabulary is
+    counted from its cache, for the log line's exact count, and the
+    distributed branch materializes linked/nodes/edges from it."""
+    vocab = surface_vocab(mentions).persist()
+    table = _banded(vocab).limit(DRIVER_GRAPH_MAX_ROWS + 1).toArrow()
+    if table.num_rows <= DRIVER_GRAPH_MAX_ROWS:
+        branch, n_vocab = "driver", table.num_rows
+        vocab.unpersist()
+        out, counts = _driver_graph(table, vocab.schema, triples)
+    else:
+        branch, n_vocab = "distributed", vocab.count()
         counts = dict.fromkeys(("candidate_pairs", "accepted_pairs", "dropped_keys", "link_s"))
         linked = link_vocab(vocab).persist()
         nodes, edges = build_nodes_edges(triples, linked)

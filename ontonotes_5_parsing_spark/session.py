@@ -1,9 +1,13 @@
-"""SparkSession factory — Arrow on, AQE on, tuned for the sandbox.
+"""SparkSession factory — Arrow on, static plans, tuned for the sandbox.
 
 On a real cluster the same builder is used minus the `local[...]`
 master; shuffle partitions are sized by the driver via
 ``spark.sql.shuffle.partitions`` (set to cores locally, to ~2-3× total
 executor cores on a cluster).
+
+Adaptive execution is off: the package salts, bounds and sizes its
+shuffles itself, so runtime re-planning would only add a job per query
+stage. No package code writes session conf.
 """
 
 from __future__ import annotations
@@ -36,9 +40,7 @@ def get_spark(
     builder = (
         builder.appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.adaptive.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch",

@@ -202,7 +202,6 @@ def test_arrow_linking_matches_spark_formulation(spark, max_bucket, examples):
     round checks all of them; MAX_BUCKET is set low in most examples,
     so that keys drop."""
     from ontonotes_5_parsing_spark.pipeline import linking
-    from ontonotes_5_parsing_spark.pipeline.run import _static_plan
 
     rows = [
         (f"u{k}", 0, surface, None if ent_type is None else f"{i}{ent_type}")
@@ -215,22 +214,21 @@ def test_arrow_linking_matches_spark_formulation(spark, max_bucket, examples):
     saved = linking.MAX_BUCKET
     linking.MAX_BUCKET = max_bucket
     try:
-        with _static_plan(spark):
-            banded = linking.add_minhash_bands(linking.surface_vocab(mentions)).persist()
-            table = banded.select(
-                "vertex_id", "norm", "ent_type", "bands", linking.tokens("norm").alias("toks")
-            ).toArrow()
-            remap, counts = linking.link_collected(table)
-            pairs = candidate_pairs(banded).persist()
-            n_pairs = pairs.count()
-            accepted = [tuple(r) for r in score_pairs(pairs).collect()]
-            dropped = (
-                banded.select("ent_type", F.explode("bands").alias("b"))
-                .groupBy("ent_type", "b.band", "b.bh").count()
-                .filter(F.col("count") > max_bucket).count()
-            )
-            pairs.unpersist()
-            banded.unpersist()
+        banded = linking.add_minhash_bands(linking.surface_vocab(mentions)).persist()
+        table = banded.select(
+            "vertex_id", "norm", "ent_type", "bands", linking.tokens("norm").alias("toks")
+        ).toArrow()
+        remap, counts = linking.link_collected(table)
+        pairs = candidate_pairs(banded).persist()
+        n_pairs = pairs.count()
+        accepted = [tuple(r) for r in score_pairs(pairs).collect()]
+        dropped = (
+            banded.select("ent_type", F.explode("bands").alias("b"))
+            .groupBy("ent_type", "b.band", "b.bh").count()
+            .filter(F.col("count") > max_bucket).count()
+        )
+        pairs.unpersist()
+        banded.unpersist()
     finally:
         linking.MAX_BUCKET = saved
     assert counts == {"candidate_pairs": n_pairs, "accepted_pairs": len(accepted),

@@ -1,9 +1,9 @@
-"""Contracts for the graph-phase scheduling cuts.
+"""Contracts for static planning and the graph-phase scheduling cuts.
 
-1. ``_static_plan`` disables AQE only inside the scope and always
-   restores the prior setting (even on error). ``build_graph`` opens it
-   for the vocabulary count and the driver branch only: the distributed
-   branch runs under the session's own setting.
+1. Every plan is static: ``get_spark`` turns adaptive execution off and
+   no pipeline step writes session conf. The distributed branch's job
+   count is pinned, so re-enabling adaptive planning shows up; a
+   caller's session with AQE on still gets identical outputs.
 2. ``connected_components`` returns only the remap rows on both
    branches, and the caller-side left join + coalesce reconstructs the
    complete labeling.
@@ -11,9 +11,14 @@
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.conf import RuntimeConfig
 
+import ontonotes_5_parsing_spark.pipeline.run as run
+from conftest import jobs_in_group
+from ontonotes_5_parsing_spark import corpus
 from ontonotes_5_parsing_spark.pipeline.linking import connected_components
-from ontonotes_5_parsing_spark.pipeline.run import _static_plan
+
+DEFAULT_GATE = run.DRIVER_GRAPH_MAX_ROWS
 
 
 def labeling(vertices, remap):
@@ -24,107 +29,6 @@ def labeling(vertices, remap):
         .withColumn("component", F.coalesce("component", "vertex_id"))
         .collect()
     }
-
-
-def test_static_plan_disables_and_restores_aqe(spark):
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    with _static_plan(spark):
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-
-
-def test_static_plan_restores_on_error(spark):
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    with pytest.raises(RuntimeError):
-        with _static_plan(spark):
-            raise RuntimeError("boom")
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-
-
-def test_static_plan_failing_conf_set_leaves_aqe_as_it_was(spark, monkeypatch):
-    """A conf.set that raises inside the scope's set-up (after AQE was
-    already switched off) must still restore both settings."""
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    parts = spark.conf.get("spark.sql.shuffle.partitions")
-    conf = spark.conf
-    real_set = conf.set
-    failed = []
-
-    def flaky_set(key, value):
-        if key == "spark.sql.shuffle.partitions" and not failed:
-            failed.append(key)
-            raise RuntimeError("conf.set failed")
-        real_set(key, value)
-
-    monkeypatch.setattr(conf, "set", flaky_set)
-    with pytest.raises(RuntimeError, match="conf.set failed"):
-        with _static_plan(spark):
-            pass
-    monkeypatch.undo()
-    assert failed
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    assert spark.conf.get("spark.sql.shuffle.partitions") == parts
-    # the depth counter unwound too: the next scope toggles again
-    with _static_plan(spark):
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-
-
-def test_static_plan_unparsable_partitions_changes_nothing(spark, monkeypatch):
-    """The partition count is parsed before the first conf.set, so a
-    value int() rejects raises with the session untouched."""
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    conf = spark.conf
-    real_get = conf.get
-
-    def get(key, *default):
-        if key == "spark.sql.shuffle.partitions":
-            return "auto"
-        return real_get(key, *default)
-
-    monkeypatch.setattr(conf, "get", get)
-    with pytest.raises(ValueError):
-        with _static_plan(spark):
-            pass
-    monkeypatch.undo()
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-
-
-def test_static_plan_concurrent_scopes_never_strand_aqe_off(spark):
-    """Two threads opening the scope concurrently on one session must
-    serialize (round-4 ADVICE: overlapping scopes could restore a
-    clobbered value); afterwards AQE is back to the original setting."""
-    import threading
-
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    inside = []
-    errs = []
-
-    def worker():
-        try:
-            with _static_plan(spark):
-                inside.append(spark.conf.get("spark.sql.adaptive.enabled"))
-        except Exception as exc:  # noqa: BLE001
-            errs.append(exc)
-
-    threads = [threading.Thread(target=worker) for _ in range(4)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-    assert not errs
-    assert inside == ["false"] * 4
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-
-
-def test_static_plan_nested_scopes_same_thread(spark):
-    """Nesting (run_pipeline's checkpointed path) must not deadlock and
-    must restore only at the outermost exit."""
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    with _static_plan(spark):
-        with _static_plan(spark):
-            assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-        assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
 def test_mapping_only_distributed_branch_filters_identity_rows(spark):
@@ -163,73 +67,88 @@ def test_mapping_only_no_edges(spark):
     assert labeling(vertices, remap) == {(1, 1), (2, 2)}
 
 
-def test_build_graph_identical_with_gate_forced_noop(spark, monkeypatch):
-    """The vocabulary gate forced to 0 sends the sf0.001 pages through
-    the distributed branch, which runs under the session's AQE setting;
-    linked/nodes/edges must be IDENTICAL to the driver branch's, and
-    AQE must be back on afterwards. Forcing the gate low on a real
-    corpus exercises exactly the plan a large deployment would run."""
-    import ontonotes_5_parsing_spark.pipeline.run as run
-    from ontonotes_5_parsing_spark.corpus import web_pages_from_documents
-
-    sf = "/root/testdata/sf0.001"
-
-    def graph_outputs():
-        pages = web_pages_from_documents(spark, sf)
-        out = run.build_extraction(pages)
+def graph_outputs_both_branches(spark, monkeypatch):
+    """build_graph's linked/nodes/edges from the sf0.001 pages on the
+    driver branch and with the gate forced to 0 (the distributed one)."""
+    results = []
+    for gate in (DEFAULT_GATE, 0):
+        monkeypatch.setattr(run, "DRIVER_GRAPH_MAX_ROWS", gate)
+        out = run.build_extraction(corpus.web_pages_from_documents(spark, "/root/testdata/sf0.001"))
         g = run.build_graph(out["mentions"], out["triples"])
-        return {
+        results.append({
             k: (g[k].columns, sorted(map(tuple, g[k].collect())))
             for k in ("linked", "nodes", "edges")
-        }
+        })
+        spark.catalog.clearCache()
+    return results
 
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    driver = graph_outputs()
-    monkeypatch.setattr(run, "DRIVER_GRAPH_MAX_ROWS", 0)
-    spark.catalog.clearCache()
-    distributed = graph_outputs()
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+
+def test_build_graph_identical_with_gate_forced_noop(spark, monkeypatch):
+    """The vocabulary gate forced to 0 sends the sf0.001 pages through
+    the distributed branch; linked/nodes/edges must be IDENTICAL to the
+    driver branch's. Forcing the gate low on a real corpus exercises
+    exactly the plan a large deployment would run. A caller's own
+    session may run with AQE on: both branches still give the same
+    outputs there, and the setting is left as the caller set it."""
+    driver, distributed = graph_outputs_both_branches(spark, monkeypatch)
     assert driver == distributed
     assert all(len(rows) > 0 for _cols, rows in distributed.values())
-
-
-@pytest.mark.parametrize(
-    "gate, spied, planned",
-    [(None, "link_collected", "false"), (0, "link_vocab", "true")],
-    ids=["driver", "distributed"],
-)
-def test_build_graph_plans_each_branch_by_the_vocabulary_count(
-    spark, monkeypatch, gate, spied, planned
-):
-    """One count picks the planning mode: the driver branch runs under
-    the static plan (AQE off), the distributed branch under the
-    session's own setting (on here), and the setting is restored."""
-    import ontonotes_5_parsing_spark.pipeline.run as run
-    from ontonotes_5_parsing_spark import corpus
-
-    if gate is not None:
-        monkeypatch.setattr(run, "DRIVER_GRAPH_MAX_ROWS", gate)
-    seen = []
-    real = getattr(run, spied)
-
-    def spy(*args, **kwargs):
-        seen.append(spark.conf.get("spark.sql.adaptive.enabled"))
-        return real(*args, **kwargs)
-
-    monkeypatch.setattr(run, spied, spy)
     spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        adaptive = graph_outputs_both_branches(spark, monkeypatch)
+        assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    assert adaptive == [driver, distributed]
+
+
+def test_pipeline_writes_no_session_conf(spark, monkeypatch, tmp_path):
+    """build_extraction, build_graph on both branches and a checkpointed
+    run_pipeline never call ``spark.conf.set``/``unset``, and leave every
+    session setting as it was."""
+    writes = []
+    monkeypatch.setattr(RuntimeConfig, "set", lambda self, *a: writes.append(("set", a)))
+    monkeypatch.setattr(RuntimeConfig, "unset", lambda self, *a: writes.append(("unset", a)))
+    before = spark.conf.getAll
+    pages = corpus.web_pages_df(spark, 20, seed=5)
+    for gate in (DEFAULT_GATE, 0):
+        monkeypatch.setattr(run, "DRIVER_GRAPH_MAX_ROWS", gate)
+        out = run.build_extraction(pages)
+        run.build_graph(out["mentions"], out["triples"])
+        spark.catalog.clearCache()
+    run.run_pipeline(pages, work_dir=str(tmp_path / "work"))
+    assert writes == []
+    assert spark.conf.getAll == before
+
+
+def test_distributed_branch_job_count(spark, monkeypatch):
+    """The distributed branch of build_graph (gate 0, 20 pages, the
+    sentences cache filled) runs 9 jobs as static plans: the bounded
+    vocabulary collect, the count, and seven for linking, components and
+    the nodes/edges counts (33 under AQE). The vocabulary is aggregated
+    once: the collect's job fills its cache, so the count job runs two
+    stages (the cached scan with its partial count, and the final count)
+    instead of re-running the mentions → vocabulary aggregation."""
+    monkeypatch.setattr(run, "DRIVER_GRAPH_MAX_ROWS", 0)
     out = run.build_extraction(corpus.web_pages_df(spark, 20, seed=5))
-    run.build_graph(out["mentions"], out["triples"])
+    assert out["mentions"].count() > 0
+    graph, jobs = jobs_in_group(spark, "distributed-graph",
+                                lambda: run.build_graph(out["mentions"], out["triples"]))
+    assert jobs == 9
+    status = spark.sparkContext.statusTracker()
+    count_job = sorted(status.getJobIdsForGroup("distributed-graph"))[1]
+    stages = [status.getStageInfo(s) for s in status.getJobInfo(count_job).stageIds]
+    # a stage a job shares with an earlier one is skipped: it runs no task
+    assert sum(1 for st in stages if st.numCompletedTasks > 0) == 2
+    assert graph["edges"].count() > 0
     spark.catalog.clearCache()
-    assert seen == [planned]
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
 def test_nodes_edges_broadcast_exchange_is_reused(spark):
     """build_nodes_edges broadcasts the surface→entity mapping on both
-    endpoint joins; under the static-plan scope (AQE off — the regime
-    the graph phase actually runs in) the two BroadcastExchanges must
-    dedupe via ReuseExchange so the mapping is built and shipped once."""
+    endpoint joins; in the session's static plan the two
+    BroadcastExchanges must dedupe via ReuseExchange so the mapping is
+    built and shipped once."""
     from ontonotes_5_parsing_spark.pipeline.canonicalize import build_nodes_edges
 
     linked = spark.createDataFrame(
@@ -240,13 +159,8 @@ def test_nodes_edges_broadcast_exchange_is_reused(spark):
         [("u1", 0, "alpha corp", "met", "beta", "ORG", "PERSON")],
         ["url", "sent_idx", "subj", "pred", "obj", "subj_type", "obj_type"],
     )
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        _nodes, edges = build_nodes_edges(triples, linked)
-        plan = edges._jdf.queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    _nodes, edges = build_nodes_edges(triples, linked)
+    plan = edges._jdf.queryExecution().executedPlan().toString()
     import re
 
     # count BroadcastExchange NODES (tree lines), not substring hits —

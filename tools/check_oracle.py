@@ -44,7 +44,8 @@ def main() -> int:
                     help="check registry.ALL_QUERIES, not just the driver-graded 50")
     args = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
+    # the repo this script belongs to, not whatever checkout is installed
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
     from ontonotes_5_parsing_spark.session import get_spark
 
@@ -57,7 +58,7 @@ def main() -> int:
             f"--sf-dir {args.sf_dir} those comparisons are stale/invalid"
         )
 
-    spark = get_spark(app_name="oracle_check", master="local[8]", shuffle_partitions=8)
+    spark = get_spark(app_name="oracle_check", shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
