@@ -3,9 +3,7 @@ per-doc keeper verdicts), n-gram Jaccard (exact-recall prefix-filtered),
 MinHash-LSH, SimHash, embedding-cosine.
 
 Every registry entry is DuckDB-hash-checked: the MinHash/SimHash
-registry forms use md5-derived hashes both engines can compute; the
-xxhash64 variants (q_minhash_buckets, q_simhash) are kept as documented
-fast paths outside the registry (pytest-covered, never SQL-checkable).
+forms use md5-derived hashes both engines can compute.
 """
 
 from __future__ import annotations
@@ -15,16 +13,12 @@ from pyspark.sql import functions as F
 from ..session import session_cache_key
 
 
-def _hash_fn(k: int):
+def _md5_fn(k: int):
     """Unary lambda hashing with seed k. NOTE: the seed must be closed
     over by a factory — a two-parameter `lambda t, k=k:` would have k
     silently rebound to the ARRAY INDEX (PySpark passes (element, idx)
     to binary transform lambdas), collapsing all "independent" hash
     functions into one."""
-    return lambda t: F.xxhash64(t, F.lit(k))
-
-
-def _md5_fn(k: int):
     return lambda t: F.md5(F.concat(t, F.lit(str(k))))
 
 
@@ -117,9 +111,9 @@ def _jaccard_pairs_plan(spark, base):
     than the string-ordered form at sf0.1, identical output). The two
     inner localCheckpoints cut lineage where one frame feeds multiple
     plan branches (tokenization → prefix + both verify sides; prefixes
-    → both self-join sides) — same disease/cure as linking.py's banding
-    keys; at production scale these are the encoded-tokens stage tables
-    the lineage protocol would write anyway."""
+    → both self-join sides); at production scale these are the
+    encoded-tokens stage tables the lineage protocol would write
+    anyway."""
     docs = base.select(
         "doc_id",
         "source",
@@ -236,52 +230,12 @@ WHERE round(CAST(len(list_intersect(a.toks, b.toks)) AS DOUBLE)
 """
 
 
-# --- MinHash-LSH bucket dedup (shingle→minhash→band→bucket) ---------------
-# the scale path: candidate pairs only inside buckets. xxhash64-based →
-# no SQL oracle (rows-only check).
-N_HASHES = 8
-BAND_SIZE = 2
-
-
-def q_minhash_buckets(spark, sf_dir):
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", F.array_distinct(F.split(F.col("text"), " ")).alias("toks")
-    )
-    minhashes = [
-        F.array_min(
-            F.transform(F.col("toks"), _hash_fn(k))
-        ).alias(f"mh{k}")
-        for k in range(N_HASHES)
-    ]
-    sig = docs.select("doc_id", *minhashes)
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(
-                    *[F.col(f"mh{b * BAND_SIZE + j}") for j in range(BAND_SIZE)]
-                ).alias("bh"),
-            )
-            for b in range(N_HASHES // BAND_SIZE)
-        ]
-    )
-    exploded = sig.select("doc_id", F.explode(bands).alias("b")).select(
-        "doc_id", "b.band", "b.bh"
-    )
-    return (
-        exploded.groupBy("band", "bh")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min("doc_id").alias("keeper_doc_id"))
-        .filter(F.col("n_docs") > 1)
-    )
-
-
 # --- MinHash-LSH with an EXACT cross-engine oracle -------------------------
-# Same shingle→minhash→band→bucket pipeline as q_minhash_buckets, but the
-# hash family is md5 hex strings and "min" is lexicographic string min —
-# a valid MinHash (md5 is uniform over hex strings; byte-wise string
-# ordering is identical in Spark and DuckDB for ASCII hex), so the
-# bucket table is exactly reproducible in SQL. The xxhash64 variant
-# remains the fast scale path; this one is the verifiable form.
+# shingle→minhash→band→bucket, with md5 hex strings as the hash family
+# and lexicographic string min as "min" — a valid MinHash (md5 is
+# uniform over hex strings; byte-wise string ordering is identical in
+# Spark and DuckDB for ASCII hex), so the bucket table is exactly
+# reproducible in SQL.
 MD5_HASHES = 6
 MD5_BAND = 2
 
@@ -341,36 +295,6 @@ WITH sig AS (
 SELECT band, bh, count(*) AS n_docs, min(doc_id) AS keeper_doc_id
 FROM exploded GROUP BY band, bh HAVING count(*) > 1
 """
-
-
-# --- SimHash (64-bit) ------------------------------------------------------
-# per doc: for each bit i, vote = Σ_tokens sign(bit_i(xxhash64(token)));
-# simhash bit i = vote > 0. Pure built-ins; no SQL oracle.
-def q_simhash(spark, sf_dir):
-    docs = _docs(spark, sf_dir).select(
-        "doc_id", F.split(F.col("text"), " ").alias("toks")
-    )
-    exploded = docs.select("doc_id", F.explode("toks").alias("token")).withColumn(
-        "h", F.xxhash64("token")
-    )
-    votes = exploded.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(F.shiftright("h", i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
-            ).alias(f"v{i}")
-            for i in range(64)
-        ]
-    )
-    # bit i's weight is a Python-side literal (two's complement for bit 63)
-    simhash = F.lit(0).cast("long")
-    for i in range(64):
-        weight = (1 << i) if i < 63 else -(1 << 63)
-        simhash = simhash.bitwiseOR(
-            F.when(F.col(f"v{i}") > 0, F.lit(weight).cast("long")).otherwise(
-                F.lit(0).cast("long")
-            )
-        )
-    return votes.select("doc_id", simhash.alias("simhash"))
 
 
 # --- embedding-cosine near-dup pairs (IVF-style blocked) -------------------
@@ -452,7 +376,8 @@ WHERE list_sum(list_transform(generate_series(1, {EMB_DIM}),
 
 
 # --- SimHash with an EXACT cross-engine oracle -----------------------------
-# Same vote-per-bit scheme as q_simhash but the per-token hash is the
+# per doc: for each bit i, vote = Σ_tokens sign(bit_i(token hash));
+# simhash bit i = vote > 0. The per-token hash is the
 # first 15 hex chars of md5 (a 60-bit integer both engines can derive:
 # Spark conv(hex,16,10), DuckDB '0x…'::BIGINT), so the fingerprint is
 # exactly reproducible in SQL. 60 bits, always positive.
@@ -558,12 +483,6 @@ FROM labels GROUP BY component
 """
 
 
-# The xxhash64 variants (q_minhash_buckets, q_simhash) are the documented
-# fast paths — same pipelines as the md5-oracled registry entries but with
-# the cheaper JVM hash. They are exercised by pytest (tests/test_dedup.py)
-# and kept OUT of the driver registry: they can only ever be rows-only
-# checks (xxhash64 has no DuckDB equivalent), and the registry slots are
-# better spent on hash-verifiable queries.
 QUERIES = {
     "dedup_exact": (q_exact_dedup, SQL_EXACT_DEDUP),
     "dedup_keep_first": (q_dedup_keep_first, SQL_DEDUP_KEEP_FIRST),

@@ -167,8 +167,8 @@ def materialize_iceberg(
     ``_lineage.json``.
 
     Raises RuntimeError with setup guidance when no Iceberg catalog is
-    configured (this sandbox): the caller (run_pipeline's checkpointed
-    path) uses the parquet + manifest fallback instead.
+    configured. No pipeline code calls this sink: `run_pipeline`'s
+    checkpointed mode writes parquet + manifest with `materialize`.
     """
     spark = df.sparkSession
     catalog = table.split(".", 1)[0]

@@ -1,30 +1,30 @@
-"""Blocked entity linking: MinHash/LSH candidate generation + native
-pair scoring + bounded label-propagation connected components.
+"""Blocked entity linking: MinHash/LSH candidate generation + pair
+scoring + bounded label-propagation connected components.
 
 Generalizes the reference's similarity-based label clustering
 (`find_similary_item` + nearest-seed assignment,
-/root/reference/reduce_entities.py:12-20,99-106 — a rare×topN cross
+reduce_entities.py:12-20,99-106 of the reference — a rare×topN cross
 join) to web scale: instead of an O(n·k) cross join over all surface
 pairs, candidate pairs are generated only inside LSH buckets of
-character-shingle MinHash signatures, so the join is an equi-join on
-(ent_type, band, band_hash) that Catalyst shuffles by bucket key.
+character-shingle MinHash signatures, keyed by (ent_type, band,
+band_hash).
 
-The distributed path is native DataFrame ops — `xxhash64` for hashing,
-higher-order array functions for shingling/minhashing, `levenshtein`
-for scoring. No Python UDFs.
-
-The vocabulary stays roughly constant as the corpus grows, so
-`run.build_graph` usually takes it to the driver instead (one exact
-row-count gate), as one Arrow table of the Spark-computed bands and
-tokens, and runs `link_collected` on its columns: the same blocking
-keys, `MAX_BUCKET` guard and accept rule (`accepts`) as numpy array
-operations over all pairs at once, then `union_find`, so both paths
-give identical links.
+Spark computes the blocking keys (`xxhash64` and higher-order array
+functions, one SQL expression) and the tokens. Blocking and the accept
+rule have one formulation, numpy over Arrow arrays: `pair_keys` and
+`accepts`. The vocabulary stays roughly constant as the corpus grows,
+so `run.build_graph` usually takes it to the driver (one exact
+row-count gate) and runs them there, in `link_collected`, then
+`union_find`. Above the gate the same two kernels run inside Spark
+tasks (`candidate_pairs`, `score_pairs`), over keys hash-partitioned by
+bucket, then `connected_components`; both branches give identical
+links.
 """
 
 from __future__ import annotations
 
 import os
+from functools import partial
 from typing import Iterable
 
 import numpy as np
@@ -106,13 +106,16 @@ MAX_BUCKET = 256  # hot-bucket guard: a blocking key shared by more
 
 
 def candidate_pairs(vocab_with_bands: DataFrame) -> DataFrame:
-    """Self-join inside LSH buckets → distinct candidate pairs (a < b).
+    """Distinct candidate pairs (src < dst) inside LSH buckets.
 
-    The join key (ent_type, band, bh) is the blocking key: at 10^12
-    documents the vocabulary still joins bucket-locally instead of
-    all-pairs. Bucket-size skew is bounded explicitly: buckets larger
-    than MAX_BUCKET are dropped before the self-join (the quadratic
-    blow-up guard), so no bucket emits more than MAX_BUCKET² pairs.
+    The blocking key (ent_type, band, bh) is the shuffle key: the
+    exploded keys are hash-partitioned on it, so every bucket lands
+    whole in one partition, and each task runs `pair_keys` — the
+    pairing `link_collected` runs on the driver — over its partition's
+    keys at once. Buckets larger than MAX_BUCKET are dropped there (the
+    quadratic blow-up guard), so no bucket emits more than MAX_BUCKET²
+    pairs. A pair sharing keys that landed in different partitions is
+    emitted by each, hence the final distinct.
     """
     exploded = vocab_with_bands.select(
         "vertex_id",
@@ -120,105 +123,81 @@ def candidate_pairs(vocab_with_bands: DataFrame) -> DataFrame:
         "ent_type",
         F.explode("bands").alias("b"),
     ).select("vertex_id", "norm", "ent_type", "b.band", "b.bh")
-    # bucket-size guard as a window count over the blocking key: one
-    # shuffle of `exploded`, and the output stays hash-partitioned on
-    # (ent_type, band, bh) so the self-join below reuses the partitioning
-    # instead of re-shuffling both sides (the groupBy-sizes + re-join
-    # spelling costs two extra shuffles of the same data)
-    from pyspark.sql import Window
-
-    key_w = Window.partitionBy("ent_type", "band", "bh")
-    exploded = (
-        exploded.withColumn("bucket_n", F.count(F.lit(1)).over(key_w))
-        .filter(F.col("bucket_n") <= MAX_BUCKET)
-        .drop("bucket_n")
-    )
-    # localCheckpoint, not just persist: this DF feeds both self-join
-    # sides — without the lineage cut Catalyst re-plans the vocabulary
-    # aggregation and the banding per branch per action (measured when
-    # the banding was 12 separate transform columns: planning was ~3×
-    # the actual data work of the link stage at bench scale). Round-4:
-    # the cut sits AFTER the window filter (fused into the same pass,
-    # VERDICT r3 #5), so the exploded keys are evaluated and
-    # materialized ONCE — post-guard, already
-    # hash-partitioned on the join key — instead of checkpoint-then-
-    # shuffle writing the pre-filter set twice. At production scale this
-    # materialization is the blocked-keys stage table the lineage/resume
-    # protocol writes anyway (SURVEY.md §7).
-    # eager=False: the logical plan is already the truncated LogicalRDD
-    # (what kills the planning blowup), while the RDD itself
-    # materializes inside the first pairs action — one fewer sequential
-    # job barrier than an eager checkpoint. Both self-join branches
-    # reference the SAME RDD, so its stage is computed once and the
-    # persisted partitions are reused.
-    exploded = exploded.localCheckpoint(eager=False)
-    left = exploded.alias("l")
-    right = exploded.alias("r")
+    # read here, on the driver: a worker imports this module afresh
+    pair_partition = partial(_pair_partition, max_bucket=MAX_BUCKET)
     return (
-        left.join(
-            right,
-            on=[
-                F.col("l.ent_type") == F.col("r.ent_type"),
-                F.col("l.band") == F.col("r.band"),
-                F.col("l.bh") == F.col("r.bh"),
-                F.col("l.vertex_id") < F.col("r.vertex_id"),
-            ],
-        )
-        .select(
-            F.col("l.vertex_id").alias("src"),
-            F.col("r.vertex_id").alias("dst"),
-            F.col("l.norm").alias("norm_a"),
-            F.col("r.norm").alias("norm_b"),
-        )
+        exploded.repartition("ent_type", "band", "bh")
+        .mapInArrow(pair_partition, "src long, dst long, norm_a string, norm_b string")
         .distinct()
     )
+
+
+def _pair_partition(batches, max_bucket: int):
+    """`candidate_pairs`' task: one `pair_keys` call over all of the
+    partition's exploded keys, so no bucket is split."""
+    batches = list(batches)
+    if not batches:
+        return
+    keys = pa.Table.from_batches(batches)
+    vertex = keys["vertex_id"].to_numpy()
+    norm = keys["norm"].combine_chunks()
+    a, b, _ = pair_keys(vertex, norm, keys["ent_type"].combine_chunks(),
+                        keys["band"].to_numpy(), keys["bh"].to_numpy(), max_bucket)
+    yield pa.record_batch([pa.array(vertex[a]), pa.array(vertex[b]), norm.take(a), norm.take(b)],
+                          names=["src", "dst", "norm_a", "norm_b"])
 
 
 MAX_LEV_RATIO = 0.2
 
 
 def tokens(norm: str):
-    """A normalized surface's tokens as `score_pairs` and the token
+    """A normalized surface's tokens as the accept rule and the token
     blocking keys split it: a Java regex, so `\\s` is ASCII whitespace
     only, and a leading separator gives an empty first token."""
     return F.split(F.col(norm), r"\s+")
 
 
 def score_pairs(pairs: DataFrame) -> DataFrame:
-    """Keep alias-like pairs. Two native accept rules:
-
-    1. token containment — one surface's token set is a subset of the
-       other's ("obama" ⊆ "barack obama"), the web-scale analog of the
-       reference's prefix-credit rule (utils.py:1088-1096);
-    2. near-duplicate — normalized Levenshtein ≤ 0.2 (typos/variants),
-       the analog of its Levenshtein remainder rule (utils.py:1097-1103).
-    """
-    toks_a = tokens("norm_a")
-    toks_b = tokens("norm_b")
-    containment = (
-        F.size(F.array_intersect(toks_a, toks_b))
-        == F.least(F.size(toks_a), F.size(toks_b))
-    )
-    lev_ok = (
-        F.levenshtein("norm_a", "norm_b")
-        / F.greatest(F.length("norm_a"), F.length("norm_b"))
-    ) <= MAX_LEV_RATIO
-    return pairs.filter(containment | lev_ok).select("src", "dst")
+    """Keep the alias-like pairs: `accepts`, run in Spark tasks over each
+    Arrow batch of (norm_a, norm_b) and their Spark-computed tokens."""
+    # read here, on the driver: a worker imports this module afresh
+    accepted = partial(_accepted, max_ratio=MAX_LEV_RATIO)
+    return pairs.select(
+        "src", "dst", "norm_a", "norm_b",
+        tokens("norm_a").alias("toks_a"), tokens("norm_b").alias("toks_b"),
+    ).mapInArrow(accepted, "src long, dst long")
 
 
-def accepts(norm: pa.Array, toks: pa.Array, a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """`score_pairs`' accept rule over the pairs (norm[a[i]], norm[b[i]])
-    as a boolean mask, given each norm's Spark-computed `tokens`.
-    Lengths are code points on both engines and the ratio is the same
-    double division, so the two agree.
+def _accepted(batches, max_ratio: float):
+    """`score_pairs`' task: norm_a's rows, then norm_b's, so pair i is
+    rows (i, n + i)."""
+    for batch in batches:
+        n = batch.num_rows
+        norm = pa.concat_arrays([batch["norm_a"], batch["norm_b"]])
+        toks = pa.concat_arrays([batch["toks_a"], batch["toks_b"]])
+        ok = accepts(norm, toks, np.arange(n), np.arange(n) + n, max_ratio)
+        yield batch.select(["src", "dst"]).filter(pa.array(ok))
+
+
+def accepts(norm: pa.Array, toks: pa.Array, a: np.ndarray, b: np.ndarray,
+            max_ratio: float) -> np.ndarray:
+    """The accept rule over the pairs (norm[a[i]], norm[b[i]]) as a
+    boolean mask, given each norm's Spark-computed `tokens`. A pair is
+    kept when
+
+    1. one side's tokens are contained in the other's ("obama" ⊆
+       "barack obama"), the web-scale analog of the reference's
+       prefix-credit rule (utils.py:1088-1096), or
+    2. Levenshtein distance / longer length ≤ `max_ratio` (typos and
+       variants), the analog of its Levenshtein remainder rule
+       (utils.py:1097-1103). Lengths and distances count code points.
 
     Containment counts the distinct tokens a pair shares, one packed
     (pair, token) key per distinct token of each side, against the
-    shorter token *list*, as `array_intersect` against `size` does.
-    The rest is scored on code points: the length difference alone
-    rejects most pairs; below 10 code points only a distance of 0 or 1
-    can pass, which the shared prefix and suffix decide; the few longer
-    pairs go through `levenshtein`."""
+    shorter token *list*. The rest is scored on code points: the length
+    difference alone rejects most pairs; where two edits already fail,
+    only a distance of 0 or 1 can pass, which the shared prefix and
+    suffix decide; the few other pairs go through `levenshtein`."""
     n = len(a)
     n_toks = pc.fill_null(pc.list_value_length(toks), 0).to_numpy()
     tok_row = pc.list_parent_indices(toks).to_numpy().astype(np.int64)
@@ -241,13 +220,13 @@ def accepts(norm: pa.Array, toks: pa.Array, a: np.ndarray, b: np.ndarray) -> np.
     longest = np.maximum(len_a, len_b)
     # the edit distance is at least the length difference, so this
     # rejects exactly the pairs the full distance would reject
-    keep = np.abs(len_a - len_b) / longest <= MAX_LEV_RATIO
+    keep = np.abs(len_a - len_b) / longest <= max_ratio
     rest, longest, short = rest[keep], longest[keep], np.minimum(len_a, len_b)[keep]
     # where two edits already fail, only a distance of 0 or 1 can pass.
     # Without the shared affixes, the distance is at most 1 exactly when
     # neither rest is longer than 1, and then equals the longer rest's
     # length; both are 2 or more otherwise
-    one_edit = 2 / longest > MAX_LEV_RATIO
+    one_edit = 2 / longest > max_ratio
     distance = np.empty(len(rest), np.int64)
     if one_edit.any():
         near, width = rest[one_edit], int(longest[one_edit].max())
@@ -262,7 +241,7 @@ def accepts(norm: pa.Array, toks: pa.Array, a: np.ndarray, b: np.ndarray) -> np.
         distance[~one_edit] = [
             _affix_free_levenshtein(strings[i], strings[j]) for i, j in zip(a[far], b[far])
         ]
-    ok[rest] = distance / longest <= MAX_LEV_RATIO
+    ok[rest] = distance / longest <= max_ratio
     return ok
 
 
@@ -333,50 +312,40 @@ def union_find(edges: Iterable[tuple[int, int]]) -> dict[int, int]:
     return {v: find(v) for v in list(parent)}
 
 
-def link_collected(table: pa.Table) -> tuple[dict[int, int], dict[str, int]]:
-    """In-process twin of `candidate_pairs` → `score_pairs` →
-    `connected_components` over a collected vocabulary with the columns
-    vertex_id, norm, ent_type, bands and toks. Returns the remap
-    (vertex_id → component, non-identity rows only) and the counts:
-    candidate and accepted pairs, and blocking keys dropped by
-    `MAX_BUCKET`.
+def pair_keys(vertex: np.ndarray, norm: pa.Array, ent_type: pa.Array, band: np.ndarray,
+              bh: np.ndarray, max_bucket: int) -> tuple[np.ndarray, np.ndarray, int]:
+    """Blocking over exploded keys: row i is the blocking key (ent_type[i],
+    band[i], bh[i]) of the surface (vertex[i], norm[i]). Returns the
+    distinct candidate pairs as two arrays of key rows, one row standing
+    for each side, with vertex[a] < vertex[b], and the number of keys
+    dropped because more than `max_bucket` rows share them.
 
-    Pairs are between distinct (vertex_id, norm) classes, as the
-    distinct pair rows are: rows sharing a vertex_id and a norm
-    ("Obama"/"obama") are one class. The exploded keys are sorted by
-    (ent_type, band, bh), so a bucket is a run; its size counts exploded
-    rows like the window does, so a surface listing a token twice counts
-    twice, as does each row of a class. Keys with a null ent_type count
-    but never pair, as in the equi-join. Each bucket's pairs come from
-    the upper triangle of its member classes, taken for all buckets of
-    one size at once, then oriented by vertex_id and deduplicated on one
-    packed int64 key."""
-    vertex = table["vertex_id"].to_numpy()
-    norm = table["norm"].combine_chunks()
+    Pairs are between distinct (vertex_id, norm) classes: rows sharing a
+    vertex_id and a norm ("Obama"/"obama") are one class. The keys are
+    sorted by (ent_type, band, bh), so a bucket is a run; its size
+    counts rows, so a surface listing a token twice counts twice, as
+    does each row of a class. Keys with a null ent_type count but never
+    pair, as in an equi-join. Each bucket's pairs come from the upper
+    triangle of its member classes, taken for all buckets of one size at
+    once, then oriented by vertex_id and deduplicated on one packed
+    int64 key."""
     _, vertex_rank = np.unique(vertex, return_inverse=True)
     norm_code = pc.fill_null(pc.dictionary_encode(norm).indices, -1).to_numpy()
     class_key = vertex_rank * (len(vertex) + 1) + norm_code + 1
-    _, first, row_class = np.unique(class_key, return_index=True, return_inverse=True)
+    _, first, key_class = np.unique(class_key, return_index=True, return_inverse=True)
     n_classes = len(first)
     class_vertex = vertex[first]
 
-    bands = table["bands"].combine_chunks()
-    keys = pc.list_flatten(bands)
-    key_row = pc.list_parent_indices(bands).to_numpy()
-    ent_code = pc.fill_null(
-        pc.dictionary_encode(table["ent_type"].combine_chunks()).indices, -1
-    ).to_numpy()[key_row]
-    band = pc.struct_field(keys, "band").to_numpy()
-    bh = pc.struct_field(keys, "bh").to_numpy()
+    ent_code = pc.fill_null(pc.dictionary_encode(ent_type).indices, -1).to_numpy()
     order = np.lexsort((bh, band, ent_code))
     ent_code, band, bh = ent_code[order], band[order], bh[order]
     new = np.ones(len(order), bool)
     new[1:] = (ent_code[1:] != ent_code[:-1]) | (band[1:] != band[:-1]) | (bh[1:] != bh[:-1])
     starts = np.flatnonzero(new)
     sizes = np.diff(np.append(starts, len(order)))
-    dropped = int(np.count_nonzero(sizes > MAX_BUCKET))
-    pairing = (sizes > 1) & (sizes <= MAX_BUCKET) & (ent_code[starts] >= 0)
-    member = row_class[key_row[order]]
+    dropped = int(np.count_nonzero(sizes > max_bucket))
+    pairing = (sizes > 1) & (sizes <= max_bucket) & (ent_code[starts] >= 0)
+    member = key_class[order]
     src, dst = [np.empty(0, np.int64)], [np.empty(0, np.int64)]
     for size in np.unique(sizes[pairing]):
         classes = member[starts[pairing & (sizes == size)][:, None] + np.arange(size)]
@@ -390,11 +359,34 @@ def link_collected(table: pa.Table) -> tuple[dict[int, int], dict[str, int]]:
     pair = np.unique(
         np.where(lower, src, dst)[keep] * n_classes + np.where(lower, dst, src)[keep]
     )
-    a, b = pair // n_classes, pair % n_classes
-    ok = accepts(norm.take(first), table["toks"].combine_chunks().take(first), a, b)
-    remap = union_find(zip(class_vertex[a[ok]].tolist(), class_vertex[b[ok]].tolist()))
+    return first[pair // n_classes], first[pair % n_classes], dropped
+
+
+def link_collected(table: pa.Table) -> tuple[dict[int, int], dict[str, int]]:
+    """The linking of a collected vocabulary with the columns vertex_id,
+    norm, ent_type, bands and toks, in process: `pair_keys` over its
+    exploded bands, `accepts`, then `union_find` — the kernels the
+    distributed branch runs in Spark tasks. Returns the remap
+    (vertex_id → component, non-identity rows only) and the counts:
+    candidate and accepted pairs, and blocking keys dropped by
+    `MAX_BUCKET`."""
+    vertex = table["vertex_id"].to_numpy()
+    norm = table["norm"].combine_chunks()
+    bands = table["bands"].combine_chunks()
+    keys = pc.list_flatten(bands)
+    key_row = pc.list_parent_indices(bands).to_numpy()
+    # dictionary-encoded first, so exploding them copies indices only
+    a, b, dropped = pair_keys(
+        vertex[key_row], pc.dictionary_encode(norm).take(key_row),
+        pc.dictionary_encode(table["ent_type"].combine_chunks()).take(key_row),
+        pc.struct_field(keys, "band").to_numpy(), pc.struct_field(keys, "bh").to_numpy(),
+        MAX_BUCKET,
+    )
+    a, b = key_row[a], key_row[b]
+    ok = accepts(norm, table["toks"].combine_chunks(), a, b, MAX_LEV_RATIO)
+    remap = union_find(zip(vertex[a[ok]].tolist(), vertex[b[ok]].tolist()))
     counts = {
-        "candidate_pairs": len(pair),
+        "candidate_pairs": len(a),
         "accepted_pairs": int(np.count_nonzero(ok)),
         "dropped_keys": dropped,
     }
@@ -502,9 +494,9 @@ def link_entities(mentions: DataFrame) -> DataFrame:
     component).
 
     Eager: returns the linked frame persisted and counted, so the
-    vocabulary it was built from (persisted, as it feeds banding, both
-    sides of the candidate self-join and the component join) can be
-    unpersisted here. The caller unpersists the result.
+    vocabulary it was built from (persisted, as it feeds both the
+    blocking keys and the component join) can be unpersisted here. The
+    caller unpersists the result.
     """
     vocab = surface_vocab(mentions).persist()
     linked = link_vocab(vocab).persist()
@@ -517,7 +509,7 @@ def link_vocab(vocab: DataFrame) -> DataFrame:
     """The distributed linking of a persisted `surface_vocab`."""
     banded = add_minhash_bands(vocab)
     # pairs feed both the edge count and the collect/propagation inside
-    # connected_components — persist so the LSH self-join runs once
+    # connected_components — persist so blocking and scoring run once
     pairs = score_pairs(candidate_pairs(banded)).persist()
     # the vertices plan (a distinct over vocab) only executes on the
     # distributed CC branch

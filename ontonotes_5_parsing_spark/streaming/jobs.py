@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline.schemas import WEB_PAGES_SCHEMA
-from ..pipeline.stages import extract_parse_stage, mentions_from_parsed, triples_from_parsed
+from ..pipeline.stages import extract_parse_stage, triples_from_parsed
 
 
 def read_pages_stream(spark: SparkSession, pages_dir: str) -> DataFrame:
@@ -64,15 +64,10 @@ def windowed_mention_counts(
     Returns a started query writing to an in-memory sink named
     'mention_counts'.
     """
-    pages = read_pages_stream(spark, pages_dir)
-    parsed = extract_parse_stage(pages)
-    # carry event time through the parse by re-joining the page feed's
-    # timestamp on url (stream-static joins need a static side; instead
-    # propagate warc_ts inside the UDF? — simpler: mention rows keep the
-    # url, and the page timestamp column is added before parsing)
-    mentions = mentions_from_parsed(parsed)
-    ts_by_url = pages.select("url", "warc_ts")
-    with_ts = mentions.join(ts_by_url, "url")
+    parsed = extract_parse_stage(read_pages_stream(spark, pages_dir))
+    # the lean parsed schema carries warc_ts through the UDF, so each
+    # mention takes its page's event time without a join
+    with_ts = parsed.select("warc_ts", F.explode("mention_spans.ent_type").alias("ent_type"))
     counts = (
         with_ts.withWatermark("warc_ts", watermark)
         .groupBy(F.window("warc_ts", window).alias("w"), "ent_type")

@@ -1,53 +1,14 @@
-"""Dedup operator family: the xxhash64 fast paths (kept out of the
-driver registry — not SQL-reproducible) and invariants of the
-exact-recall prefix-filtered Jaccard join.
+"""Dedup operator family: invariants of the exact-recall
+prefix-filtered Jaccard join and the hot-cell guards.
 
-The md5 variants are oracle-verified by the driver gate
-(tests/test_operators_oracle.py); these tests pin the fast paths'
-semantics against the same pipeline shapes.
+The registry forms are oracle-verified by the driver gate
+(tests/test_operators_oracle.py).
 """
 
 import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
-
-
-def test_minhash_xxhash_buckets_shape_and_keeper(spark):
-    from ontonotes_5_parsing_spark.operators.dedup import q_minhash_buckets
-
-    rows = q_minhash_buckets(spark, SF).collect()
-    assert rows, "expected at least one multi-doc band bucket"
-    for r in rows:
-        assert r.n_docs > 1  # buckets are only emitted for collisions
-        assert r.keeper_doc_id >= 0
-    # band ids stay within the configured band count
-    from ontonotes_5_parsing_spark.operators.dedup import BAND_SIZE, N_HASHES
-
-    assert {r.band for r in rows} <= set(range(N_HASHES // BAND_SIZE))
-
-
-def test_simhash_xxhash_is_deterministic_and_complete(spark):
-    from ontonotes_5_parsing_spark.operators.dedup import q_simhash
-
-    df1 = {r.doc_id: r.simhash for r in q_simhash(spark, SF).collect()}
-    df2 = {r.doc_id: r.simhash for r in q_simhash(spark, SF).collect()}
-    assert df1 == df2  # partitioning-independent
-    n_docs = spark.read.parquet(f"{SF}/documents.parquet").count()
-    assert len(df1) == n_docs  # one fingerprint per document
-
-
-def test_simhash_exact_dups_share_fingerprint(spark):
-    """Documents with identical text must simhash identically; the
-    md5-exact-dedup keeper groups are the ground truth."""
-    from ontonotes_5_parsing_spark.operators.dedup import q_simhash
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    sim = q_simhash(spark, SF)
-    joined = docs.join(sim, "doc_id").groupBy(F.md5("text")).agg(
-        F.countDistinct("simhash").alias("n_fp")
-    )
-    assert joined.filter(F.col("n_fp") > 1).count() == 0
 
 
 def test_jaccard_pairs_match_bruteforce(spark):

@@ -205,8 +205,8 @@ def test_empty_vocabulary(spark, monkeypatch, caplog):
         spark, monkeypatch, caplog, *vocab_frames(spark, []), forced_gate=-1
     )
     assert counts.pop("link_s") >= 0
-    assert counts == {"branch": "driver", "vocab_rows": 0, "candidate_pairs": 0,
-                      "accepted_pairs": 0, "dropped_keys": 0}
+    assert counts == {"branch": "driver", "adaptive": False, "vocab_rows": 0,
+                      "candidate_pairs": 0, "accepted_pairs": 0, "dropped_keys": 0}
 
 
 def test_build_graph_logs_one_structured_line(spark, monkeypatch, caplog):
@@ -223,6 +223,7 @@ def test_build_graph_logs_one_structured_line(spark, monkeypatch, caplog):
     assert isinstance(link_s, float) and 0 <= link_s < 60
     assert record == {
         "branch": "driver",
+        "adaptive": False,
         "vocab_rows": 3,
         "candidate_pairs": 1,
         "accepted_pairs": 1,
@@ -232,14 +233,26 @@ def test_build_graph_logs_one_structured_line(spark, monkeypatch, caplog):
     monkeypatch.setattr(run, "DRIVER_GRAPH_MAX_ROWS", 0)
     run.build_graph(mentions, triples)
     # counts the distributed branch does not compute are null, not guessed
-    assert graph_log(caplog) == {
+    distributed = {
         "branch": "distributed",
+        "adaptive": False,
         "vocab_rows": 3,
         "candidate_pairs": None,
         "accepted_pairs": None,
         "dropped_keys": None,
         "link_s": None,
     }
+    assert graph_log(caplog) == distributed
+    # a caller's session that plans adaptively runs more jobs; the line
+    # says so, from the session's own setting
+    caplog.clear()
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    try:
+        run.build_graph(mentions, triples)
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    assert graph_log(caplog) == {**distributed, "adaptive": True}
+    spark.catalog.clearCache()
 
 
 def cache_is_empty(spark) -> bool:

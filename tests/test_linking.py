@@ -1,5 +1,6 @@
 """Entity linking + canonicalization + graph materialization."""
 
+import pyarrow.parquet as pq
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -16,6 +17,9 @@ from ontonotes_5_parsing_spark.pipeline.linking import (
     score_pairs,
     union_find,
 )
+
+from linking_oracle import duckdb_linking
+from test_properties import near_duplicates
 
 
 @pytest.fixture(scope="module")
@@ -171,36 +175,50 @@ def test_label_propagation_matches_union_find_on_random_edge_sets(spark, example
 
 
 # Tokens that share shingles and prefixes, so buckets hold several
-# surfaces and pairs land on both sides of the accept rule.
-LINK_TOKENS = ["ab", "abc", "abd", "ba", "b", "12345", "12346", "1234", "\u00e9t\u00e9"]
+# surfaces and pairs land on both sides of the accept rule; some carry
+# NUL, NBSP or a non-BMP code point.
+LINK_TOKENS = ["ab", "abc", "abd", "ba", "b", "12345", "12346", "1234", "\u00e9t\u00e9",
+               "\U0001d538", "x\x00", "a\u00a0b"]
+# Java's regex \s matches the ASCII ones only
+SEPARATORS = [" ", " ", "  ", "\t", "\x0b", "\u00a0", "\u2003"]
 
 
 @st.composite
 def vocabularies(draw):
-    """(surface, ent_type) mention rows: surfaces of 1-3 tokens (so a
-    token may repeat within a surface), some with case and leading-space
-    variants that share their vertex_id, under two entity types or
-    none; a surface may be mentioned twice."""
+    """(surface, ent_type) mention rows, under two entity types or none;
+    a surface may be mentioned twice. A surface is 1-3 tokens (a token
+    may repeat) joined by separators `tokens` does or does not split
+    on, sometimes led by one, with case and leading-space variants that
+    share its vertex_id; or it is one of a near-duplicate pair, both
+    under the same entity type."""
     rows = []
     for _ in range(draw(st.integers(1, 24))):
-        surface = " ".join(draw(st.lists(st.sampled_from(LINK_TOKENS), min_size=1, max_size=3)))
         ent_type = draw(st.sampled_from(["A", "A", "B", None]))
-        variants = draw(st.sets(st.sampled_from([str.upper, str.title, " {}".format])))
-        for form in (surface, *(v(surface) for v in variants)):
+        if draw(st.integers(0, 3)) == 0:
+            forms = list(draw(near_duplicates()))
+        else:
+            toks = draw(st.lists(st.sampled_from(LINK_TOKENS), min_size=1, max_size=3))
+            seps = [draw(st.sampled_from(["", "", "", "\t", "\u00a0"]))]
+            seps += [draw(st.sampled_from(SEPARATORS)) for _ in toks[1:]]
+            surface = "".join(sep + tok for sep, tok in zip(seps, toks))
+            variants = draw(st.sets(st.sampled_from([str.upper, str.title, " {}".format])))
+            forms = [surface, *(v(surface) for v in variants)]
+        for form in forms:
             rows += [(form, ent_type)] * draw(st.integers(1, 2))
     return rows
 
 
 @given(st.sampled_from([2, 3, 5, 256, 256]), st.lists(vocabularies(), min_size=10, max_size=10))
 @settings(max_examples=8, deadline=None)
-def test_arrow_linking_matches_spark_formulation(spark, max_bucket, examples):
-    """link_collected on the driver branch's Arrow table gives the remap
-    and counts of the Spark formulation: union_find over `candidate_pairs`
-    → `score_pairs`, and the keys the bucket-size window drops. The 10
-    vocabularies of an example are one input, each under its own entity
-    types (rows without one share the null type), so that one Spark
-    round checks all of them; MAX_BUCKET is set low in most examples,
-    so that keys drop."""
+def test_linking_matches_duckdb_oracle(spark, tmp_path_factory, max_bucket, examples):
+    """Both linking branches against the DuckDB oracle, on the remap and
+    the counts: `link_collected` on the driver branch's Arrow table, and
+    the distributed `link_vocab` (with `candidate_pairs`/`score_pairs`
+    counted). The 10 vocabularies of an example are one input, each
+    under its own entity types (rows without one share the null type),
+    so that one Spark round checks all of them; MAX_BUCKET is set low
+    in most examples, so that keys drop. It is set on the driver only:
+    the distributed branch must carry it into its tasks."""
     from ontonotes_5_parsing_spark.pipeline import linking
 
     rows = [
@@ -211,29 +229,30 @@ def test_arrow_linking_matches_spark_formulation(spark, max_bucket, examples):
     mentions = spark.createDataFrame(
         rows, "url string, sent_idx int, surface string, ent_type string"
     )
+    vocab_dir = str(tmp_path_factory.mktemp("banded_vocab") / "vocab")
     saved = linking.MAX_BUCKET
     linking.MAX_BUCKET = max_bucket
     try:
-        banded = linking.add_minhash_bands(linking.surface_vocab(mentions)).persist()
-        table = banded.select(
+        vocab = linking.surface_vocab(mentions).persist()
+        banded = linking.add_minhash_bands(vocab)
+        banded.select(
             "vertex_id", "norm", "ent_type", "bands", linking.tokens("norm").alias("toks")
-        ).toArrow()
-        remap, counts = linking.link_collected(table)
-        pairs = candidate_pairs(banded).persist()
-        n_pairs = pairs.count()
-        accepted = [tuple(r) for r in score_pairs(pairs).collect()]
-        dropped = (
-            banded.select("ent_type", F.explode("bands").alias("b"))
-            .groupBy("ent_type", "b.band", "b.bh").count()
-            .filter(F.col("count") > max_bucket).count()
-        )
+        ).write.parquet(vocab_dir)
+        remap, counts = linking.link_collected(pq.read_table(vocab_dir))
+        pairs = linking.candidate_pairs(banded).persist()
+        distributed = {"candidate_pairs": pairs.count(),
+                       "accepted_pairs": linking.score_pairs(pairs).count()}
         pairs.unpersist()
-        banded.unpersist()
+        linked = linking.link_vocab(vocab).filter("component != vertex_id")
+        distributed_remap = dict(linked.select("vertex_id", "component").distinct().collect())
+        vocab.unpersist()
     finally:
         linking.MAX_BUCKET = saved
-    assert counts == {"candidate_pairs": n_pairs, "accepted_pairs": len(accepted),
-                      "dropped_keys": dropped}
-    assert remap == union_find(accepted)
+    expected_remap, expected = duckdb_linking(vocab_dir, max_bucket)
+    assert counts == expected
+    assert remap == expected_remap
+    assert distributed == {k: expected[k] for k in distributed}
+    assert distributed_remap == expected_remap
 
 
 def test_salted_vocab_counts_exact_under_extreme_skew(spark):
@@ -271,7 +290,7 @@ def test_salted_vocab_counts_exact_under_extreme_skew(spark):
 
 def test_candidate_hot_bucket_guard(spark, monkeypatch):
     """A blocking key shared by more than MAX_BUCKET surfaces is dropped
-    before the self-join (quadratic-fanout guard): surfaces linked ONLY
+    before pairing (quadratic-fanout guard): surfaces linked ONLY
     through the hot token produce no candidate pair, while pairs that
     also share a rarer key survive."""
     from ontonotes_5_parsing_spark.pipeline import linking

@@ -117,14 +117,12 @@ def test_jaccard_candidate_join_is_token_keyed(spark):
         )
 
 
-def test_lsh_banding_lineage_is_cut(spark):
-    """The LSH blocking keys must be materialized (localCheckpoint)
-    before the candidate self-join: the 12-way minhash banding is a huge
-    expression tree referenced from three plan branches (bucket sizing +
-    both join sides), and without the lineage cut Catalyst planning time
-    dominated the whole link stage (~3× the data work at bench scale).
-    Regression pin: the candidate-pair plan scans the checkpointed RDD
-    and contains NO banding expressions of its own."""
+def test_lsh_candidates_pair_in_tasks(spark):
+    """Candidate pairs come from the pairing kernel in Spark tasks, not
+    from a self-join: the plan has no join, and exactly one hash
+    exchange on the blocking key (ent_type, band, bh), right below the
+    MapInArrow, so each task sees whole buckets. The distinct's own
+    exchange sits above it."""
     from ontonotes_5_parsing_spark import corpus
     from ontonotes_5_parsing_spark.pipeline.linking import (
         add_minhash_bands,
@@ -136,9 +134,13 @@ def test_lsh_banding_lineage_is_cut(spark):
     mentions = build_extraction(corpus.web_pages_df(spark, 10))["mentions"]
     cand = candidate_pairs(add_minhash_bands(surface_vocab(mentions)))
     plan = cand._jdf.queryExecution().executedPlan().toString()
-    assert "ExistingRDD" in plan or "Scan ExistingRDD" in plan
-    assert "array_min" not in plan  # banding computed before the cut
-    assert "minhash" not in plan.lower() or "mh0" not in plan
+    assert "Join" not in plan, plan
+    lines = plan.splitlines()
+    key_exchanges = [i for i, ln in enumerate(lines)
+                     if re.search(r"Exchange hashpartitioning\(ent_type#\d+, band#\d+, bh#\d+", ln)]
+    assert len(key_exchanges) == 1, plan
+    # its parent, printed on the line above
+    assert "MapInArrow" in lines[key_exchanges[0] - 1], plan
 
 
 def test_jaccard_tokenization_lineage_is_cut(spark):

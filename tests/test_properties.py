@@ -196,14 +196,20 @@ def near_duplicates(draw):
 @given(st.lists(st.one_of(st.tuples(norms, norms), near_duplicates()), min_size=1, max_size=12))
 @settings(max_examples=200, deadline=None)
 def test_inprocess_accept_rule_matches_score_pairs(spark, pairs):
-    """linking.accepts on Spark-computed tokens keeps exactly the pairs
-    the Spark score_pairs filter keeps, on arbitrary whitespace-laden
-    norms and on near-duplicates. Each example's pairs are one local
-    DataFrame, so both sides run without a Spark job."""
+    """linking.accepts in process and score_pairs (the same kernel in
+    Spark tasks) keep exactly the pairs the DuckDB oracle's accept rule
+    keeps, on Spark-computed tokens, arbitrary whitespace-laden norms
+    and near-duplicates. Each example's pairs are one local DataFrame."""
     import numpy as np
     import pyarrow as pa
 
-    from ontonotes_5_parsing_spark.pipeline.linking import accepts, score_pairs, tokens
+    from linking_oracle import ACCEPTED, connect
+    from ontonotes_5_parsing_spark.pipeline.linking import (
+        MAX_LEV_RATIO,
+        accepts,
+        score_pairs,
+        tokens,
+    )
 
     table = pa.table({
         "src": list(range(len(pairs))),
@@ -215,10 +221,14 @@ def test_inprocess_accept_rule_matches_score_pairs(spark, pairs):
         table, "src long, dst long, norm_a string, norm_b string"
     )
     kept = {r.src for r in score_pairs(df).collect()}
-    split = df.select(tokens("norm_a").alias("ta"), tokens("norm_b").alias("tb")).collect()
+    split = df.select("src", "norm_a", "norm_b", tokens("norm_a").alias("toks_a"),
+                      tokens("norm_b").alias("toks_b")).toArrow()
     # norm_a's rows first, then norm_b's: pair i is rows (i, n + i)
     n = len(pairs)
-    norm = pa.array([a for a, _ in pairs] + [b for _, b in pairs])
-    toks = pa.array([r.ta for r in split] + [r.tb for r in split], pa.list_(pa.string()))
-    ok = accepts(norm, toks, np.arange(n), np.arange(n) + n)
-    assert set(np.flatnonzero(ok).tolist()) == kept
+    norm = pa.concat_arrays([split["norm_a"].combine_chunks(), split["norm_b"].combine_chunks()])
+    toks = pa.concat_arrays([split["toks_a"].combine_chunks(), split["toks_b"].combine_chunks()])
+    ok = accepts(norm, toks, np.arange(n), np.arange(n) + n, MAX_LEV_RATIO)
+    con = connect()
+    con.register("split", split)
+    oracle = {r for (r,) in con.execute(f"SELECT src FROM split WHERE {ACCEPTED}").fetchall()}
+    assert set(np.flatnonzero(ok).tolist()) == kept == oracle

@@ -43,17 +43,43 @@ def test_stream_pages_to_triples(spark, pages_dir, tmp_path):
     assert stream_set == batch_set and len(stream_set) > 0
 
 
-def test_windowed_mention_counts(spark, pages_dir, tmp_path):
-    ckpt = str(tmp_path / "ckpt2")
-    q = windowed_mention_counts(spark, pages_dir, ckpt)
+def test_windowed_mention_counts(spark, tmp_path):
+    """Windows close and each one emitted holds the batch pipeline's
+    mention count for its window and entity type. The 60 pages are one
+    per minute, ten to a file, and the files' modification times follow
+    the pages' order, so the stream reads them in event-time order (the
+    first micro-batch takes four files) and no page arrives late. A
+    10-minute window under a 5-minute watermark then closes the windows
+    of the first batch's pages."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    from ontonotes_5_parsing_spark.pipeline.stages import extract_parse_stage
+
+    pages_dir = tmp_path / "pages"
+    pages = corpus.web_pages_df(spark, 60, partitions=6)
+    pages.write.parquet(str(pages_dir))
+    parts = sorted(pages_dir.glob("part-*.parquet"))
+    assert len(parts) == 6
+    for i, part in enumerate(parts):
+        os.utime(part, (1_700_000_000 + i, 1_700_000_000 + i))
+    q = windowed_mention_counts(spark, str(pages_dir), str(tmp_path / "ckpt2"),
+                                window="10 minutes", watermark="5 minutes")
     q.awaitTermination(120)
     rows = spark.sql("SELECT * FROM mention_counts").collect()
-    # watermark closes windows only when later events arrive; with
-    # availableNow the final windows may be withheld — accept the
-    # closed-window subset but verify schema and sane values
+    expected = {
+        (r.window_start, r.ent_type): r.n_mentions
+        for r in extract_parse_stage(pages)
+        .select("warc_ts", F.explode("mention_spans.ent_type").alias("ent_type"))
+        .groupBy(F.window("warc_ts", "10 minutes").start.alias("window_start"), "ent_type")
+        .agg(F.count(F.lit(1)).alias("n_mentions"))
+        .collect()
+    }
+    assert rows
+    assert len(rows) == len({(r.window_start, r.ent_type) for r in rows})
     for r in rows:
-        assert r.n_mentions > 0
-        assert r.ent_type
+        assert r.n_mentions == expected[(r.window_start, r.ent_type)], r
 
 
 def test_foreach_batch_resume(spark, pages_dir, tmp_path):
